@@ -355,9 +355,11 @@ object Dedup {
     * (a doc_id duplicated within the batch, or already indexed, would
     * double its shingle rows in every verification join — silently
     * inflated intersection counts, the dedup analogue of the ANN
-    * doubled-ADC corruption). */
-  private def stageBatch(index: DedupIndex, batch: DataFrame, id: Column,
-      text: Column): (DataFrame, DataFrame) = {
+    * doubled-ADC corruption). Returns `(bStaged, bBands)`; the ingest
+    * stream stages each micro-batch once and hands the pair to both
+    * [[incrementalPairsOfStaged]] and the `…Staged` appends. */
+  private[graft] def stageBatch(index: DedupIndex, batch: DataFrame,
+      id: Column, text: Column): (DataFrame, DataFrame) = {
     graft.plans.GraftFunctions.register(batch.sparkSession)
     val bStaged = stageDocs(batch, id, text, index.shingleK).persistTracked()
     val dups = bStaged.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -395,8 +397,15 @@ object Dedup {
     * for candidate ids only, with the size-ratio prefilter dropping
     * most false candidates at size-lookup cost. */
   def incrementalMinHashPairs(index: DedupIndex, batch: DataFrame,
-      id: Column, text: Column, threshold: Double = 0.5): DataFrame = {
-    val (bStaged, bBands) = stageBatch(index, batch, id, text)
+      id: Column, text: Column, threshold: Double = 0.5): DataFrame =
+    incrementalPairsOfStaged(index, stageBatch(index, batch, id, text),
+      threshold)
+
+  /** [[incrementalMinHashPairs]] over a batch already [[stageBatch]]'d
+    * against `index`. */
+  private[graft] def incrementalPairsOfStaged(index: DedupIndex,
+      batch: (DataFrame, DataFrame), threshold: Double): DataFrame = {
+    val (bStaged, bBands) = batch
     // ONE bucket join of (corpus ∪ batch) against the batch side covers
     // every pair with ≥1 batch member: an old-new pair surfaces once, a
     // new-new pair twice (collapsed by distinct) — least/greatest restores
@@ -486,21 +495,28 @@ object Dedup {
     * stay valid (shared lineage) and can be released by the caller once
     * the grown index serves. */
   def dedupIndexAppend(index: DedupIndex, batch: DataFrame, id: Column,
-      text: Column): DedupIndex = graft.GraftCaches.inArtifactScope {
-    val (bStaged, bBands) = stageBatch(index, batch, id, text)
-    val staged = graft.GraftCaches.persistedArtifact(
-      index.staged.unionByName(bStaged))
-    val bands = graft.GraftCaches.persistedArtifact(
-      index.bands.unionByName(bBands))
-    // rows roll forward from the standing counter + one batch-sized count
-    // over the already-cached staging (fresh ids — the clash require in
-    // stageBatch); the old full-union counts forced two standing-sized
-    // cache fills per append (guide §1.2) — the unioned caches now fill
-    // on the first serve scan that reads them anyway
-    val n = index.rows.map(_ + bStaged.count()).getOrElse(staged.count())
-    DedupIndex(staged, bands, index.numHashes, index.nBands, index.shingleK,
-      rows = Some(n))
-  }
+      text: Column): DedupIndex =
+    dedupIndexAppendStaged(index, stageBatch(index, batch, id, text))
+
+  /** [[dedupIndexAppend]] of a batch already [[stageBatch]]'d against
+    * `index`. */
+  private[graft] def dedupIndexAppendStaged(index: DedupIndex,
+      batch: (DataFrame, DataFrame)): DedupIndex =
+    graft.GraftCaches.inArtifactScope {
+      val (bStaged, bBands) = batch
+      val staged = graft.GraftCaches.persistedArtifact(
+        index.staged.unionByName(bStaged))
+      val bands = graft.GraftCaches.persistedArtifact(
+        index.bands.unionByName(bBands))
+      // rows roll forward from the standing counter + one batch-sized count
+      // over the already-cached staging (fresh ids — the clash require in
+      // stageBatch); the old full-union counts forced two standing-sized
+      // cache fills per append (guide §1.2) — the unioned caches now fill
+      // on the first serve scan that reads them anyway
+      val n = index.rows.map(_ + bStaged.count()).getOrElse(staged.count())
+      DedupIndex(staged, bands, index.numHashes, index.nBands, index.shingleK,
+        rows = Some(n))
+    }
 
   /** DELTA APPEND — [[dedupIndexAppend]] without the corpus-sized cache
     * copy. The copy form persists + counts the FULL unioned member frames
@@ -534,26 +550,33 @@ object Dedup {
     * recomputes from source, where the previous localCheckpoint form
     * failed unrecoverably mid-stream. */
   def dedupIndexAppendDelta(index: DedupIndex, batch: DataFrame, id: Column,
-      text: Column): DedupIndex = graft.GraftCaches.inArtifactScope {
-    val (bStaged, bBands) = stageBatch(index, batch, id, text)
-    // the batch frames re-persist as ARTIFACT-tier entries under fresh
-    // plans: stageBatch's working-tier persists die at the caller's
-    // end-of-batch unpersistAll, and a same-plan re-persist would be a
-    // CacheManager no-op released with them — persistedArtifactFresh
-    // gives each delta its own lineage-bearing entry
-    val dStaged = graft.GraftCaches.persistedArtifactFresh(bStaged)
-    val dBands = graft.GraftCaches.persistedArtifactFresh(bBands)
-    dBands.count()
-    val bn = dStaged.count() // materialize the deltas; batch-sized
-    val base =
-      if (index.chain.nonEmpty) index.chain
-      else graft.GraftCaches.GenChain(Seq(index.staged, index.bands))
-    DedupIndex(index.staged.unionByName(dStaged),
-      index.bands.unionByName(dBands),
-      index.numHashes, index.nBands, index.shingleK,
-      rows = index.rows.map(_ + bn),
-      chain = base ++ Seq(dStaged, dBands))
-  }
+      text: Column): DedupIndex =
+    dedupIndexAppendDeltaStaged(index, stageBatch(index, batch, id, text))
+
+  /** [[dedupIndexAppendDelta]] of a batch already [[stageBatch]]'d
+    * against `index`. */
+  private[graft] def dedupIndexAppendDeltaStaged(index: DedupIndex,
+      batch: (DataFrame, DataFrame)): DedupIndex =
+    graft.GraftCaches.inArtifactScope {
+      val (bStaged, bBands) = batch
+      // the batch frames re-persist as ARTIFACT-tier entries under fresh
+      // plans: stageBatch's working-tier persists die at the caller's
+      // end-of-batch unpersistAll, and a same-plan re-persist would be a
+      // CacheManager no-op released with them — persistedArtifactFresh
+      // gives each delta its own lineage-bearing entry
+      val dStaged = graft.GraftCaches.persistedArtifactFresh(bStaged)
+      val dBands = graft.GraftCaches.persistedArtifactFresh(bBands)
+      dBands.count()
+      val bn = dStaged.count() // materialize the deltas; batch-sized
+      val base =
+        if (index.chain.nonEmpty) index.chain
+        else graft.GraftCaches.GenChain(Seq(index.staged, index.bands))
+      DedupIndex(index.staged.unionByName(dStaged),
+        index.bands.unionByName(dBands),
+        index.numHashes, index.nBands, index.shingleK,
+        rows = index.rows.map(_ + bn),
+        chain = base ++ Seq(dStaged, dBands))
+    }
 
   /** RETENTION DELETE — shrink the standing catalog without a rebuild
     * (the dedup mirror of [[Similarity.ivfPqIndexRemove]], completing
@@ -632,7 +655,9 @@ object Dedup {
     * `maxPartitions` (default `widthFactor`× session shuffle
     * parallelism) — unions concatenate partitions, so k appended
     * batches cost k× the tasks per probe regardless of data size;
-    * planner-side read, no job. EMPTINESS arm (opt-in via
+    * planner-side read, job-free only while the member caches are
+    * filled (under AQE an emptied cache is re-filled by the read — see
+    * [[Similarity.compactIvfPqIndexIfFragmented]]). EMPTINESS arm (opt-in via
     * `minRowsPerPartition` > 0): removes shrink rows at constant width,
     * so a tombstone-churned catalog scans mostly-empty partitions;
     * fires when band rows < width · minRowsPerPartition — one `count()`
@@ -750,10 +775,6 @@ object Dedup {
       rows = Some(n))
   }
 
-  /** Release one dedup-index generation's caches (idempotent; the
-    * analogue of [[Similarity.releaseIndexData]] — after an append, drop
-    * the superseded generation so long-lived sessions don't pin one
-    * corpus copy per generation). */
   /** Materialize one generation's member caches (the dedup analogue of
     * [[Similarity.materializeIndexData]] — see the copy-mode roll
     * contract there): copy-form appends leave the unioned staged/bands
@@ -765,6 +786,10 @@ object Dedup {
     ()
   }
 
+  /** Release one dedup-index generation's caches (idempotent; the
+    * analogue of [[Similarity.releaseIndexData]] — after an append, drop
+    * the superseded generation so long-lived sessions don't pin one
+    * corpus copy per generation). */
   def releaseDedupIndex(index: DedupIndex, blocking: Boolean = false): Unit = {
     index.staged.unpersist(blocking)
     index.bands.unpersist(blocking)

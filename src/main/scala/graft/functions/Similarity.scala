@@ -1253,8 +1253,10 @@ object Similarity {
       require(batchDups == 0L,
         s"ivfPqIndexAppendDelta: $batchDups vec_id(s) appear more than once " +
           "in the append batch — dedup the batch first")
+      // id-clash probe against the vector-free inverted lists (same id
+      // set as the corpus — see ivfPqIndexAppend)
       val clashes = ncRaw.select(col("c_id"))
-        .join(index.corpus.select(col("c_id")), Seq("c_id")).count()
+        .join(index.assigned.select(col("c_id")), Seq("c_id")).count()
       require(clashes == 0L,
         s"ivfPqIndexAppendDelta: $clashes appended vec_id(s) already exist " +
           "in the index — appends must carry fresh ids")
@@ -1434,7 +1436,10 @@ object Similarity {
     *    parallelism — the width a fresh shuffle-built index would have).
     *    Unions concatenate partitions, so k appends schedule k× the
     *    tasks per serving scan regardless of data size. Planner-side
-    *    read (`rdd.getNumPartitions`), no job.
+    *    read (`rdd.getNumPartitions`), job-free only while the member
+    *    caches are filled: under AQE it plans table-cache stages, and an
+    *    emptied cache (e.g. one a file write's `recacheByPath` dropped)
+    *    is re-filled by this read — a corpus-sized recompute.
     *  - EMPTINESS (remove churn, opt-in via `minRowsPerPartition` > 0):
     *    anti-joins shrink rows but keep partition COUNT, so a
     *    heavily-tombstoned index pays full scheduling width over

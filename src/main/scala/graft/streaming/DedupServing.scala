@@ -76,17 +76,20 @@ object DedupServing {
           // by doc_id against the cached catalog ids — never a corpus scan
           else batch.dropDuplicates("doc_id")
             .join(index.staged.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        Dedup.incrementalMinHashPairs(index, fresh,
-            col("doc_id"), col("text"), threshold)
+        // staged once: the pair pass and the append share the batch's
+        // shingles, bands and id-hygiene checks
+        val staged = Dedup.stageBatch(index, fresh, col("doc_id"), col("text"))
+        Dedup.incrementalPairsOfStaged(index, staged, threshold)
           .write.mode("append").parquet(outDir)
-        // roll the generation: later batches must dedup against this one.
-        // (The append re-stages the batch — one extra pass over the SMALL
-        // batch buys reusing the exactness-audited entry points as-is.)
-        val grown = Dedup.dedupIndexAppend(index, fresh, col("doc_id"), col("text"))
+        // roll the generation: later batches must dedup against this one
+        val grown = Dedup.dedupIndexAppendStaged(index, staged)
         indexRef.set(grown)
-        // superseded generation's caches drop (grown is materialized, so
-        // shared-lineage parents are safe to unpin); batch staging was
-        // working-tier and is released with it
+        // MATERIALIZE-BEFORE-RELEASE: the append leaves grown's unioned
+        // caches lazy — fill them from the still-cached parents, or the
+        // next batch re-shingles the standing corpus from source
+        Dedup.materializeDedupIndex(grown)
+        // then the superseded generation's caches drop; batch staging
+        // was working-tier and is released with it
         Dedup.releaseDedupIndex(index)
         graft.GraftCaches.unpersistAll()
         ()

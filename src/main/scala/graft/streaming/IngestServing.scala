@@ -82,6 +82,21 @@ object IngestServing {
     StructField("text", StringType),
     StructField("embedding", ArrayType(FloatType))))
 
+  /** Root of a delta-mode ingest stream's own state (survivor epochs
+    * `_survivors/b<id>`, durable generation roots `_gen/<family>/b<id>`):
+    * `<parent>/_ingest_state_<name>` beside the qualified `pairsOutDir`,
+    * outside its string prefix (`<pairsOutDir>_state` would share it) —
+    * see [[startIngestStream]] for why. */
+  def stateRoot(spark: SparkSession, pairsOutDir: String): String = {
+    val p = new org.apache.hadoop.fs.Path(pairsOutDir)
+    val q = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p)
+    require(q.getParent != null,
+      s"pairsOutDir must not be a filesystem root: $pairsOutDir")
+    new org.apache.hadoop.fs.Path(q.getParent, s"_ingest_state_${q.getName}")
+      .toString
+  }
+
   /** Delete epoch-keyed sub-directories `b<id>` of `dir` with id strictly
     * below `cutBatchId` — the storage-reclaim half of a COMPACTION-fired
     * standalone cut (the r13 ADVICE finding: survivor epochs accumulated
@@ -151,14 +166,20 @@ object IngestServing {
     * executor storage stays bounded by one generation plus the deltas
     * since the last cut instead of growing one corpus per policy fire.
     * Two further delta-mode differences: survivor embeddings cut lineage
-    * through an epoch-keyed parquet write under
-    * `<pairsOutDir>/_survivors` (a REAL lineage root — the ANN deltas'
-    * recompute path stays valid for the life of the stream, where a
-    * localCheckpoint would be unrecoverable; batch-sized, idempotent
-    * under foreachBatch retries), and each roll drops the superseded
-    * generation's serving-pivot memo entry. Serving results are
-    * identical either way (StreamingSpec pins it, including across a
-    * checkpoint restart and a mid-stream policy cut). */
+    * through an epoch-keyed parquet write under `<state>/_survivors`
+    * (a REAL lineage root — the ANN deltas' recompute path stays valid
+    * for the life of the stream, where a localCheckpoint would be
+    * unrecoverable; batch-sized, idempotent under foreachBatch retries),
+    * and each roll drops the superseded generation's serving-pivot memo
+    * entry. `<state>` is [[stateRoot]] of `pairsOutDir`, a sibling
+    * directory outside its string prefix: every pairs append triggers
+    * Spark's `recacheByPath(pairsOutDir)`, which drops and lazily
+    * re-plans every cache whose file roots start with that string — with
+    * the epochs and the durable generation roots under `pairsOutDir`,
+    * each batch emptied the caches of every ANN delta (and, after a cut,
+    * of the base members) and the next batch re-filled them. Serving
+    * results are identical either way (StreamingSpec pins it, including
+    * across a checkpoint restart and a mid-stream policy cut). */
   def startIngestStream(spark: SparkSession, batchDir: String,
       dedupRef: AtomicReference[Dedup.DedupIndex],
       annOpRef: AtomicReference[(Similarity.IvfPqIndex, Int)],
@@ -181,6 +202,7 @@ object IngestServing {
     // aux refs this stream rolls must always ride the same dedupRef
     ServingLocks.register(dedupRef,
       (annOpRef +: (embRef.toSeq ++ phashRef.toSeq)): _*)
+    val state = stateRoot(spark, pairsOutDir)
     val writer = spark.readStream
       .schema(ingestSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -202,10 +224,14 @@ object IngestServing {
       .foreachBatch { (batch: DataFrame, batchId: Long) => dedupRef.synchronized {
         val dedupIx = dedupRef.get()
         val docs = batch.select(col("doc_id"), col("text"))
+        // staged ONCE against the standing catalog: the pair pass and the
+        // catalog append below share the batch's shingles, bands and
+        // id-hygiene checks (each public entry point would re-stage)
+        val staged = Dedup.stageBatch(dedupIx, docs, col("doc_id"), col("text"))
         // pairs feed two consumers (the sink and the drop policy):
         // persist once so the bucket joins run once per batch
-        val pairs = Dedup.incrementalMinHashPairs(dedupIx, docs,
-          col("doc_id"), col("text"), threshold).persistTracked()
+        val pairs = Dedup.incrementalPairsOfStaged(dedupIx, staged, threshold)
+          .persistTracked()
         pairs.write.mode("append").parquet(pairsOutDir)
         // LINEAGE CUT at the dedup→ANN boundary (the ingest_pipeline_policy
         // lesson): survivors otherwise embed the whole quarantine/bucket
@@ -213,14 +239,15 @@ object IngestServing {
         // Copy mode cuts with a working-tier localCheckpoint (the copy
         // persist is self-contained before the cut dies); delta mode cuts
         // with an epoch-keyed parquet write — the ANN delta members keep
-        // a DURABLE lineage root (underscore prefix: hidden from readers
-        // of pairsOutDir; overwrite: idempotent under retries)
+        // a DURABLE lineage root (under the state root, outside the
+        // pairs write's recacheByPath prefix; overwrite: idempotent under
+        // retries)
         val survivorsPlan = batch
           .join(keepFirstDropped(pairs, docs), Seq("doc_id"), "left_anti")
           .select(col("doc_id").as("vec_id"), col("embedding"))
         val survivors =
           if (deltaAppends) {
-            val epochPath = s"$pairsOutDir/_survivors/b$batchId"
+            val epochPath = s"$state/_survivors/b$batchId"
             survivorsPlan.write.mode("overwrite").parquet(epochPath)
             batch.sparkSession.read.parquet(epochPath)
           } else survivorsPlan.localCheckpointTracked()
@@ -230,9 +257,8 @@ object IngestServing {
         // catalog's staged frame, so only the band projection recomputes;
         // release the superseded band frame alone, the staged is shared)
         val grownDedup =
-          if (deltaAppends)
-            Dedup.dedupIndexAppendDelta(dedupIx, docs, col("doc_id"), col("text"))
-          else Dedup.dedupIndexAppend(dedupIx, docs, col("doc_id"), col("text"))
+          if (deltaAppends) Dedup.dedupIndexAppendDeltaStaged(dedupIx, staged)
+          else Dedup.dedupIndexAppendStaged(dedupIx, staged)
         val (rebandedDedup, rebanded) =
           Dedup.rebuildCatalogIfStale(grownDedup, threshold)
         // COMPACTION POLICY when no reband fired: every append
@@ -244,7 +270,7 @@ object IngestServing {
         // (GraftCaches.durableCut — recoverable after the chain releases,
         // and the precondition for pruning superseded epochs below)
         def genRoot(family: String): Option[String] =
-          if (deltaAppends) Some(s"$pairsOutDir/_gen/$family/b$batchId")
+          if (deltaAppends) Some(s"$state/_gen/$family/b$batchId")
           else None
         val servedDedup =
           if (rebanded) rebandedDedup
@@ -274,7 +300,7 @@ object IngestServing {
           // compaction cuts are parquet-rooted → older gen roots are
           // unreferenced (reband cuts keep lineage: no prune)
           if (!rebanded) pruneEpochs(batch.sparkSession,
-            s"$pairsOutDir/_gen/dedup", batchId)
+            s"$state/_gen/dedup", batchId)
         }
         // roll the ANN generation on the SURVIVORS (accepted-corpus
         // semantics), then let the rebuild policy pick the geometry; when
@@ -314,9 +340,9 @@ object IngestServing {
             // it leaves the epochs to the next compaction cut.
             if (!rebuilt) {
               pruneEpochs(batch.sparkSession,
-                s"$pairsOutDir/_survivors", batchId)
+                s"$state/_survivors", batchId)
               pruneEpochs(batch.sparkSession,
-                s"$pairsOutDir/_gen/ann", batchId)
+                s"$state/_gen/ann", batchId)
             }
           }
         }
@@ -350,7 +376,7 @@ object IngestServing {
           } else if (servedEmb.chain.isEmpty && grownEmb.chain.nonEmpty) {
             grownEmb.chain.release()
             if (!rebucketed) pruneEpochs(batch.sparkSession,
-              s"$pairsOutDir/_gen/emb", batchId)
+              s"$state/_gen/emb", batchId)
           }
         }
         // roll the PHASH catalog on the whole batch's media payloads
@@ -377,7 +403,7 @@ object IngestServing {
             grownPh.chain.release()
             // phash cuts are always compaction-fired (no geometry policy)
             pruneEpochs(batch.sparkSession,
-              s"$pairsOutDir/_gen/phash", batchId)
+              s"$state/_gen/phash", batchId)
           }
         }
         graft.GraftCaches.unpersistAll()

@@ -1360,8 +1360,12 @@ class StreamingSpec extends AnyFunSuite {
       annOpRef, threshold = 0.5, pairsDir, m = 4, ksub = 8,
       geometryFactor = 100.0,
       compactMaxPartitions = Some(annWidth0 + 1), deltaAppends = true)
+    // the stream's own state lives under IngestServing.stateRoot, outside
+    // the pairs sink's recacheByPath prefix
+    def stateDir(sub: String): java.io.File = new java.io.File(
+      new java.net.URI(s"${IngestServing.stateRoot(spark, pairsDir)}/$sub"))
     def epochs(): Set[String] = {
-      val d = new java.io.File(s"$pairsDir/_survivors")
+      val d = stateDir("_survivors")
       Option(d.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
     }
     try {
@@ -1382,7 +1386,7 @@ class StreamingSpec extends AnyFunSuite {
         s"no epoch reclaim observed across the drain: $counts")
       assert(counts.last < nBatches,
         s"drain ended with every epoch still on disk: $counts")
-      assert(new java.io.File(s"$pairsDir/_gen/ann").isDirectory,
+      assert(stateDir("_gen/ann").isDirectory,
         "the compaction cut must have materialized a durable parquet root")
       // the serving contract survives the cut: union of per-batch pair
       // files equals the full-corpus run restricted to streamed docs
@@ -1396,6 +1400,93 @@ class StreamingSpec extends AnyFunSuite {
         "post-prune pair output != restricted full run")
     } finally {
       q.stop()
+      GraftCaches.unpersistAll()
+      GraftCaches.releaseArtifacts()
+    }
+  }
+
+  test("delta-mode ingest keeps every standing cache filled across batches; the no-fire compaction read runs no job") {
+    // each pairs append runs Spark's CacheManager.recacheByPath(pairsDir),
+    // which empties every cache whose file roots start with that string.
+    // The stream's survivor epochs (the ANN deltas' lineage roots) and
+    // generation roots live under IngestServing.stateRoot, outside that
+    // prefix: after several batches and one more append to the pairs
+    // sink (the first write of the next micro-batch), every cached leaf
+    // of the served members must still hold its buffers, and the
+    // compaction policy's width read (which under AQE can re-fill an
+    // emptied table cache) must run no Spark job at all
+    import java.nio.file.Files
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.functions.{Dedup, Similarity}
+    import graft.streaming.IngestServing
+    val dir = "/root/testdata/sf0.001"
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val emb = Tables.embeddings(spark, dir)
+    val ingest = docs.join(emb.withColumnRenamed("vec_id", "doc_id")
+      .select(col("doc_id"), col("embedding")), Seq("doc_id"))
+    val corpus = ingest.filter(col("doc_id") % 5 =!= 0)
+    val dedup0 = Dedup.buildDedupIndex(corpus.select(col("doc_id"), col("text")),
+      col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
+    val ann0 = Similarity.buildIvfPqIndex(
+      corpus.select(col("doc_id").as("vec_id"), col("embedding")),
+      nCentroids = 4, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
+    val batchDir = Files.createTempDirectory("cache_keep_in").toString
+    val pairsDir = Files.createTempDirectory("cache_keep_out").toString + "/pairs"
+    val dedupRef = new java.util.concurrent.atomic.AtomicReference(dedup0)
+    val annOpRef = new java.util.concurrent.atomic.AtomicReference((ann0, 2))
+    // geometryFactor 100 keeps the rebuild policy silent, so the served
+    // ANN members stay chained unions (base ∪ one delta per batch)
+    val q = IngestServing.startIngestStream(spark, batchDir, dedupRef,
+      annOpRef, threshold = 0.5, pairsDir, m = 4, ksub = 8,
+      geometryFactor = 100.0, deltaAppends = true)
+    val nBatches = 4
+    try {
+      try {
+        (0 until nBatches).foreach { j =>
+          ingest.filter(col("doc_id") % 5 === 0 &&
+              (col("doc_id") / 5) % nBatches === j)
+            .coalesce(1).write.mode("append").parquet(batchDir)
+          q.processAllAvailable()
+          assert(q.exception.isEmpty, s"delta drain died at batch $j: ${q.exception}")
+        }
+      } finally q.stop()
+      spark.read.parquet(pairsDir).limit(0)
+        .write.mode("append").parquet(pairsDir)
+      val (ann, _) = annOpRef.get()
+      val dedup = dedupRef.get()
+      def leaves(df: DataFrame): Seq[InMemoryRelation] =
+        df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      Seq("ann corpus" -> ann.corpus, "ann assigned" -> ann.assigned,
+          "ann codes" -> ann.codes, "dedup staged" -> dedup.staged,
+          "dedup bands" -> dedup.bands).foreach { case (name, df) =>
+        val ls = leaves(df)
+        assert(ls.size == nBatches + 1,
+          s"$name: expected base + one delta per batch, got ${ls.size} cached leaves")
+        val emptied = ls.count(!_.cacheBuilder.isCachedColumnBuffersLoaded)
+        assert(emptied == 0,
+          s"$name: $emptied of ${ls.size} cached leaves were emptied by a pairs-sink write")
+      }
+      val jobs = new AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      val sc = spark.sparkContext
+      TestListenerBus.drain(sc)
+      sc.addSparkListener(listener)
+      try {
+        val (_, fired) = Similarity.compactIvfPqIndexIfFragmented(ann)
+        TestListenerBus.drain(sc)
+        assert(!fired, "the default width bound must not fire after four batches")
+        assert(jobs.get == 0,
+          s"the no-fire compaction read ran ${jobs.get} job(s) on the served index")
+      } finally sc.removeSparkListener(listener)
+    } finally {
       GraftCaches.unpersistAll()
       GraftCaches.releaseArtifacts()
     }
