@@ -76,10 +76,12 @@ object Dedup {
       .select(col("doc_id"), col("fp"))
 
   // ------------------------------------------------------------ shingles
-  /** Word k-shingles from a pre-split token array (distinct). Take tokens,
-    * not raw text: the shingle expression references its input ~6 times,
-    * and an attribute reference is free while a repeated
-    * normalize+split(regex×2) re-scans the document each time. */
+  /** Word k-shingles from a pre-split token array, DISTINCT by
+    * construction (the array-based Jaccard of [[incrementalMinHashPairs]]
+    * relies on it; DedupTextSpec pins it). Take tokens, not raw text: the
+    * shingle expression references its input ~6 times, and an attribute
+    * reference is free while a repeated normalize+split(regex×2) re-scans
+    * the document each time. */
   def shinglesFromTokens(toks: Column, k: Int = 3): Column = {
     val n = size(toks)
     when(n < k, when(n > 0, array(array_join(toks, " "))).otherwise(array()))
@@ -185,6 +187,9 @@ object Dedup {
     * J≈0.25) send most false candidates through here; the prefilter drops
     * them at size-lookup cost. Pairs that pass but share nothing still get
     * `inter=0` via the left join.
+    *
+    * The incremental path ([[incrementalMinHashPairs]]) no longer uses
+    * this: it scores its batch-sized candidate set on the shingle arrays.
     */
   def verifyJaccard(candidates: DataFrame, shingleRows: DataFrame,
       minJaccard: Double = 0.0): DataFrame = {
@@ -393,9 +398,10 @@ object Dedup {
     * fixture). Shape at scale: batch bands join the standing bucket
     * table keyed on (band_idx, band_hash) — AQE sizes the strategy (a
     * small daily batch broadcasts; a huge backfill sort-merges); pairs
-    * exist only inside shared buckets; verification explodes shingles
-    * for candidate ids only, with the size-ratio prefilter dropping
-    * most false candidates at size-lookup cost. */
+    * exist only inside shared buckets; verification reads the standing
+    * shingle arrays once, keyed by the broadcast candidate ids, and
+    * scores each pair from its two arrays (`size`, `array_intersect`) —
+    * no shingle explode, no shuffle of the catalog. */
   def incrementalMinHashPairs(index: DedupIndex, batch: DataFrame,
       id: Column, text: Column, threshold: Double = 0.5): DataFrame =
     incrementalPairsOfStaged(index, stageBatch(index, batch, id, text),
@@ -420,9 +426,33 @@ object Dedup {
       .select(least(col("__a"), col("__b")).as("id1"),
         greatest(col("__a"), col("__b")).as("id2"))
       .distinct()
-    val allShingles = index.staged.unionByName(bStaged)
-      .select(col("doc_id"), explode(col("__sh")).as("shingle"))
-    verifyJaccard(cand, allShingles, minJaccard = threshold)
+    // Verify on the shingle ARRAYS: each candidate pair's two ids join
+    // (standing ∪ batch) ONCE, keyed by candidate id — no explode and no
+    // corpus-sized size aggregation. Exact because shinglesFromTokens
+    // arrays are DISTINCT by construction, so size() and
+    // size(array_intersect) equal the exploded row counts verifyJaccard
+    // takes (and Jaccard is symmetric, so the pair's two arrays need no
+    // order). Empty arrays are dropped as verifyJaccard's inner size
+    // joins drop them. Keep the union referenced once: a semi-join of it
+    // to the ids is pushed below the Union and rebuilds the id broadcast
+    // per leaf. The id side is candidate-sized (every pair holds a batch
+    // doc), so it broadcasts and the catalog is never shuffled.
+    val sides = cand.select(col("id1"), col("id2"),
+      explode(array(col("id1"), col("id2"))).as("doc_id"))
+    val shingled = index.staged.unionByName(bStaged)
+      .filter(size(col("__sh")) > 0)
+    val p = col("__p")
+    broadcast(sides).join(shingled, Seq("doc_id"))
+      .groupBy(col("id1"), col("id2")).agg(collect_list(col("__sh")).as("__p"))
+      .filter(size(p) === 2)
+      .select(col("id1"), col("id2"), size(p(0)).as("sz1"), size(p(1)).as("sz2"),
+        size(array_intersect(p(0), p(1))).as("inter"))
+      // verifyJaccard's size-ratio predicate, kept so the pair set stays
+      // bit-identical at the threshold boundary
+      .filter(least(col("sz1"), col("sz2"))
+        >= lit(threshold) * greatest(col("sz1"), col("sz2")))
+      .withColumn("jaccard",
+        col("inter") / (col("sz1") + col("sz2") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
   }

@@ -154,29 +154,26 @@ object GraftFunctions {
     AdcFold(children(0), children(1))
   }
 
+  private val builders = Seq(
+    "graft_window" -> builder, "graft_cosine" -> cosineBuilder,
+    "graft_l2sq" -> l2sqBuilder, "graft_char_counts" -> charCountsBuilder,
+    "graft_simhash" -> simhashBuilder, "graft_hyperplane" -> hyperplaneBuilder,
+    "graft_rolling_hash" -> rollingHashBuilder,
+    "graft_minhash_sig" -> minhashSigBuilder,
+    "graft_window_hashes" -> windowHashesBuilder,
+    "graft_window_hash_counts" -> windowHashCountsBuilder,
+    "graft_adc_fold" -> adcFoldBuilder)
+
+  /** Registers only what the session lacks, so a repeat call is a no-op:
+    * the hot paths call this per micro-batch, and re-registering a
+    * function replaces it (one registry WARN line each). Cloned sessions
+    * — streams run on clones — copy the registry and the extra rules. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq", l2sqBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_char_counts", charCountsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", simhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperplane", hyperplaneBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", rollingHashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_sig", minhashSigBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_hashes", windowHashesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_hash_counts", windowHashCountsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_adc_fold", adcFoldBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    builders.foreach { case (name, b) =>
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(b))
+        registry.createOrReplaceTempFunction(name, b, "built-in")
+    }
     if (!spark.experimental.extraOptimizations.contains(LowerGraftWindow))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ LowerGraftWindow

@@ -108,6 +108,38 @@ class CatalystSpec extends AnyFunSuite {
     assert(z == 0.0)
   }
 
+  test("GraftFunctions.register: a second call leaves the registry untouched; clones resolve the functions") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.TestSessions
+    val fresh = spark.newSession()
+    def info(s: org.apache.spark.sql.SparkSession, name: String) =
+      s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name))
+    assert(info(fresh, "graft_adc_fold").isEmpty,
+      "a new session starts without the runtime-only function")
+    graft.plans.GraftFunctions.register(fresh)
+    val names = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(names.size == 11, s"registered: $names")
+    // a re-registration stores a new ExpressionInfo per function
+    def untouchedByRegister(s: org.apache.spark.sql.SparkSession): Boolean = {
+      val before = names.map(n => info(s, n).get)
+      graft.plans.GraftFunctions.register(s)
+      names.map(n => info(s, n).get).zip(before).forall { case (a, b) => a eq b }
+    }
+    val (rules, strategies) = (fresh.experimental.extraOptimizations,
+      fresh.experimental.extraStrategies)
+    assert(untouchedByRegister(fresh), "a second register re-registered functions")
+    assert((fresh.experimental.extraOptimizations eq rules) &&
+      (fresh.experimental.extraStrategies eq strategies),
+      "a second register touched the extra rules")
+    // streams run their micro-batches on a clone of the session
+    val clone = TestSessions.cloneOf(fresh)
+    assert(untouchedByRegister(clone), "register re-registered functions in a clone")
+    val d = clone.sql(
+      "SELECT graft_l2sq(array(1.0D, 2.0D), array(1.0D, 0.0D)) AS d").head().getDouble(0)
+    assert(d == 4.0)
+  }
+
   test("graft_adc_fold (codegen) is bit-identical to the higher-order fold") {
     graft.plans.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)

@@ -27,6 +27,11 @@ class DedupTextSpec extends AnyFunSuite {
     val short = Seq((1L, "a b")).toDF("doc_id", "text")
       .select(Dedup.shingles(col("text"), 3).as("s")).as[Seq[String]].head()
     assert(short == Seq("a b"))
+    // distinct by construction — the incremental path's array Jaccard
+    // (size / array_intersect) is exact only on distinct arrays
+    val rep = Seq((1L, "a b c a b c a b c")).toDF("doc_id", "text")
+      .select(Dedup.shingles(col("text"), 3).as("s")).as[Seq[String]].head()
+    assert(rep.sorted == Seq("a b c", "b c a", "c a b"))
   }
 
   test("MinHash-LSH finds exact and near duplicates, skips unrelated docs") {
@@ -64,11 +69,18 @@ class DedupTextSpec extends AnyFunSuite {
 
   test("incremental dedup ≡ full-run pairs restricted to the batch; append + release lifecycle") {
     // docs 0..19: pairs of near-dups (2k, 2k+1 share most text), split
-    // 80/20 like the gate (id % 5 == 0 is the batch)
-    val docs = (0L until 20L).map { i =>
+    // 80/20 like the gate (id % 5 == 0 is the batch); plus three
+    // standing/batch edge pairs: empty texts (each shingles to [""]),
+    // fewer than 3 tokens (single-shingle arrays), and an exact duplicate
+    // of standing doc 3 in the batch
+    val nearDups = (0L until 20L).map { i =>
       val base = s"alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo${i / 2}"
       (i, if (i % 2 == 0) base else base + " lima")
-    }.toDF("doc_id", "text")
+    }
+    val docs = (nearDups ++ Seq(
+      (21L, ""), (25L, ""),
+      (22L, "Zulu, yankee!"), (30L, "zulu yankee"),
+      (35L, nearDups(3)._2))).toDF("doc_id", "text")
     val full = Dedup.minHashDedupPairs(docs, col("doc_id"), col("text"),
         numHashes = 32, bands = 16, threshold = 0.5, shingleK = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -76,6 +88,8 @@ class DedupTextSpec extends AnyFunSuite {
     val expected = full.filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
     assert(expected.nonEmpty && expected != full,
       "batch restriction must be a strict non-empty subset")
+    assert(Set((21L, 25L, 1.0), (22L, 30L, 1.0), (3L, 35L, 1.0))
+      .subsetOf(expected), "each edge pair must reach the restricted set")
     graft.GraftCaches.unpersistAll()
     val index = Dedup.buildDedupIndex(docs.filter(col("doc_id") % 5 =!= 0),
       col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
@@ -89,7 +103,7 @@ class DedupTextSpec extends AnyFunSuite {
     // incremental query with the first batch as part of the corpus
     val grown = Dedup.dedupIndexAppend(index,
       docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"))
-    assert(grown.staged.count() == 20 && grown.bands.count() == 20 * 16)
+    assert(grown.staged.count() == 25 && grown.bands.count() == 25 * 16)
     Dedup.releaseDedupIndex(index, blocking = true)
     assert(index.staged.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
       "released generation must drop its caches")

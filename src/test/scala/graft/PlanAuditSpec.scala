@@ -144,6 +144,38 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.GraftCaches.releaseArtifacts()
   }
 
+  test("minhash_incremental: verification reads the standing shingle cache once, explodes no shingles") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.functions.col
+    import graft.functions.Dedup
+    val plan = SparkEntry.queries("minhash_incremental")(spark, dir)
+      .queryExecution.executedPlan
+    // the gate's standing index, from the build-once memo
+    val docs = graft.sources.Tables.documents(spark, dir)
+    val index = Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
+      col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
+    val staged = index.staged.queryExecution.withCachedData
+      .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
+    val helper = new AdaptiveSparkPlanHelper {}
+    // walks the operators only (not the plans inside the cached
+    // relations, whose band explode ran when they were filled)
+    val shingleExplodes = helper.collect(plan) {
+      case g: GenerateExec
+          if g.generator.references.exists(_.name == "__sh") => g
+    }
+    assert(shingleExplodes.isEmpty,
+      s"verification explodes shingle arrays:\n$plan")
+    val stagedScans = helper.collect(plan) {
+      case s: InMemoryTableScanExec if s.relation.cacheBuilder eq staged => s
+    }
+    assert(stagedScans.size == 1,
+      s"the standing staged cache is scanned ${stagedScans.size} times:\n$plan")
+    graft.GraftCaches.unpersistAll()
+    graft.GraftCaches.releaseArtifacts()
+  }
+
   test("leakage_safe_split: leak count broadcasts; no sort-merge on the doc join") {
     val plan = planOf("leakage_safe_split")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
