@@ -165,7 +165,7 @@ object GraftCaches {
 
   /** DURABLE CUT — materialize a standalone generation through a parquet
     * root instead of a localCheckpoint: write `df` to `path`, read it
-    * back, artifact-persist and materialize. Delta-mode streaming uses it
+    * back, artifact-persist and materialize. The serving streams use it
     * for policy-fired compactions (the r13 ADVICE finding): a
     * localCheckpoint cut has TRUNCATED lineage, so after the superseded
     * chain releases, an executor-loss recompute of the serving generation

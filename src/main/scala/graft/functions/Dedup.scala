@@ -410,14 +410,24 @@ object Dedup {
   /** [[incrementalMinHashPairs]] over a batch already [[stageBatch]]'d
     * against `index`. */
   private[graft] def incrementalPairsOfStaged(index: DedupIndex,
-      batch: (DataFrame, DataFrame), threshold: Double): DataFrame = {
+      batch: (DataFrame, DataFrame), threshold: Double): DataFrame =
+    verifiedBatchPairs(index.bands, index.staged, batch, threshold)
+
+  /** Every pair at `threshold` with ≥1 batch member among `standingBands`
+    * ∪ the batch's bands, verified on the shingle arrays of
+    * `standingStaged` ∪ the batch's staging — the shared core of
+    * [[incrementalPairsOfStaged]] (the whole catalog) and
+    * [[incrementalMinHashPairsQuarantined]] (its cold buckets). */
+  private def verifiedBatchPairs(standingBands: DataFrame,
+      standingStaged: DataFrame, batch: (DataFrame, DataFrame),
+      threshold: Double): DataFrame = {
     val (bStaged, bBands) = batch
     // ONE bucket join of (corpus ∪ batch) against the batch side covers
     // every pair with ≥1 batch member: an old-new pair surfaces once, a
     // new-new pair twice (collapsed by distinct) — least/greatest restores
     // lshCandidates' (id1 < id2, distinct) contract exactly. One pass over
     // the cached catalog instead of the two a per-orientation union costs.
-    val allBands = index.bands.unionByName(bBands)
+    val allBands = standingBands.unionByName(bBands)
     val cand = allBands
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("__a"))
       .join(bBands.select(col("band_idx"), col("band_hash"), col("doc_id").as("__b")),
@@ -439,7 +449,7 @@ object Dedup {
     // doc), so it broadcasts and the catalog is never shuffled.
     val sides = cand.select(col("id1"), col("id2"),
       explode(array(col("id1"), col("id2"))).as("doc_id"))
-    val shingled = index.staged.unionByName(bStaged)
+    val shingled = standingStaged.unionByName(bStaged)
       .filter(size(col("__sh")) > 0)
     val p = col("__p")
     broadcast(sides).join(shingled, Seq("doc_id"))
@@ -478,35 +488,25 @@ object Dedup {
       id: Column, text: Column, threshold: Double,
       maxBucket: Long): DataFrame = {
     val (coldBands, hotDocs) = quarantineBuckets(index, maxBucket)
-    val (bStaged, bBands) = stageBatch(index, batch, id, text)
-    // bucket join against the COLD catalog + the batch's own buckets
-    // (same one-pass shape as the unquarantined form)
-    val allBands = coldBands.unionByName(bBands)
-    val cand = allBands
-      .select(col("band_idx"), col("band_hash"), col("doc_id").as("__a"))
-      .join(bBands.select(col("band_idx"), col("band_hash"), col("doc_id").as("__b")),
-        Seq("band_idx", "band_hash"))
-      .filter(col("__a") =!= col("__b"))
-      .select(least(col("__a"), col("__b")).as("id1"),
-        greatest(col("__a"), col("__b")).as("id2"))
-      .distinct()
-    val allShingles = index.staged.unionByName(bStaged)
-      .select(col("doc_id"), explode(col("__sh")).as("shingle"))
-      .persistTracked()
-    // eager: narrow cache with four concurrent consumers (verification's
-    // three scans + the hot-member filter) — see bandedHashPairs
-    allShingles.count()
-    val coldPairs = verifyJaccard(cand, allShingles, minJaccard = threshold)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
+    val staged = stageBatch(index, batch, id, text)
+    // bucket join against the COLD catalog + the batch's own buckets,
+    // verified on the shingle arrays (the unquarantined path's core)
+    val coldPairs = verifiedBatchPairs(coldBands, index.staged, staged,
+      threshold)
     // lossless fallback over (hot members ∪ batch), restricted afterward
     // to batch-touching pairs (the incremental contract) — hot∪batch is
     // small relative to the corpus, and the prefix principle bounds its
-    // join fan-out regardless of how boilerplate-heavy the members are
+    // join fan-out regardless of how boilerplate-heavy the members are.
+    // Only those members' shingles explode.
+    val bStaged = staged._1
     val batchIds = bStaged.select(col("doc_id")).persistTracked()
-    val hotSh = allShingles.join(
-      hotDocs.unionByName(batchIds).distinct(), Seq("doc_id"))
+    val hotSh = index.staged.unionByName(bStaged)
+      .join(hotDocs.unionByName(batchIds).distinct(), Seq("doc_id"))
+      .select(col("doc_id"), explode(col("__sh")).as("shingle"))
       .persistTracked()
+    // eager: the prefix join's three consumers race a lazy fill (see
+    // bandedHashPairs); members-sized
+    hotSh.count()
     val hotAll = prefixFilterJoinOnShingles(hotSh, threshold)
       .select(col("id1"), col("id2"),
         round(col("inter") / (col("sz1") + col("sz2") - col("inter"))
@@ -520,10 +520,30 @@ object Dedup {
   }
 
   /** Grow the standing index by a batch (the freshness path, FAISS-`add`-
-    * shaped like [[Similarity.ivfPqIndexAppend]]): batch staging/buckets
-    * union into new artifact frames; the superseded generation's frames
-    * stay valid (shared lineage) and can be released by the caller once
-    * the grown index serves. */
+    * shaped like [[Similarity.ivfPqIndexAppend]]) as a DELTA generation:
+    * only the BATCH's frames materialize (artifact-tier, batch-sized),
+    * and the new generation's members are LAZY UNIONS over the old
+    * generation's caches — serving scans read the standing cache plus
+    * one small delta cache per append, so per-batch cost never tracks
+    * corpus size (a re-persist of the full unioned members measured
+    * 27→39 s per batch over 16 ×30 batches, BENCH_INGEST_x30.json).
+    *
+    * LIFECYCLE: generations SHARE cached frames, so the caller must NOT
+    * release a superseded handle after the roll (unpersisting a shared
+    * parent degrades every successor to source re-reads). The shared
+    * frames ride the generation's `chain`: when a policy cuts standalone
+    * frames (compaction checkpoints fresh copies; a re-band on a chained
+    * index cuts BOTH frames fresh; a remove anti-joins into fresh
+    * copies), the successor's chain is empty and the superseded chain
+    * releases as one unit — [[graft.streaming.IngestServing]] performs
+    * that release, so a long-running stream's storage is bounded by ONE
+    * generation plus the deltas since the last cut. Union depth grows
+    * one per append until the compaction policy fires — the
+    * log-structured-merge trade.
+    *
+    * DURABILITY: the delta members persist with FULL LINEAGE
+    * ([[graft.GraftCaches.persistedArtifactFresh]]), rooted at the batch
+    * source: a lost executor block recomputes from source. */
   def dedupIndexAppend(index: DedupIndex, batch: DataFrame, id: Column,
       text: Column): DedupIndex =
     dedupIndexAppendStaged(index, stageBatch(index, batch, id, text))
@@ -531,61 +551,6 @@ object Dedup {
   /** [[dedupIndexAppend]] of a batch already [[stageBatch]]'d against
     * `index`. */
   private[graft] def dedupIndexAppendStaged(index: DedupIndex,
-      batch: (DataFrame, DataFrame)): DedupIndex =
-    graft.GraftCaches.inArtifactScope {
-      val (bStaged, bBands) = batch
-      val staged = graft.GraftCaches.persistedArtifact(
-        index.staged.unionByName(bStaged))
-      val bands = graft.GraftCaches.persistedArtifact(
-        index.bands.unionByName(bBands))
-      // rows roll forward from the standing counter + one batch-sized count
-      // over the already-cached staging (fresh ids — the clash require in
-      // stageBatch); the old full-union counts forced two standing-sized
-      // cache fills per append (guide §1.2) — the unioned caches now fill
-      // on the first serve scan that reads them anyway
-      val n = index.rows.map(_ + bStaged.count()).getOrElse(staged.count())
-      DedupIndex(staged, bands, index.numHashes, index.nBands, index.shingleK,
-        rows = Some(n))
-    }
-
-  /** DELTA APPEND — [[dedupIndexAppend]] without the corpus-sized cache
-    * copy. The copy form persists + counts the FULL unioned member frames
-    * per batch: an O(standing) re-materialization that the ×30 ingest
-    * probe measured as per-batch latency creeping 27→39 s over 16 batches
-    * (BENCH_INGEST_x30.json) — at 100 TB that makes daily ingest cost
-    * track corpus size. Here only the BATCH's frames materialize (eager
-    * artifact-tier checkpoints — batch-sized), and the new generation's
-    * members are LAZY UNIONS over the old generation's caches: serving
-    * scans read the standing cache plus one small delta cache per append.
-    * Content is identical to the copy form (same staging, same rows), so
-    * every serving result is unchanged (StreamingSpec pins delta-stream ≡
-    * copy-stream end to end).
-    *
-    * LIFECYCLE TRADE, stated not hidden: generations now SHARE cached
-    * frames, so the caller must NOT release a superseded handle after the
-    * roll (unpersisting a shared parent degrades every successor to
-    * source re-reads). The shared frames ride the generation's `chain`:
-    * when a policy cuts standalone frames (compaction checkpoints fresh
-    * copies; a re-band on a chained index cuts BOTH frames fresh), the
-    * successor's chain is empty and the superseded chain releases as one
-    * unit — [[graft.streaming.IngestServing]] performs that release, so
-    * a long-running delta stream's storage is bounded by ONE generation
-    * plus the deltas since the last cut, not by rebuild count. Union
-    * depth grows one per append until the compaction policy fires — the
-    * LSM trade, bounded by the same width detector as the copy path.
-    *
-    * DURABILITY: the delta members persist with FULL LINEAGE
-    * ([[graft.GraftCaches.persistedArtifactFresh]] — batch-sized persist
-    * cost), rooted at the batch source files: a lost executor block
-    * recomputes from source, where the previous localCheckpoint form
-    * failed unrecoverably mid-stream. */
-  def dedupIndexAppendDelta(index: DedupIndex, batch: DataFrame, id: Column,
-      text: Column): DedupIndex =
-    dedupIndexAppendDeltaStaged(index, stageBatch(index, batch, id, text))
-
-  /** [[dedupIndexAppendDelta]] of a batch already [[stageBatch]]'d
-    * against `index`. */
-  private[graft] def dedupIndexAppendDeltaStaged(index: DedupIndex,
       batch: (DataFrame, DataFrame)): DedupIndex =
     graft.GraftCaches.inArtifactScope {
       val (bStaged, bBands) = batch
@@ -598,13 +563,15 @@ object Dedup {
       val dBands = graft.GraftCaches.persistedArtifactFresh(bBands)
       dBands.count()
       val bn = dStaged.count() // materialize the deltas; batch-sized
+      val staged = index.staged.unionByName(dStaged)
       val base =
         if (index.chain.nonEmpty) index.chain
         else graft.GraftCaches.GenChain(Seq(index.staged, index.bands))
-      DedupIndex(index.staged.unionByName(dStaged),
-        index.bands.unionByName(dBands),
+      // rows roll forward from the standing counter (fresh ids — the
+      // clash require in stageBatch); one count when the handle lost it
+      DedupIndex(staged, index.bands.unionByName(dBands),
         index.numHashes, index.nBands, index.shingleK,
-        rows = index.rows.map(_ + bn),
+        rows = Some(index.rows.fold(staged.count())(_ + bn)),
         chain = base ++ Seq(dStaged, dBands))
     }
 
@@ -623,7 +590,9 @@ object Dedup {
     * streams replay). The anti-join broadcasts the removal set:
     * deletion events are batch-sized, the catalog is the corpus-sized
     * side, one scan per frame, no shuffle. `ids` carries a `doc_id`
-    * column. Generations roll as in [[dedupIndexAppend]]. */
+    * column. The shrunk frames are standalone copies (empty chain): once
+    * they are materialized, the superseded generation and its chain
+    * release ([[graft.streaming.RetentionServing]]). */
   def dedupIndexRemove(index: DedupIndex, ids: DataFrame): DedupIndex =
     graft.GraftCaches.inArtifactScope {
       val rm = broadcast(ids.select(col("doc_id")).distinct())
@@ -649,7 +618,7 @@ object Dedup {
     * untouched; pair sets are partition-independent (suite-wide
     * invariant), so compacted serving reuses the remove gate's oracle
     * verbatim (`dedup_index_compact`). */
-  /** `durableRoot`: when set (delta-mode streaming), the cut
+  /** `durableRoot`: when set (the serving streams), the cut
     * materializes through [[graft.GraftCaches.durableCut]] — a parquet
     * root under `durableRoot/{staged,bands}` — instead of a
     * localCheckpoint, so the serving generation stays recoverable after
@@ -806,20 +775,22 @@ object Dedup {
   }
 
   /** Materialize one generation's member caches (the dedup analogue of
-    * [[Similarity.materializeIndexData]] — see the copy-mode roll
-    * contract there): copy-form appends leave the unioned staged/bands
-    * caches LAZY, so a roll that releases the superseded generation
-    * first would hand the next serving batch a full re-shingle of the
-    * standing corpus instead of a cache-to-cache copy. */
+    * [[Similarity.materializeIndexData]] — see the cut-roll contract
+    * there): a standalone successor cut from its predecessor's caches
+    * (a remove's anti-joined copies) may still be LAZY, so a roll that
+    * releases the predecessor first would hand the next serving batch a
+    * full re-shingle of the standing corpus instead of a cache-to-cache
+    * copy. */
   def materializeDedupIndex(index: DedupIndex): Unit = {
     index.staged.count(); index.bands.count()
     ()
   }
 
-  /** Release one dedup-index generation's caches (idempotent; the
-    * analogue of [[Similarity.releaseIndexData]] — after an append, drop
-    * the superseded generation so long-lived sessions don't pin one
-    * corpus copy per generation). */
+  /** Release one dedup-index generation's caches and its chain
+    * (idempotent; the analogue of [[Similarity.releaseIndexData]] — after
+    * a standalone cut, drop the superseded generation so long-lived
+    * sessions don't pin one corpus copy per generation; never after an
+    * append, whose successor reads these caches). */
   def releaseDedupIndex(index: DedupIndex, blocking: Boolean = false): Unit = {
     index.staged.unpersist(blocking)
     index.bands.unpersist(blocking)
@@ -1499,16 +1470,21 @@ object Dedup {
     val subs = blockSubsets(blocks, m)
     val chunks = maxHamming + 1
     // complement value per band_idx: the band's non-member blocks of its
-    // own hash column, concatenated low-to-high (one CASE column; band
-    // counts are capped at 70·|hashCols| so the CASE stays codegen-sized)
-    val compVal = hashCols.zipWithIndex.flatMap { case (hc, k) =>
-      subs.zipWithIndex.map { case (s, si) =>
-        val comp = (0 until blocks).filterNot(s.contains)
-        val v = if (comp.isEmpty) lit(0L) else subsetVal(hc, widths, comp)
-        (subs.length * k + si, v)
+    // own hash column, concatenated low-to-high exactly as subsetVal
+    // concatenates. One Scala function keyed by band_idx: a per-band
+    // column expression (a CASE over every band, or a complement field
+    // in bandedOf's explode struct) outgrows the 64 KB generated-method
+    // limit at 66 tables
+    val offsets = widths.scanLeft(0)(_ + _)
+    val compBlocks = subs.map(s => (0 until blocks).filterNot(s.contains))
+      .toArray
+    val complement = udf { (hashes: Seq[Long], bandIdx: Int) =>
+      val h = hashes(bandIdx / compBlocks.length)
+      compBlocks(bandIdx % compBlocks.length).foldLeft(0L) { (acc, i) =>
+        val w = widths(i)
+        val mask = if (w == 64) -1L else (1L << w) - 1L
+        (acc << w) | ((h >>> offsets(i)) & mask)
       }
-    }.foldLeft(lit(0L)) { case (acc, (bi, v)) =>
-      when(col("band_idx") === bi, v).otherwise(acc)
     }
     // uniform chunk boundaries over the widest complement: per band they
     // partition that band's complement bits (trailing chunks may carry
@@ -1522,7 +1498,8 @@ object Dedup {
         shiftright(col("__comp"), ci * cw).bitwiseAND(lit(mask)).as("sec_val"))
     }
     val keep = col("doc_id") +: hashCols.map(col)
-    repHotMembers.withColumn("__comp", compVal)
+    repHotMembers.withColumn("__comp",
+        complement(array(hashCols.map(col): _*), col("band_idx")))
       .select((keep ++ Seq(col("band_idx"), col("band_val"),
         explode(array(secStructs: _*)).as("sec"))): _*)
       .select((keep ++ Seq(col("band_idx"), col("band_val"),
@@ -1892,36 +1869,25 @@ object Dedup {
     }
   }
 
-  /** Append a batch into the standing catalog (generation roll as in
-    * [[dedupIndexAppend]]; id-hygiene guards via the shared staging). */
-  def embIndexAppend(index: EmbIndex, batch: DataFrame, id: Column,
-      vec: Column): EmbIndex = graft.GraftCaches.inArtifactScope {
-    val b = stageEmbBatch(batch, id, vec, index.nPlanes, Some(index.vecs))
-    val vecs = graft.GraftCaches.persistedArtifact(index.vecs.unionByName(b))
-    // batch-sized count on the cached staging instead of a standing-sized
-    // union count (see dedupIndexAppend)
-    val n = index.rows.map(_ + b.count()).getOrElse(vecs.count())
-    EmbIndex(vecs, index.nPlanes, rows = Some(n))
-  }
-
-  /** DELTA APPEND on the embedding catalog — [[dedupIndexAppendDelta]]'s
-    * contract on the semantic tier: only the staged batch persists
-    * (artifact tier, batch-sized, LINEAGE-BEARING via
-    * [[graft.GraftCaches.persistedArtifactFresh]] — the staging plan is
-    * pure from the batch source, so a lost block recomputes where the
-    * previous localCheckpoint form failed unrecoverably); the new
+  /** Append a batch into the standing embedding catalog — the
+    * [[dedupIndexAppend]] delta generation on the semantic tier: only the
+    * staged batch persists (artifact tier, batch-sized, lineage-bearing
+    * via [[graft.GraftCaches.persistedArtifactFresh]]); the new
     * generation is a lazy union over the old generation's cache, and the
-    * shared frames ride `chain` for release at the next standalone cut. */
-  def embIndexAppendDelta(index: EmbIndex, batch: DataFrame, id: Column,
+    * shared frames ride `chain` for release at the next standalone cut.
+    * Id-hygiene guards via the shared staging. */
+  def embIndexAppend(index: EmbIndex, batch: DataFrame, id: Column,
       vec: Column): EmbIndex = graft.GraftCaches.inArtifactScope {
     val b = stageEmbBatch(batch, id, vec, index.nPlanes, Some(index.vecs))
     val d = graft.GraftCaches.persistedArtifactFresh(b)
     val bn = d.count()
+    val vecs = index.vecs.unionByName(d)
     val base =
       if (index.chain.nonEmpty) index.chain
       else graft.GraftCaches.GenChain(Seq(index.vecs))
-    EmbIndex(index.vecs.unionByName(d), index.nPlanes,
-      rows = index.rows.map(_ + bn), chain = base ++ Seq(d))
+    EmbIndex(vecs, index.nPlanes,
+      rows = Some(index.rows.fold(vecs.count())(_ + bn)),
+      chain = base ++ Seq(d))
   }
 
   /** RETENTION DELETE on the standing embedding catalog — the broadcast
@@ -1952,7 +1918,7 @@ object Dedup {
         index.vecs.sparkSession.sessionState.conf.numShufflePartitions)
       val repart = index.vecs.repartition(n, col("bucket"))
       // content untouched ⇒ rows carry over; standalone cut ⇒ chain resets;
-      // durableRoot: the delta-mode parquet cut (see compactDedupIndex)
+      // durableRoot: the streaming parquet cut (see compactDedupIndex)
       val vecs = durableRoot match {
         case Some(root) => graft.GraftCaches.durableCut(repart, s"$root/vecs")
         case None => graft.GraftCaches.checkpointed(repart)
@@ -1960,7 +1926,7 @@ object Dedup {
       EmbIndex(vecs, index.nPlanes, rows = index.rows)
     }
 
-  /** See [[materializeDedupIndex]] — the copy-mode roll contract on the
+  /** See [[materializeDedupIndex]] — the cut-roll contract on the
     * embedding catalog. */
   def materializeEmbIndex(index: EmbIndex): Unit = {
     index.vecs.count()

@@ -554,33 +554,22 @@ object Multimodal {
         .select(col("media_id").as("doc_id"), col("ahash"), col("dhash")),
       Seq("ahash", "dhash"), maxHamming)
 
-  /** Grow the standing catalog by a batch (generation roll as in
-    * [[graft.functions.Dedup.dedupIndexAppend]]). */
-  def phashIndexAppend(index: PhashIndex, mediaBatch: DataFrame): PhashIndex =
-    graft.GraftCaches.inArtifactScope {
-      val bh = stagePhashBatch(index, mediaBatch)
-      val hashes = graft.GraftCaches.persistedArtifact(
-        index.hashes.unionByName(bh))
-      // batch-sized count on the cached staging instead of a
-      // standing-sized union count (see Dedup.dedupIndexAppend)
-      val n = index.rows.map(_ + bh.count()).getOrElse(hashes.count())
-      PhashIndex(hashes, rows = Some(n))
-    }
-
-  /** DELTA APPEND — [[graft.functions.Dedup.dedupIndexAppendDelta]]'s
-    * contract on the image tier: only the batch's hashes persist
-    * (lineage-bearing, batch-sized); the generation is a lazy union and
-    * the shared frames ride `chain` for release at a standalone cut. */
-  def phashIndexAppendDelta(index: PhashIndex,
+  /** Grow the standing catalog by a batch — the
+    * [[graft.functions.Dedup.dedupIndexAppend]] delta generation on the
+    * image tier: only the batch's hashes persist (lineage-bearing,
+    * batch-sized); the generation is a lazy union and the shared frames
+    * ride `chain` for release at a standalone cut. */
+  def phashIndexAppend(index: PhashIndex,
       mediaBatch: DataFrame): PhashIndex = graft.GraftCaches.inArtifactScope {
     val d = graft.GraftCaches.persistedArtifactFresh(
       stagePhashBatch(index, mediaBatch))
     val bn = d.count()
+    val hashes = index.hashes.unionByName(d)
     val base =
       if (index.chain.nonEmpty) index.chain
       else graft.GraftCaches.GenChain(Seq(index.hashes))
-    PhashIndex(index.hashes.unionByName(d),
-      rows = index.rows.map(_ + bn), chain = base ++ Seq(d))
+    PhashIndex(hashes, rows = Some(index.rows.fold(hashes.count())(_ + bn)),
+      chain = base ++ Seq(d))
   }
 
   /** COMPACTION + policy — the LSM merge every standing family carries
@@ -593,7 +582,7 @@ object Multimodal {
       val n = partitions.getOrElse(
         index.hashes.sparkSession.sessionState.conf.numShufflePartitions)
       val repart = index.hashes.repartition(n, col("media_id"))
-      // durableRoot: the delta-mode parquet cut (see
+      // durableRoot: the streaming parquet cut (see
       // [[graft.functions.Dedup.compactDedupIndex]])
       val hashes = durableRoot match {
         case Some(root) =>
@@ -617,10 +606,10 @@ object Multimodal {
     }
   }
 
-  /** See [[graft.functions.Dedup.materializeDedupIndex]] — the copy-mode
-    * roll contract on the image tier: fill the successor's lazy unioned
-    * hash cache before the superseded generation releases, or the next
-    * serving batch re-decodes the standing corpus. */
+  /** See [[graft.functions.Dedup.materializeDedupIndex]] — the cut-roll
+    * contract on the image tier: fill the successor's lazy hash cache
+    * before the superseded generation releases, or the next serving
+    * batch re-decodes the standing corpus. */
   def materializePhashIndex(index: PhashIndex): Unit = {
     index.hashes.count()
     ()

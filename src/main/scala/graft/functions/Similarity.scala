@@ -1117,149 +1117,35 @@ object Similarity {
 
   /** INCREMENTAL APPEND — grow a built index without retraining: new
     * vectors are assigned to the EXISTING coarse centroids and their
-    * residuals coded with the EXISTING codebook, then corpus / inverted
-    * lists / codes union in. Quantizers (and therefore the cross-term
-    * table and every already-coded vector) are untouched — the standard
-    * production freshness path (FAISS `add` semantics): a corpus that
-    * grows daily pays assignment+coding per batch, never a rebuild.
-    * Recall for appended vectors matches build-time coding EXACTLY when
-    * the quantizers are fixed, because append runs the identical
-    * assignment/coding pipeline the build runs after training
-    * (`SimilaritySpec` pins: build(old) + append(new) ≡ coding new
-    * through build's own stages; the `ann_index_append` gate pins the
-    * served ranking end-to-end). Rebuild when drift accumulates —
-    * quantization error vs a fresh build is measurable per batch by
-    * comparing [[ivfPqTopKIndexed]] to [[cosineTopK]] on a sample. */
-  def ivfPqIndexAppend(index: IvfPqIndex, newVectors: DataFrame): IvfPqIndex =
-    graft.GraftCaches.inArtifactScope {
-      graft.plans.GraftFunctions.register(index.corpus.sparkSession)
-      val nc = graft.GraftCaches.persistedArtifact(
-        newVectors.select(col("vec_id").as("c_id"),
-          col("embedding").cast("array<double>").as("cv")))
-      // c_id is the KEY of codes/assigned: re-adding an existing id would
-      // put 2·m code rows under one key and the serving aggregation would
-      // sum both copies' ADC terms — a silently corrupted cosine. Fail
-      // fast instead (one cheap join of the small batch against the
-      // cached id column; an update is delete+rebuild or a new id).
-      // The same hazard exists WITHIN the batch: two batch rows sharing a
-      // vec_id pass the corpus join yet union in twice, doubling ADC sums
-      // identically — so intra-batch uniqueness is checked first (a
-      // groupBy on the small batch only, never a corpus scan).
-      // ONE batch pass for size + intra-batch dup check (was two jobs):
-      // sum of per-id counts = batch rows, any count > 1 = a duplicate
-      val st = nc.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum(col("n")), lit(0L)).as("bn"),
-          coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("dups"))
-        .head()
-      val bn = st.getLong(0)
-      val batchDups = st.getLong(1)
-      require(batchDups == 0L,
-        s"ivfPqIndexAppend: $batchDups vec_id(s) appear more than once in " +
-          "the append batch — duplicate ids would sum both copies' ADC " +
-          "terms into one corrupted cosine; dedup the batch first")
-      // the id-clash probe reads the VECTOR-FREE inverted lists, not the
-      // corpus: same id set (both keyed by c_id over the same members),
-      // ~30× fewer bytes scanned per append at 100 TB (guide §2.3)
-      val clashes = nc.select(col("c_id"))
-        .join(index.assigned.select(col("c_id")), Seq("c_id")).count()
-      require(clashes == 0L,
-        s"ivfPqIndexAppend: $clashes appended vec_id(s) already exist in the " +
-          "index — appends must carry fresh ids (re-coding an existing id " +
-          "would double its ADC sums, not replace it)")
-      // identical post-training pipeline to buildIvfPqIndex, against the
-      // index's frozen quantizers
-      val assignedFull = assignNearest(nc, index.centroids).persistTracked()
-      val resid = assignedFull.join(broadcast(index.centroids), Seq("cent_id"))
-        .select(col("c_id"),
-          zip_with(col("cv"), col("centroid"), (a, b) => a - b).as("cv"))
-      val csub = pqSubVectors(resid, index.m).persistTracked()
-      // batch-sized code delta persisted ONCE: it feeds the union member
-      // AND the pivot seed below — without the cache the coding pipeline
-      // would run twice
-      val codesDelta = graft.GraftCaches.persistedArtifactFresh(
-        assignNearestSub(csub, index.codebook)
-          .select(col("c_id"), col("sub"), col("code")))
-      val corpus = graft.GraftCaches.persistedArtifact(
-        index.corpus.unionByName(nc))
-      val assigned = graft.GraftCaches.persistedArtifact(
-        index.assigned.unionByName(assignedFull.select(col("cent_id"), col("c_id"))))
-      val codes = graft.GraftCaches.persistedArtifact(
-        index.codes.unionByName(codesDelta))
-      // rows roll forward from the standing counter (appended ids are
-      // fresh — the clash require above), falling back to one count when
-      // the handle lost it. The old `codes.count(); assigned.count();
-      // corpus.count()` trio forced THREE standing-corpus-sized cache
-      // fills per append (guide §1.2: don't compute what you throw away)
-      // — the unioned members now materialize during the first serve scan
-      // that reads them anyway.
-      val n = index.rows.map(_ + bn).getOrElse(corpus.count())
-      // SERVING-PIVOT SEED (guide §2.3 "aggregate before you shuffle",
-      // already the delta form's shape): base pivot ∪ batch pivot is
-      // row-identical to re-aggregating the full unioned code table
-      // (fresh ids ⇒ no c_id group straddles the union — StreamingSpec
-      // pins delta ≡ copy), so the O(standing) groupBy the old path ran
-      // per append becomes O(batch). PERSISTED like the remove/warm
-      // seeds: copy-mode rolls release the superseded generation right
-      // after the swap (IngestServing), and an unpersisted union would
-      // then re-run the corpus-sized codes groupBy on every serve of the
-      // new generation — withServingPivot's count below materializes it
-      // cheaply from the still-cached base pivot instead. The batch
-      // pivot needs no cache of its own: it is read exactly once, here,
-      // from the already-cached codesDelta.
-      val basePivot = pivotedCodesFrame(index.codes)
-      val deltaPivot = codesDelta.groupBy(col("c_id"))
-        .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-        .select(col("c_id"), col("sc.code").as("codes"))
-      codesPivotMemo.put(codesPivotKey(codes),
-        graft.GraftCaches.persistedArtifact(
-          basePivot.unionByName(deltaPivot)))
-      withServingPivot(
-        IvfPqIndex(corpus, index.centroids, assigned, index.codebook, codes,
-          index.crossTerms, index.m, rows = Some(n),
-          listSizes = mergeListSizes(index.listSizes,
-            listSizesOf(assignedFull.select(col("cent_id"), col("c_id"))))))
-    }
-
-  /** DELTA APPEND — [[ivfPqIndexAppend]] without the corpus-sized cache
-    * copy. The copy form persists + counts the FULL unioned
-    * corpus/assigned/codes per batch AND re-pivots the whole code table
-    * for the ADC scorer — an O(standing) re-materialization per append
-    * that the ×30 ingest probe measured as per-batch latency creeping
-    * 27→39 s over 16 batches (BENCH_INGEST_x30.json). Here only the
-    * BATCH's frames materialize (eager artifact-tier checkpoints:
-    * vectors, assignments, codes, and the delta's own serving pivot —
-    * all batch-sized), the new generation's members are LAZY UNIONS over
-    * the old generation's caches, and the serving-pivot memo is seeded
-    * with `old pivot ∪ delta pivot` — valid because appended ids are
-    * fresh (the same id-hygiene guards as the copy form), so no c_id
-    * group straddles the union. Identical content, identical serving
-    * results (StreamingSpec pins delta ≡ copy end to end).
+    * residuals coded with the EXISTING codebook. Quantizers (and
+    * therefore the cross-term table and every already-coded vector) are
+    * untouched — the standard production freshness path (FAISS `add`
+    * semantics): a corpus that grows daily pays assignment+coding per
+    * batch, never a rebuild. Recall for appended vectors matches
+    * build-time coding EXACTLY when the quantizers are fixed, because
+    * append runs the identical assignment/coding pipeline the build runs
+    * after training (`SimilaritySpec` pins: build(old) + append(new) ≡
+    * coding new through build's own stages; the `ann_index_append` gate
+    * pins the served ranking end-to-end). Rebuild when drift accumulates
+    * ([[ivfPqRebuildIfStale]]).
     *
-    * LIFECYCLE TRADE (see [[Dedup.dedupIndexAppendDelta]]): generations
-    * share cached frames — do NOT release a superseded handle after the
-    * roll; chains release when a rebuild/compaction cuts standalone
+    * The grown index is a DELTA generation: only the BATCH's frames
+    * materialize (artifact-tier: vectors, assignments, codes, and the
+    * delta's own serving pivot — all batch-sized), the members are LAZY
+    * UNIONS over the old generation's caches, and the serving-pivot memo
+    * is seeded with `old pivot ∪ delta pivot` — valid because appended
+    * ids are fresh, so no c_id group straddles the union.
+    *
+    * LIFECYCLE (see [[Dedup.dedupIndexAppend]]): generations share
+    * cached frames — do NOT release a superseded handle after the roll;
+    * chains release when a rebuild/compaction/remove cuts standalone
     * frames or with the artifact tier. Union depth grows one per append
     * until the compaction policy fires. */
-  def ivfPqIndexAppendDelta(index: IvfPqIndex, newVectors: DataFrame): IvfPqIndex =
+  def ivfPqIndexAppend(index: IvfPqIndex, newVectors: DataFrame): IvfPqIndex =
     graft.GraftCaches.inArtifactScope {
       graft.plans.GraftFunctions.register(index.corpus.sparkSession)
       val ncRaw = newVectors.select(col("vec_id").as("c_id"),
         col("embedding").cast("array<double>").as("cv"))
-      // same id-hygiene guards as the copy append (duplicate ids would sum
-      // both copies' ADC terms into one corrupted cosine; fresh ids are
-      // also what makes the pivot union below exact)
-      val batchDups = ncRaw.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1).count()
-      require(batchDups == 0L,
-        s"ivfPqIndexAppendDelta: $batchDups vec_id(s) appear more than once " +
-          "in the append batch — dedup the batch first")
-      // id-clash probe against the vector-free inverted lists (same id
-      // set as the corpus — see ivfPqIndexAppend)
-      val clashes = ncRaw.select(col("c_id"))
-        .join(index.assigned.select(col("c_id")), Seq("c_id")).count()
-      require(clashes == 0L,
-        s"ivfPqIndexAppendDelta: $clashes appended vec_id(s) already exist " +
-          "in the index — appends must carry fresh ids")
       // delta members persist LINEAGE-BEARING in the artifact tier
       // (persistedArtifactFresh): batch-sized persist cost, and a lost
       // block recomputes through the caller's newVectors plan where the
@@ -1267,17 +1153,36 @@ object Similarity {
       // that recompute is the durability of newVectors' own lineage —
       // the streaming front door hands a parquet-backed frame here.
       val nc = graft.GraftCaches.persistedArtifactFresh(ncRaw)
-      val bn = nc.count()
+      // id hygiene: c_id is the KEY of codes/assigned, so a duplicate id
+      // (within the batch or against the index) would sum both copies'
+      // ADC terms into one corrupted cosine; fresh ids are also what
+      // makes the pivot union below exact. An update is remove + append.
+      // ONE batch pass fills nc and yields its size and the intra-batch
+      // duplicate count: sum of per-id counts = batch rows, any count > 1
+      // = a duplicate
+      val st = nc.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
+        .agg(coalesce(sum(col("n")), lit(0L)).as("bn"),
+          coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("dups"))
+        .head()
+      val bn = st.getLong(0)
+      require(st.getLong(1) == 0L,
+        s"ivfPqIndexAppend: ${st.getLong(1)} vec_id(s) appear more than once " +
+          "in the append batch — dedup the batch first")
+      // id-clash probe against the vector-free inverted lists: same id
+      // set as the corpus, ~30× fewer bytes scanned per append at 100 TB
+      val clashes = nc.select(col("c_id"))
+        .join(index.assigned.select(col("c_id")), Seq("c_id")).count()
+      require(clashes == 0L,
+        s"ivfPqIndexAppend: $clashes appended vec_id(s) already exist " +
+          "in the index — appends must carry fresh ids")
       val assignedDelta = graft.GraftCaches.persistedArtifactFresh(
         assignNearest(nc, index.centroids))
-      assignedDelta.count()
       val resid = assignedDelta.join(broadcast(index.centroids), Seq("cent_id"))
         .select(col("c_id"),
           zip_with(col("cv"), col("centroid"), (a, b) => a - b).as("cv"))
       val codesDelta = graft.GraftCaches.persistedArtifactFresh(
         assignNearestSub(pqSubVectors(resid, index.m), index.codebook)
           .select(col("c_id"), col("sub"), col("code")))
-      codesDelta.count()
       val corpus = index.corpus.unionByName(nc)
       val assigned = index.assigned
         .unionByName(assignedDelta.select(col("cent_id"), col("c_id")))
@@ -1290,6 +1195,8 @@ object Similarity {
         codesDelta.groupBy(col("c_id"))
           .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
           .select(col("c_id"), col("sc.code").as("codes")))
+      // one job fills the delta chain: the pivot reads codesDelta, which
+      // reads assignedDelta — each cache fills on its first scan
       deltaPivot.count()
       codesPivotMemo.put(codesPivotKey(codes),
         basePivot.unionByName(deltaPivot))
@@ -1299,7 +1206,8 @@ object Similarity {
           Seq(index.corpus, index.assigned, index.codes, basePivot))
       IvfPqIndex(corpus, index.centroids, assigned, index.codebook, codes,
         index.crossTerms, index.m,
-        rows = index.rows.map(_ + bn),
+        // rows roll forward (fresh ids); one count when the handle lost it
+        rows = Some(index.rows.fold(corpus.count())(_ + bn)),
         chain = base ++ Seq(nc, assignedDelta, codesDelta, deltaPivot),
         listSizes = mergeListSizes(index.listSizes,
           listSizesOf(assignedDelta.select(col("cent_id"), col("c_id")))))
@@ -1323,9 +1231,10 @@ object Similarity {
     * 100-TB side, and each member frame is one scan with no shuffle.
     * `removeIds` carries a `vec_id` column (the append-side key name).
     *
-    * Generations roll exactly as in [[ivfPqIndexAppend]]: the superseded
-    * frames stay valid (shared lineage) and release when the caller
-    * retires the old generation. An UPDATE is remove + append of the new
+    * The shrunk frames are standalone copies (empty chain): once they
+    * materialize, the caller releases the superseded generation and its
+    * chain ([[graft.streaming.RetentionServing]]). An UPDATE is remove +
+    * append of the new
     * vector under the same id — the `ann_index_update` gate runs that
     * composition end-to-end. */
   def ivfPqIndexRemove(index: IvfPqIndex, removeIds: DataFrame): IvfPqIndex =
@@ -1380,14 +1289,14 @@ object Similarity {
     graft.GraftCaches.inArtifactScope {
       val n = partitions.getOrElse(
         index.corpus.sparkSession.sessionState.conf.numShufflePartitions)
-      // durableRoot: the delta-mode parquet cut (see
+      // durableRoot: the streaming parquet cut (see
       // [[graft.functions.Dedup.compactDedupIndex]]) — the ANN members
       // especially need it, their delta lineage roots are the pruned
       // survivor epochs
       // assigned and the pivot additionally sort on the cut key so the
       // serve's lists⋈pivot join reads cached ordering (localCheckpoint
       // preserves partitioning+ordering; the durable parquet root cannot,
-      // and delta-mode serving re-sorts — the documented trade)
+      // and streaming serving re-sorts — the documented trade)
       def compacted(df: DataFrame, name: String,
           sorted: Boolean = false): DataFrame = {
         val cut0 = df.repartition(n, col("c_id"))
@@ -1569,16 +1478,17 @@ object Similarity {
   }
 
   /** Release ONE index generation's DATA-tier caches (corpus, inverted
-    * lists, codes) without touching the quantizer frames it SHARES with
-    * successor generations ([[ivfPqIndexAppend]] reuses centroids /
-    * codebook / cross-terms). The daily-append pattern in a long-lived
-    * session: `g2 = ivfPqIndexAppend(g1, batch)`, materialize g2's first
-    * result, then `releaseIndexData(g1)` — otherwise every superseded
-    * generation keeps a full corpus copy pinned in the artifact tier, and
-    * the only other lever (`GraftCaches.releaseArtifacts()`) drops
-    * EVERYTHING including the live index and the memos. Unpersist is
-    * idempotent, so the artifact registry's own later release of the same
-    * frames is harmless. */
+    * lists, codes, serving pivot, and its delta chain) without touching
+    * the quantizer frames it SHARES with successor generations
+    * ([[ivfPqIndexAppend]] reuses centroids / codebook / cross-terms).
+    * Call it only on a generation superseded by a STANDALONE cut
+    * (remove, compaction, rebuild), after the successor materializes —
+    * an appended successor reads the superseded caches through its lazy
+    * unions. Otherwise every superseded generation keeps a full corpus
+    * copy pinned in the artifact tier, and the only other lever
+    * (`GraftCaches.releaseArtifacts()`) drops EVERYTHING including the
+    * live index and the memos. Unpersist is idempotent, so the artifact
+    * registry's own later release of the same frames is harmless. */
   def releaseIndexData(index: IvfPqIndex, blocking: Boolean = false): Unit = {
     index.corpus.unpersist(blocking)
     index.assigned.unpersist(blocking)
@@ -1596,10 +1506,10 @@ object Similarity {
 
   /** Materialize one generation's DATA-tier member caches (corpus,
     * inverted lists, codes — the serving pivot is already counted at
-    * construction by [[withServingPivot]]). THE COPY-MODE ROLL CONTRACT:
-    * a successor minted by the copy-form append/remove holds lazy
-    * union/anti-join caches OVER the superseded generation's caches, so
-    * they must fill BEFORE [[releaseIndexData]] drops the parents — a
+    * construction by [[withServingPivot]]). THE CUT-ROLL CONTRACT: a
+    * successor minted by a remove holds lazy anti-join caches OVER the
+    * superseded generation's caches, so they must fill BEFORE
+    * [[releaseIndexData]] drops the parents — a
     * cache-to-cache copy here versus a full standing-lineage recompute
     * (back to the last durable cut) charged to the first serving query
     * after the roll. The serving rolls call this between the ref swap
@@ -1612,7 +1522,7 @@ object Similarity {
 
   /** Drop a superseded codes frame's serving-pivot memo entry WITHOUT
     * unpersisting its frame (delta generations share the pivot's cached
-    * pieces with their successors) — the per-roll hygiene of a delta-mode
+    * pieces with their successors) — the per-roll hygiene of a
     * serving stream, so the memo does not accrete one dead entry per
     * micro-batch. */
   private[graft] def dropCodesPivotEntry(codes: DataFrame): Unit = {

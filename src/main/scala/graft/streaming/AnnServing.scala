@@ -50,21 +50,24 @@ object AnnServing {
   }
 
   /** GENERATION-ROLLOVER form: the served index is read from `indexRef`
-    * at the START of each micro-batch, so an operator thread can
-    * [[Similarity.ivfPqIndexAppend]] a new generation, `indexRef.set(g2)`,
-    * and [[Similarity.releaseIndexData]] the superseded one WITHOUT
-    * stopping the stream — the daily-append serving pattern. The swap is
-    * safe mid-stream because generations share their quantizer frames
-    * (append never retrains) and `releaseIndexData` drops only the old
-    * generation's data-tier caches; a batch already executing against g1
-    * still computes correctly (unpersist does not invalidate the plan,
-    * it only drops cached blocks). The operator thread MUST
-    * [[Similarity.materializeIndexData]] the new generation between the
-    * swap and the release (copy-append members are lazy unions over the
-    * superseded caches — released parents would make the first post-roll
-    * serve recompute the standing lineage from source). StreamingSpec
-    * pins post-roll batches ≡ batch serving on the grown index, with
-    * storage back at baseline.
+    * at the START of each micro-batch, so an operator thread can roll
+    * generations WITHOUT stopping the stream — the daily-append serving
+    * pattern:
+    *
+    *   1. `g2 = `[[Similarity.ivfPqIndexAppend]]`(g1, batch)` — a delta
+    *      generation whose members are lazy unions over g1's caches
+    *      (quantizer frames shared: append never retrains);
+    *   2. `indexRef.set(g2)`;
+    *   3. release NOTHING: g2 reads g1's caches. Release only at a CUT —
+    *      once a policy returns a standalone generation (compaction,
+    *      rebuild, remove), set it, then release the superseded chain
+    *      ([[Similarity.releaseIndexData]] on the pre-cut generation).
+    *
+    * A batch already executing against the previous generation still
+    * computes correctly (unpersist does not invalidate the plan, it
+    * only drops cached blocks). StreamingSpec pins post-roll batches ≡
+    * batch serving on the grown index, and the cut leaving the
+    * standalone successor serving unchanged.
     */
   def startServingStreamRef(spark: SparkSession, queryDir: String,
       indexRef: AtomicReference[Similarity.IvfPqIndex], k: Int, nProbe: Int,

@@ -17,9 +17,16 @@ import graft.functions.Dedup
   *   1. emits its INCREMENTAL near-dup pairs (vs the standing corpus and
   *      within the batch) — [[Dedup.incrementalMinHashPairs]], batch-only
   *      staging + bucket equi-joins, never a corpus recompute;
-  *   2. APPENDS itself into the index ([[Dedup.dedupIndexAppend]]) and
-  *      rolls the served reference, releasing the superseded generation —
-  *      so batch N+1 dedups against the corpus AND batches 1..N.
+  *   2. APPENDS itself into the index ([[Dedup.dedupIndexAppend]] — a
+  *      delta generation over the superseded one's caches), lets the
+  *      COMPACTION policy ([[Dedup.compactDedupIndexIfFragmented]]) bound
+  *      the union width, and rolls the served reference — so batch N+1
+  *      dedups against the corpus AND batches 1..N. A routine roll
+  *      releases nothing (the successor reads the shared caches); a
+  *      compaction cut materializes through a durable parquet root under
+  *      [[IngestServing.stateRoot]] of `outDir` and releases the pre-cut
+  *      chain. No banding policy runs here, so the banding — and with it
+  *      the pair contract below — is the standing index's own.
   *
   * This is the ingest-time dedup front door of a training-data pipeline:
   * the near-dup decision is made as data ARRIVES, against everything
@@ -62,13 +69,14 @@ object DedupServing {
       docSchema: StructType = defaultDocSchema,
       checkpointLocation: Option[String] = None,
       tolerateReplays: Boolean = false): StreamingQuery = {
+    val state = IngestServing.stateRoot(spark, outDir)
     val writer = spark.readStream
       .schema(docSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(docDir)
       .writeStream
     checkpointLocation.fold(writer)(p => writer.option("checkpointLocation", p))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val index = indexRef.get()
         val fresh =
           if (!tolerateReplays) batch
@@ -83,14 +91,16 @@ object DedupServing {
           .write.mode("append").parquet(outDir)
         // roll the generation: later batches must dedup against this one
         val grown = Dedup.dedupIndexAppendStaged(index, staged)
-        indexRef.set(grown)
-        // MATERIALIZE-BEFORE-RELEASE: the append leaves grown's unioned
-        // caches lazy — fill them from the still-cached parents, or the
-        // next batch re-shingles the standing corpus from source
-        Dedup.materializeDedupIndex(grown)
-        // then the superseded generation's caches drop; batch staging
-        // was working-tier and is released with it
-        Dedup.releaseDedupIndex(index)
+        val (served, cut) = Dedup.compactDedupIndexIfFragmented(grown,
+          durableRoot = Some(s"$state/_gen/dedup/b$batchId"))
+        indexRef.set(served)
+        // only a cut leaves the pre-cut chain unread by any live handle;
+        // its parquet root also supersedes every older one
+        if (cut) {
+          grown.chain.release()
+          IngestServing.pruneEpochs(spark, s"$state/_gen/dedup", batchId)
+        }
+        // batch staging was working-tier
         graft.GraftCaches.unpersistAll()
         ()
       }

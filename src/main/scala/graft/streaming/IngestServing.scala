@@ -37,8 +37,7 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   *      the COMPACTION policy when the banding passes through
   *      ([[Dedup.compactDedupIndexIfFragmented]] — k appended batches
   *      otherwise concatenate k generations of partitions into every
-  *      bucket join), and rolls the served reference, releasing the
-  *      superseded generation;
+  *      bucket join), and rolls the served reference;
   *   4. appends only SURVIVOR embeddings into the ANN index
   *      (accepted-corpus semantics — retrieval must never return a
   *      dropped duplicate) through frozen quantizers (FAISS-add), then
@@ -52,6 +51,20 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   *      with it; when the policy passes through, the COMPACTION policy
   *      ([[Similarity.compactIvfPqIndexIfFragmented]]) bounds the keyed
   *      frames' scheduling width the same way.
+  *
+  * Every append is a DELTA generation ([[Dedup.dedupIndexAppend]] and
+  * its siblings): only the batch's frames persist, and the successor's
+  * members are lazy unions over the superseded generation's caches, so
+  * per-batch append cost stays batch-sized. A routine roll therefore
+  * releases NOTHING — the shared frames ride each index's `chain` — and
+  * when a POLICY CUTS a standalone generation (re-band, rebuild,
+  * re-bucket, compaction) this stream releases the whole pre-cut chain,
+  * so executor storage stays bounded by one generation plus the deltas
+  * since the last cut. Survivor embeddings cut lineage through an
+  * epoch-keyed parquet write under `<state>/_survivors` (a real lineage
+  * root for the ANN deltas), compactions cut through durable parquet
+  * roots under `<state>/_gen`, and a compaction cut prunes the epochs
+  * and roots it supersedes; `<state>` is [[stateRoot]] of `pairsOutDir`.
   *
   * Exactness contract (StreamingSpec pins both halves): the union of
   * per-batch pair files equals the full-corpus batch run restricted to
@@ -82,11 +95,16 @@ object IngestServing {
     StructField("text", StringType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** Root of a delta-mode ingest stream's own state (survivor epochs
+  /** Root of an ingest stream's own state (survivor epochs
     * `_survivors/b<id>`, durable generation roots `_gen/<family>/b<id>`):
     * `<parent>/_ingest_state_<name>` beside the qualified `pairsOutDir`,
-    * outside its string prefix (`<pairsOutDir>_state` would share it) —
-    * see [[startIngestStream]] for why. */
+    * outside its string prefix (`<pairsOutDir>_state` would share it).
+    * Every pairs append triggers Spark's `recacheByPath(pairsOutDir)`,
+    * which drops and lazily re-plans every cache whose file roots start
+    * with that string — with the epochs and the durable generation roots
+    * under `pairsOutDir`, each batch emptied the caches of every ANN
+    * delta (and, after a cut, of the base members) and the next batch
+    * re-filled them. */
   def stateRoot(spark: SparkSession, pairsOutDir: String): String = {
     val p = new org.apache.hadoop.fs.Path(pairsOutDir)
     val q = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -109,7 +127,7 @@ object IngestServing {
     * Restarted checkpoint-less streams renumber batches from 0 — their
     * stale higher-numbered dirs are left alone (overwrite-idempotent)
     * and fall to the first cut that passes them. */
-  private def pruneEpochs(spark: SparkSession, dir: String,
+  private[streaming] def pruneEpochs(spark: SparkSession, dir: String,
       cutBatchId: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -150,36 +168,12 @@ object IngestServing {
     * rebuild policy). `m`/`ksub`/`coarseIters`/`pqIters` parameterize a
     * policy-fired rebuild and must match the standing index's build
     * parameters (quantizer shape is not stored in [[Similarity.IvfPqIndex]]
-    * beyond `m`); `geometryFactor` is the drift bound. */
-  /** `deltaAppends = true` switches the standing rolls onto the
-    * DELTA-APPEND path ([[Dedup.dedupIndexAppendDelta]] /
-    * [[Similarity.ivfPqIndexAppendDelta]] / [[Dedup.embIndexAppendDelta]] /
-    * [[Multimodal.phashIndexAppendDelta]]): per-batch append cost becomes
-    * batch-sized (the copy form re-persists the full standing frames
-    * every batch — the measured 27→39 s latency creep in
-    * BENCH_INGEST_x30.json), at the lifecycle trade documented on those
-    * methods: superseded generation handles are NOT released after a
-    * routine roll (their caches are shared by the successor's lazy
-    * unions) — the shared frames ride each index's `chain`, and WHEN A
-    * POLICY CUTS a standalone generation (re-band, rebuild, re-bucket,
-    * compaction) this stream releases the whole superseded chain, so
-    * executor storage stays bounded by one generation plus the deltas
-    * since the last cut instead of growing one corpus per policy fire.
-    * Two further delta-mode differences: survivor embeddings cut lineage
-    * through an epoch-keyed parquet write under `<state>/_survivors`
-    * (a REAL lineage root — the ANN deltas' recompute path stays valid
-    * for the life of the stream, where a localCheckpoint would be
-    * unrecoverable; batch-sized, idempotent under foreachBatch retries),
-    * and each roll drops the superseded generation's serving-pivot memo
-    * entry. `<state>` is [[stateRoot]] of `pairsOutDir`, a sibling
-    * directory outside its string prefix: every pairs append triggers
-    * Spark's `recacheByPath(pairsOutDir)`, which drops and lazily
-    * re-plans every cache whose file roots start with that string — with
-    * the epochs and the durable generation roots under `pairsOutDir`,
-    * each batch emptied the caches of every ANN delta (and, after a cut,
-    * of the base members) and the next batch re-filled them. Serving
-    * results are identical either way (StreamingSpec pins it, including
-    * across a checkpoint restart and a mid-stream policy cut). */
+    * beyond `m`); `geometryFactor` is the drift bound.
+    *
+    * `deltaAppends` has no settable value left (appends are always delta
+    * generations); it stays only so existing callers that pass
+    * `deltaAppends = true` by name keep compiling, and goes with the next
+    * change to the benchmark harness, its last such caller. */
   def startIngestStream(spark: SparkSession, batchDir: String,
       dedupRef: AtomicReference[Dedup.DedupIndex],
       annOpRef: AtomicReference[(Similarity.IvfPqIndex, Int)],
@@ -193,9 +187,10 @@ object IngestServing {
       compactWidthFactor: Double = 4.0,
       embRef: Option[AtomicReference[Dedup.EmbIndex]] = None,
       embTargetBucket: Long = 32L,
-      deltaAppends: Boolean = false,
+      deltaAppends: Boolean = true,
       phashRef: Option[AtomicReference[Multimodal.PhashIndex]] = None,
       phashMaxHamming: Int = 6): StreamingQuery = {
+    require(deltaAppends, "copy-on-append was removed")
     require(phashRef.isEmpty || ingestSchema.fieldNames.contains("payload"),
       "a phash roll needs a binary `payload` column in the ingest schema")
     // enforce (don't just document) the lock-identity contract: the
@@ -236,66 +231,43 @@ object IngestServing {
         // LINEAGE CUT at the dedup→ANN boundary (the ingest_pipeline_policy
         // lesson): survivors otherwise embed the whole quarantine/bucket
         // plan and every index-build action re-analyzes it. Batch-sized.
-        // Copy mode cuts with a working-tier localCheckpoint (the copy
-        // persist is self-contained before the cut dies); delta mode cuts
-        // with an epoch-keyed parquet write — the ANN delta members keep
-        // a DURABLE lineage root (under the state root, outside the
-        // pairs write's recacheByPath prefix; overwrite: idempotent under
-        // retries)
-        val survivorsPlan = batch
-          .join(keepFirstDropped(pairs, docs), Seq("doc_id"), "left_anti")
+        // The cut is an epoch-keyed parquet write, so the ANN delta
+        // members keep a DURABLE lineage root (under the state root,
+        // outside the pairs write's recacheByPath prefix; overwrite:
+        // idempotent under retries)
+        val epochPath = s"$state/_survivors/b$batchId"
+        batch.join(keepFirstDropped(pairs, docs), Seq("doc_id"), "left_anti")
           .select(col("doc_id").as("vec_id"), col("embedding"))
-        val survivors =
-          if (deltaAppends) {
-            val epochPath = s"$state/_survivors/b$batchId"
-            survivorsPlan.write.mode("overwrite").parquet(epochPath)
-            batch.sparkSession.read.parquet(epochPath)
-          } else survivorsPlan.localCheckpointTracked()
+          .write.mode("overwrite").parquet(epochPath)
+        val survivors = batch.sparkSession.read.parquet(epochPath)
         // roll the catalog on the WHOLE batch (seen-corpus semantics),
         // then let the BANDING policy judge the grown count — the dedup
-        // mirror of the ANN rebuild below (on fire, re-banding reuses the
-        // catalog's staged frame, so only the band projection recomputes;
-        // release the superseded band frame alone, the staged is shared)
-        val grownDedup =
-          if (deltaAppends) Dedup.dedupIndexAppendDeltaStaged(dedupIx, staged)
-          else Dedup.dedupIndexAppendStaged(dedupIx, staged)
+        // mirror of the ANN rebuild below (on fire, re-banding cuts the
+        // catalog's staged frame standalone, so only the band projection
+        // recomputes over it)
+        val grownDedup = Dedup.dedupIndexAppendStaged(dedupIx, staged)
         val (rebandedDedup, rebanded) =
           Dedup.rebuildCatalogIfStale(grownDedup, threshold)
         // COMPACTION POLICY when no reband fired: every append
         // concatenates the batch's partitions into the member frames, so
         // k daily batches schedule k× the tasks per bucket join until a
-        // merge re-materializes at natural width (a reband already cuts
-        // fresh band frames; the staged frame re-compacts next fire)
-        // delta-mode compactions cut through DURABLE parquet roots
-        // (GraftCaches.durableCut — recoverable after the chain releases,
-        // and the precondition for pruning superseded epochs below)
+        // merge re-materializes at natural width. Compactions cut through
+        // DURABLE parquet roots (GraftCaches.durableCut — recoverable
+        // after the chain releases, and the precondition for pruning
+        // superseded epochs below)
         def genRoot(family: String): Option[String] =
-          if (deltaAppends) Some(s"$state/_gen/$family/b$batchId")
-          else None
+          Some(s"$state/_gen/$family/b$batchId")
         val servedDedup =
           if (rebanded) rebandedDedup
           else Dedup.compactDedupIndexIfFragmented(grownDedup,
             compactMaxPartitions, compactWidthFactor,
             durableRoot = genRoot("dedup"))._1
         dedupRef.set(servedDedup)
-        // copy-append mode rolls are self-contained: the superseded
-        // generation's frames are full standalone copies, released here.
-        // DELTA mode must not release them — the successor's lazy unions
-        // read the superseded generation's caches (the documented trade);
-        // chains release at a standalone cut / artifact-tier release.
-        if (!deltaAppends) {
-          // MATERIALIZE-BEFORE-RELEASE: the copy-append generation's
-          // member caches are lazy unions over the superseded caches —
-          // fill them while the parents still exist (cache-to-cache
-          // copy), or the first serving batch after the roll recomputes
-          // the standing lineage from source (the r15 ADVICE finding)
-          Dedup.materializeDedupIndex(servedDedup)
-          Dedup.releaseDedupIndex(dedupIx)
-          if (rebanded) grownDedup.bands.unpersist(false)
-          else if (servedDedup ne grownDedup) Dedup.releaseDedupIndex(grownDedup)
-        } else if (servedDedup.chain.isEmpty && grownDedup.chain.nonEmpty) {
-          // a policy cut a standalone generation: the pre-cut chain (base
-          // frames + every delta) is unreadable by any live handle now
+        // a routine roll releases nothing — the successor's lazy unions
+        // read the superseded generation's caches. When a policy cut a
+        // standalone generation, the pre-cut chain (base frames + every
+        // delta) is unreadable by any live handle: release it
+        if (servedDedup.chain.isEmpty) {
           grownDedup.chain.release()
           // compaction cuts are parquet-rooted → older gen roots are
           // unreferenced (reband cuts keep lineage: no prune)
@@ -306,9 +278,7 @@ object IngestServing {
         // semantics), then let the rebuild policy pick the geometry; when
         // it passes through, the compaction policy bounds scheduling width
         val (annIx, _) = annOpRef.get()
-        val grownAnn =
-          if (deltaAppends) Similarity.ivfPqIndexAppendDelta(annIx, survivors)
-          else Similarity.ivfPqIndexAppend(annIx, survivors)
+        val grownAnn = Similarity.ivfPqIndexAppend(annIx, survivors)
         val (rebuiltAnn, np, rebuilt) = Similarity.ivfPqRebuildIfStale(grownAnn,
           m, ksub, coarseIters, pqIters, geometryFactor)
         val served =
@@ -317,33 +287,24 @@ object IngestServing {
             compactMaxPartitions, compactWidthFactor,
             durableRoot = genRoot("ann"))._1
         annOpRef.set((served, np))
-        if (!deltaAppends) {
-          // materialize-before-release (see the dedup roll above): the
-          // copy-append unions and their serving pivot must fill from
-          // the still-cached predecessor, not from source on first serve
-          Similarity.materializeIndexData(served)
-          Similarity.releaseIndexData(annIx)
-          if (rebuilt || (served ne grownAnn)) Similarity.releaseIndexData(grownAnn)
-        } else {
-          // per-roll hygiene: the superseded generation's serving-pivot
-          // memo entry drops (its cached pieces stay — shared with the
-          // successor); on a policy cut the whole pre-cut chain releases
-          Similarity.dropCodesPivotEntry(annIx.codes)
-          if (served.chain.isEmpty && grownAnn.chain.nonEmpty) {
-            grownAnn.chain.release()
-            Similarity.dropCodesPivotEntry(grownAnn.codes)
-            // a COMPACTION cut is parquet-rooted: the superseded survivor
-            // epochs (the ANN deltas' lineage roots) and older gen roots
-            // are unreferenced by anything live — reclaim them in the
-            // same roll (the r13 unbounded-_survivors-growth finding).
-            // A REBUILD cut keeps lineage through the pre-cut chain, so
-            // it leaves the epochs to the next compaction cut.
-            if (!rebuilt) {
-              pruneEpochs(batch.sparkSession,
-                s"$state/_survivors", batchId)
-              pruneEpochs(batch.sparkSession,
-                s"$state/_gen/ann", batchId)
-            }
+        // per-roll hygiene: the superseded generation's serving-pivot
+        // memo entry drops (its cached pieces stay — shared with the
+        // successor); on a policy cut the whole pre-cut chain releases
+        Similarity.dropCodesPivotEntry(annIx.codes)
+        if (served.chain.isEmpty) {
+          grownAnn.chain.release()
+          Similarity.dropCodesPivotEntry(grownAnn.codes)
+          // a COMPACTION cut is parquet-rooted: the superseded survivor
+          // epochs (the ANN deltas' lineage roots) and older gen roots
+          // are unreferenced by anything live — reclaim them in the
+          // same roll (the r13 unbounded-_survivors-growth finding).
+          // A REBUILD cut keeps lineage through the pre-cut chain, so
+          // it leaves the epochs to the next compaction cut.
+          if (!rebuilt) {
+            pruneEpochs(batch.sparkSession,
+              s"$state/_survivors", batchId)
+            pruneEpochs(batch.sparkSession,
+              s"$state/_gen/ann", batchId)
           }
         }
         // roll the EMBEDDING catalog on the whole batch (seen-corpus
@@ -358,9 +319,7 @@ object IngestServing {
           val embIx = ref.get()
           val embBatch = batch.select(col("doc_id").as("vec_id"), col("embedding"))
           val grownEmb =
-            if (deltaAppends)
-              Dedup.embIndexAppendDelta(embIx, embBatch, col("vec_id"), col("embedding"))
-            else Dedup.embIndexAppend(embIx, embBatch, col("vec_id"), col("embedding"))
+            Dedup.embIndexAppend(embIx, embBatch, col("vec_id"), col("embedding"))
           val (rebuiltEmb, rebucketed) =
             Dedup.rebuildEmbIndexIfStale(grownEmb, embTargetBucket)
           val servedEmb =
@@ -369,11 +328,7 @@ object IngestServing {
               compactMaxPartitions, compactWidthFactor,
               durableRoot = genRoot("emb"))._1
           ref.set(servedEmb)
-          if (!deltaAppends) {
-            Dedup.materializeEmbIndex(servedEmb) // materialize-before-release
-            Dedup.releaseEmbIndex(embIx)
-            if (servedEmb ne grownEmb) Dedup.releaseEmbIndex(grownEmb)
-          } else if (servedEmb.chain.isEmpty && grownEmb.chain.nonEmpty) {
+          if (servedEmb.chain.isEmpty) {
             grownEmb.chain.release()
             if (!rebucketed) pruneEpochs(batch.sparkSession,
               s"$state/_gen/emb", batchId)
@@ -388,18 +343,12 @@ object IngestServing {
         phashRef.foreach { ref =>
           val phIx = ref.get()
           val media = batch.select(col("doc_id").as("media_id"), col("payload"))
-          val grownPh =
-            if (deltaAppends) Multimodal.phashIndexAppendDelta(phIx, media)
-            else Multimodal.phashIndexAppend(phIx, media)
+          val grownPh = Multimodal.phashIndexAppend(phIx, media)
           val (servedPh, _) = Multimodal.compactPhashIndexIfFragmented(grownPh,
             compactMaxPartitions, compactWidthFactor,
             durableRoot = genRoot("phash"))
           ref.set(servedPh)
-          if (!deltaAppends) {
-            Multimodal.materializePhashIndex(servedPh) // materialize-before-release
-            Multimodal.releasePhashIndex(phIx)
-            if (servedPh ne grownPh) Multimodal.releasePhashIndex(grownPh)
-          } else if (servedPh.chain.isEmpty && grownPh.chain.nonEmpty) {
+          if (servedPh.chain.isEmpty) {
             grownPh.chain.release()
             // phash cuts are always compaction-fired (no geometry policy)
             pruneEpochs(batch.sparkSession,

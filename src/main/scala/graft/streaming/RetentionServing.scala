@@ -117,14 +117,14 @@ object RetentionServing {
             compactMaxPartitions, compactWidthFactor,
             compactMinRowsPerPartition)._1
         dedupRef.set(servedD)
-        // materialize-before-release (the IngestServing copy-roll
-        // contract): remove paths leave member caches lazy — fill them
-        // from the still-cached predecessor before it releases
+        // materialize-before-release: remove paths leave member caches
+        // lazy — fill them from the still-cached predecessor before it
+        // (and, for a delta generation, its whole chain) releases
         Dedup.materializeDedupIndex(servedD)
         Dedup.releaseDedupIndex(dedupIx)
         // on reband the staged frame is SHARED with the served catalog —
-        // release the superseded band frame alone (the IngestServing
-        // contract); on compaction both shrunk frames are superseded
+        // release the superseded band frame alone; on compaction both
+        // shrunk frames are superseded
         if (rebandFired) shrunkD.bands.unpersist(false)
         else if (servedD ne shrunkD) Dedup.releaseDedupIndex(shrunkD)
         // ANN index: remove → geometry policy → compaction policy

@@ -37,15 +37,11 @@ import graft.streaming.IngestServing
   */
 object IngestProbe {
   def main(args: Array[String]): Unit = {
-    // usage: IngestProbe [nBatches] [delta] [compact=N] — `delta` routes
-    // the stream's index rolls through the delta-append path (batch-sized
-    // appends); `compact=N` pins the compaction policy's width bound so a
-    // long drain exercises mid-stream standalone cuts (and, in delta
-    // mode, the chain releases they trigger); the default measures the
-    // copy-on-append baseline
-    val nBatches = args.filterNot(a => a == "delta" || a.startsWith("compact="))
+    // usage: IngestProbe [nBatches] [compact=N] — `compact=N` pins the
+    // compaction policy's width bound so a long drain exercises
+    // mid-stream standalone cuts (and the chain releases they trigger)
+    val nBatches = args.filterNot(_.startsWith("compact="))
       .headOption.map(_.toInt).getOrElse(16)
-    val delta = args.contains("delta")
     val compactBound = args.find(_.startsWith("compact="))
       .map(_.stripPrefix("compact=").toInt)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -89,7 +85,7 @@ object IngestProbe {
     val annOpRef = new AtomicReference((ann0, np0))
     val q = IngestServing.startIngestStream(spark, batchDir, dedupRef, annOpRef,
       threshold = 0.5, pairsOutDir = pairsDir, maxFilesPerTrigger = 1,
-      deltaAppends = delta, compactMaxPartitions = compactBound)
+      compactMaxPartitions = compactBound)
     val t0 = System.nanoTime()
     q.processAllAvailable()
     val wall = (System.nanoTime() - t0) / 1e9
@@ -109,14 +105,14 @@ object IngestProbe {
     val batchesJson = progress.map { case (id, rows, sec) =>
       f"""{"batch":$id,"rows":$rows,"sec":$sec%.3f}""" }.mkString("[", ",", "]")
     // cut evidence for the long-drain protocol: the final catalog width
-    // (a fired compaction re-materializes at ≤ the bound) and, in delta
-    // mode, the live chain depth — bounded by deltas SINCE the last cut,
+    // (a fired compaction re-materializes at ≤ the bound) and the live
+    // chain depth — bounded by deltas SINCE the last cut,
     // so a value well under 2·nBatches proves mid-drain cuts released
     // their superseded chains
     val finalWidth = dedupRef.get().bands.rdd.getNumPartitions
     val chainDepth = dedupRef.get().chain.frames.size
     println(
-      f"""{"metric":"ingest_probe","mode":"${if (delta) "delta" else "copy"}",""" +
+      f"""{"metric":"ingest_probe",""" +
       f""""sf":"$sfDir","n_batches":${progress.length},""" +
       f""""wall_sec":$wall%.1f,"median_first_half_sec":$m1%.3f,""" +
       f""""median_second_half_sec":$m2%.3f,"trend_ratio":${if (m1 > 0) m2 / m1 else 0.0}%.3f,""" +

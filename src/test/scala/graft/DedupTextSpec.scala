@@ -104,9 +104,12 @@ class DedupTextSpec extends AnyFunSuite {
     val grown = Dedup.dedupIndexAppend(index,
       docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"))
     assert(grown.staged.count() == 25 && grown.bands.count() == 25 * 16)
-    Dedup.releaseDedupIndex(index, blocking = true)
-    assert(index.staged.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "released generation must drop its caches")
+    // a delta generation reads its predecessor's caches: the base frames
+    // ride its chain and stay resident (nothing releases after an append)
+    assert(grown.chain.frames.take(2) == Seq(index.staged, index.bands) &&
+      grown.chain.frames.forall(
+        _.storageLevel != org.apache.spark.storage.StorageLevel.NONE),
+      "the appended generation's chain must hold its base and delta caches")
     val batch2 = Seq((100L, "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo0"))
       .toDF("doc_id", "text")
     val inc2 = Dedup.incrementalMinHashPairs(grown, batch2,
@@ -1091,5 +1094,36 @@ class DedupTextSpec extends AnyFunSuite {
     assert(Dedup.embQuarantineBudgetBound(all8, Long.MaxValue / 4) == hottest)
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()
+  }
+
+  test("simhash secondary key at maxHamming = 10 (66 tables) compiles inside the 64 KB method limit") {
+    // the quarantine's secondary tier re-keys hot rep buckets on the
+    // band's complement bits, computed by one function of band_idx, so
+    // no per-band expression over all 66 bands reaches generated code. With
+    // the interpreter fallback off, an oversized generated method fails
+    // the query instead of logging and falling back
+    val (blocks, m) = Dedup.bandGeometry(10)
+    assert((0 until blocks).combinations(m).size == 66)
+    val clone = "the quick brown fox jumps over the lazy dog again and again"
+    val docs = ((1L to 12L).map(i => (i, clone)) ++ Seq(
+      (20L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (21L, "alpha beta gamma delta epsilon zeta eta iota"),
+      (30L, "zx9 qq7 kk3 mm1 plutonium"))).toDF("doc_id", "text")
+    val sims = graft.GraftCaches.persisted(
+      Dedup.simHash(docs, col("doc_id"), col("text")))
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("id1", "id2", "hamming").as[(Long, Long, Int)].collect().toSet
+    val plain = pairSet(Dedup.simHashPairs(sims, maxHamming = 10))
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      for (bound <- Seq(6L, 1L))
+        assert(pairSet(Dedup.simHashPairsQuarantined(sims, 10, bound)) == plain,
+          s"quarantined(bound=$bound) diverged from the plain run")
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      graft.GraftCaches.unpersistAll(blocking = true)
+    }
   }
 }

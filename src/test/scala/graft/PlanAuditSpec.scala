@@ -144,34 +144,56 @@ class PlanAuditSpec extends AnyFunSuite {
     graft.GraftCaches.releaseArtifacts()
   }
 
-  test("minhash_incremental: verification reads the standing shingle cache once, explodes no shingles") {
-    import org.apache.spark.sql.execution.GenerateExec
+  test("minhash_incremental(_quarantined): verification reads the standing shingle cache once; only quarantined members' shingles explode") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
     import graft.functions.Dedup
-    val plan = SparkEntry.queries("minhash_incremental")(spark, dir)
-      .queryExecution.executedPlan
-    // the gate's standing index, from the build-once memo
+    // both gates serve the same standing index, from the build-once memo
     val docs = graft.sources.Tables.documents(spark, dir)
     val index = Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
       col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
     val staged = index.staged.queryExecution.withCachedData
       .collectFirst { case r: InMemoryRelation => r.cacheBuilder }.get
     val helper = new AdaptiveSparkPlanHelper {}
-    // walks the operators only (not the plans inside the cached
-    // relations, whose band explode ran when they were filled)
-    val shingleExplodes = helper.collect(plan) {
-      case g: GenerateExec
-          if g.generator.references.exists(_.name == "__sh") => g
+    def isShingleExplode(p: SparkPlan): Boolean = p match {
+      case g: GenerateExec => g.generator.references.exists(_.name == "__sh")
+      case _ => false
     }
-    assert(shingleExplodes.isEmpty,
-      s"verification explodes shingle arrays:\n$plan")
-    val stagedScans = helper.collect(plan) {
-      case s: InMemoryTableScanExec if s.relation.cacheBuilder eq staged => s
+    def readsStaged(p: SparkPlan): Boolean = helper.find(p) {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder eq staged
+      case _ => false
+    }.isDefined
+    // the operators of a plan AND of every cached relation it reads
+    def withCached(p: SparkPlan): Seq[SparkPlan] = {
+      val ops = helper.collect(p) { case o => o }
+      ops ++ ops.flatMap {
+        case s: InMemoryTableScanExec => withCached(s.relation.cachedPlan)
+        case _ => Nil
+      }
     }
-    assert(stagedScans.size == 1,
-      s"the standing staged cache is scanned ${stagedScans.size} times:\n$plan")
+    for (gate <- Seq("minhash_incremental", "minhash_incremental_quarantined")) {
+      val plan = SparkEntry.queries(gate)(spark, dir).queryExecution.executedPlan
+      // a shingle explode over the standing catalog must sit above a join
+      // to the member ids it needs — never over the whole corpus (cached
+      // or not)
+      val corpusExplodes = withCached(plan).filter(g => isShingleExplode(g) &&
+        readsStaged(g) && helper.find(g)(_.isInstanceOf[BaseJoinExec]).isEmpty)
+      assert(corpusExplodes.isEmpty,
+        s"$gate explodes the standing corpus's shingles:\n${corpusExplodes.mkString("\n")}")
+      // walks the operators only (not the plans inside the cached
+      // relations, whose band explode ran when they were filled)
+      val stagedScans = helper.collect(plan) {
+        case s: InMemoryTableScanExec if s.relation.cacheBuilder eq staged => s
+      }
+      assert(stagedScans.size == 1,
+        s"$gate: the standing staged cache is scanned ${stagedScans.size} times:\n$plan")
+      if (gate == "minhash_incremental")
+        assert(helper.collect(plan) { case g if isShingleExplode(g) => g }.isEmpty,
+          s"verification explodes shingle arrays:\n$plan")
+    }
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()
   }

@@ -288,18 +288,24 @@ class SimilaritySpec extends AnyFunSuite {
     for (j <- 0 until 6)
       assert(sig(served(j + 100L)) == sig(j.toLong),
         s"twin ${j + 100}'s top-1 ${served(j + 100L)} is not ADC-equal to its duplicate $j")
-    // generation rollover: releasing the SUPERSEDED generation's data
-    // caches must leave the grown index fully serviceable (shared
-    // quantizer frames untouched; unpinned data recomputes from lineage)
-    Similarity.releaseIndexData(built, blocking = true)
-    val reServed = Similarity.ivfPqTopKIndexed(twins, grown, k = 1, nProbe = 4)
+    // generation rollover at a CUT: the appended generation reads the
+    // built one's caches, so release waits for a standalone successor —
+    // compaction cuts one, and releasing the pre-cut generation (its
+    // chain: the built data caches plus the deltas) must leave it
+    // serving identically (shared quantizer frames untouched)
+    val cut = Similarity.compactIvfPqIndex(grown)
+    assert(cut.chain.isEmpty && grown.chain.nonEmpty)
+    Similarity.releaseIndexData(grown, blocking = true)
+    assert(grown.chain.frames.forall(
+      _.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
+    val reServed = Similarity.ivfPqTopKIndexed(twins, cut, k = 1, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
     assert(reServed == served,
-      "grown index must serve identically after the old generation's release")
+      "the cut successor must serve identically after the chain's release")
     // appending a CLASHING id must fail fast, not corrupt ADC sums
     val clash = Seq((3L, base(3)._2)).toDF("vec_id", "embedding")
     assertThrows[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(grown, clash)
+      Similarity.ivfPqIndexAppend(cut, clash)
     }
     // a vec_id repeated WITHIN the batch must fail the same way — it
     // passes the corpus-clash join yet would union two code sets under
@@ -307,7 +313,7 @@ class SimilaritySpec extends AnyFunSuite {
     val intra = Seq((300L, base(0)._2), (300L, base(1)._2))
       .toDF("vec_id", "embedding")
     assertThrows[IllegalArgumentException] {
-      Similarity.ivfPqIndexAppend(grown, intra)
+      Similarity.ivfPqIndexAppend(cut, intra)
     }
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()

@@ -214,7 +214,7 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("append-while-serving: generation rollover under a live stream, superseded generation released") {
+  test("append-while-serving: delta generation rolls under a live stream; a compaction cut releases the superseded chain") {
     import java.nio.file.Files
     import org.apache.spark.storage.StorageLevel
     import graft.functions.Similarity
@@ -222,12 +222,14 @@ class StreamingSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, dir)
     val qA = emb.filter(col("vec_id") % 20 === 0).select(col("vec_id"), col("embedding"))
     val qB = emb.filter(col("vec_id") % 20 === 10).select(col("vec_id"), col("embedding"))
+    val qC = emb.filter(col("vec_id") % 20 === 5).select(col("vec_id"), col("embedding"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSet
     // generation 1 trains on the 80% split; the other 20% appends mid-stream
     val g1 = Similarity.buildIvfPqIndex(emb.filter(col("vec_id") % 5 =!= 0),
       nCentroids = 4, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
-    val truthA = Similarity.ivfPqTopKIndexed(qA, g1, k = 3, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-      .toSet
+    val truthA = rows(Similarity.ivfPqTopKIndexed(qA, g1, k = 3, nProbe = 2))
     val qDir = Files.createTempDirectory("ann_roll_q").toString
     val outDir = Files.createTempDirectory("ann_roll_out").toString + "/res"
     qA.coalesce(1).write.mode("append").parquet(qDir)
@@ -237,35 +239,44 @@ class StreamingSpec extends AnyFunSuite {
     try {
       q.processAllAvailable() // batch 1 serves generation 1
       // ROLLOVER while the stream is live: append generation 2 through the
-      // frozen quantizers, swap the served reference, release g1's
-      // data-tier caches (quantizers are shared with g2 and stay)
+      // frozen quantizers and swap the served reference — nothing
+      // releases, g2's members are lazy unions over g1's caches
       val g2 = Similarity.ivfPqIndexAppend(g1, emb.filter(col("vec_id") % 5 === 0))
-      val truthB = Similarity.ivfPqTopKIndexed(qB, g2, k = 3, nProbe = 2)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSet
+      val truthB = rows(Similarity.ivfPqTopKIndexed(qB, g2, k = 3, nProbe = 2))
+      val truthC = rows(Similarity.ivfPqTopKIndexed(qC, g2, k = 3, nProbe = 2))
       ref.set(g2)
-      Similarity.releaseIndexData(g1, blocking = true)
-      // storage back at baseline for the superseded generation...
-      assert(g1.corpus.storageLevel == StorageLevel.NONE
-        && g1.assigned.storageLevel == StorageLevel.NONE
-        && g1.codes.storageLevel == StorageLevel.NONE,
-        "released generation must hold no data-tier cache")
-      // ...while the live generation (and the shared quantizers) stay resident
-      assert(g2.corpus.storageLevel != StorageLevel.NONE
-        && g2.codes.storageLevel != StorageLevel.NONE,
-        "live generation must stay resident across the roll")
+      // the superseded generation stays resident: it rides g2's chain
+      assert(g1.corpus.storageLevel != StorageLevel.NONE
+        && g1.assigned.storageLevel != StorageLevel.NONE
+        && g1.codes.storageLevel != StorageLevel.NONE,
+        "an appended generation's predecessor must stay cached")
+      assert(Seq(g1.corpus, g1.assigned, g1.codes).forall(g2.chain.frames.contains)
+        && g2.chain.frames.forall(_.storageLevel != StorageLevel.NONE),
+        "g2's chain must hold g1's data caches and its own cached deltas")
       assert(g2.centroids eq g1.centroids,
         "generations share the frozen coarse quantizer frame")
       qB.coalesce(1).write.mode("append").parquet(qDir)
       q.processAllAvailable() // batch 2 serves generation 2
-      val streamed = spark.read.parquet(outDir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSet
+      // CUT: compaction returns a standalone generation; after the swap
+      // the pre-cut chain is unread by any live handle and releases
+      val g3 = Similarity.compactIvfPqIndex(g2)
+      assert(g3.chain.isEmpty, "compaction must cut a standalone generation")
+      ref.set(g3)
+      Similarity.releaseIndexData(g2, blocking = true)
+      assert(g2.chain.frames.forall(_.storageLevel == StorageLevel.NONE),
+        "the released chain must hold no data-tier cache")
+      assert(rows(Similarity.ivfPqTopKIndexed(qB, g3, k = 3, nProbe = 2)) == truthB,
+        "the cut successor must serve exactly what g2 served")
+      qC.coalesce(1).write.mode("append").parquet(qDir)
+      q.processAllAvailable() // batch 3 serves the cut generation
+      val streamed = rows(spark.read.parquet(outDir))
       // pre-roll rows ≡ batch serving on g1, post-roll rows ≡ batch
-      // serving on the GROWN index — the full output is their union
-      assert(streamed == truthA ++ truthB,
+      // serving on the GROWN index (before and after the cut) — the full
+      // output is their union
+      val truth = truthA ++ truthB ++ truthC
+      assert(streamed == truth,
         s"rollover stream != per-generation batch truth: " +
-          s"${streamed.diff(truthA ++ truthB)} vs ${(truthA ++ truthB).diff(streamed)}")
+          s"${streamed.diff(truth)} vs ${truth.diff(streamed)}")
       // the appended 20% really is servable post-roll: across 25 queries ×
       // top-3, at least one result comes from appended ids (vec_id%5==0)
       assert(truthB.exists(_._3 % 5 == 0),
@@ -1083,61 +1094,86 @@ class StreamingSpec extends AnyFunSuite {
     graft.streaming.ServingLocks.register(dedupB, new Object)
   }
 
-  test("delta-append ingest stream serves identically to copy-on-append") {
-    // the delta path changes only the CACHING LAYOUT (batch-sized
-    // checkpointed deltas + lazy unions + a seeded pivot union) — pair
-    // files and post-drain ANN serving must equal the copy path's bit for
-    // bit, including across a mid-stream policy-fired rebuild (the auto
-    // geometry of ~450 vectors fires on batch 1 against the 4-centroid
-    // standing index, so batch 2 delta-appends onto a rebuilt standalone
-    // base)
+  test("one-drain ingest stream at the default compaction bound equals the batch composition across a mid-stream rebuild") {
+    // appends are delta generations (batch-sized caches + lazy unions + a
+    // seeded pivot union): the pair files and post-drain ANN serving must
+    // equal the batch composition of the same entry points, including
+    // across a mid-stream policy-fired rebuild (the auto geometry of ~450
+    // vectors fires on batch 1 against the 4-centroid standing index, so
+    // batch 2 appends onto a rebuilt standalone base). Both files are
+    // staged before the drain and the compaction bound is the default.
     import java.nio.file.Files
     import graft.functions.{Dedup, Similarity}
     import graft.streaming.IngestServing
     import spark.implicits._
     val dir = "/root/testdata/sf0.001"
-    def runMode(delta: Boolean): (Set[(Long, Long)], Set[(Long, Long, Long, Double)]) = {
-      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-      val emb = Tables.embeddings(spark, dir)
-      val ingest = docs.join(emb.withColumnRenamed("vec_id", "doc_id")
-        .select(col("doc_id"), col("embedding")), Seq("doc_id"))
-      val corpus = ingest.filter(col("doc_id") % 5 =!= 0)
-      val dedup0 = Dedup.buildDedupIndex(corpus.select(col("doc_id"), col("text")),
-        col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
-      val ann0 = Similarity.buildIvfPqIndex(
-        corpus.select(col("doc_id").as("vec_id"), col("embedding")),
-        nCentroids = 4, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
-      val batchDir = Files.createTempDirectory("ingest_delta_in").toString
-      val pairsDir = Files.createTempDirectory("ingest_delta_out").toString + "/pairs"
-      val dedupRef = new java.util.concurrent.atomic.AtomicReference(dedup0)
-      val annOpRef = new java.util.concurrent.atomic.AtomicReference((ann0, 2))
-      ingest.filter(col("doc_id") % 10 === 0).coalesce(1).write.mode("append").parquet(batchDir)
-      ingest.filter(col("doc_id") % 10 === 5).coalesce(1).write.mode("append").parquet(batchDir)
-      val q = IngestServing.startIngestStream(spark, batchDir, dedupRef, annOpRef,
-        threshold = 0.5, pairsOutDir = pairsDir, m = 4, ksub = 8,
-        deltaAppends = delta)
-      try {
-        q.processAllAvailable()
-        assert(q.exception.isEmpty, s"deltaAppends=$delta: ${q.exception}")
-      } finally q.stop()
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val emb = Tables.embeddings(spark, dir)
+    val ingest = docs.join(emb.withColumnRenamed("vec_id", "doc_id")
+      .select(col("doc_id"), col("embedding")), Seq("doc_id"))
+    val corpus = ingest.filter(col("doc_id") % 5 =!= 0)
+    val dedup0 = Dedup.buildDedupIndex(corpus.select(col("doc_id"), col("text")),
+      col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
+    val ann0 = Similarity.buildIvfPqIndex(
+      corpus.select(col("doc_id").as("vec_id"), col("embedding")),
+      nCentroids = 4, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
+    val batchDir = Files.createTempDirectory("ingest_delta_in").toString
+    val pairsDir = Files.createTempDirectory("ingest_delta_out").toString + "/pairs"
+    val dedupRef = new java.util.concurrent.atomic.AtomicReference(dedup0)
+    val annOpRef = new java.util.concurrent.atomic.AtomicReference((ann0, 2))
+    val b1 = ingest.filter(col("doc_id") % 10 === 0)
+    val b2 = ingest.filter(col("doc_id") % 10 === 5)
+    b1.coalesce(1).write.mode("append").parquet(batchDir)
+    b2.coalesce(1).write.mode("append").parquet(batchDir)
+    val q = IngestServing.startIngestStream(spark, batchDir, dedupRef, annOpRef,
+      threshold = 0.5, pairsOutDir = pairsDir, m = 4, ksub = 8)
+    try {
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"ingest stream died: ${q.exception}")
+    } finally q.stop()
+    try {
       val pairs = spark.read.parquet(pairsDir)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val (ix, np) = annOpRef.get()
-      val served = Similarity.ivfPqTopKIndexed(
-          emb.filter(col("vec_id") % 50 === 0), ix, 3, np)
-        .select(col("q_id").cast("long"), col("rank").cast("long"),
-          col("c_id").cast("long"), col("cos"))
-        .as[(Long, Long, Long, Double)].collect().toSet
+      val full = Dedup.minHashDedupPairs(docs, col("doc_id"), col("text"),
+          numHashes = 32, bands = 16, threshold = 0.5, shingleK = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val expected = full.filter(p => p._1 % 5 == 0 || p._2 % 5 == 0)
+      assert(pairs == expected && pairs.nonEmpty,
+        s"pair files != restricted full run: ${pairs.diff(expected)} vs ${expected.diff(pairs)}")
+      // the batch composition: pairs → keep-first → append survivors →
+      // rebuild-if-stale, per batch, over the same splits
+      var dIx = dedup0
+      var aIx = ann0
+      var np = 2
+      val fired = Seq(b1, b2).map { b =>
+        val bd = b.select(col("doc_id"), col("text"))
+        val bPairs = Dedup.incrementalMinHashPairs(dIx, bd,
+          col("doc_id"), col("text"), threshold = 0.5)
+        val survivors = b
+          .join(IngestServing.keepFirstDropped(bPairs, bd), Seq("doc_id"), "left_anti")
+          .select(col("doc_id").as("vec_id"), col("embedding"))
+        dIx = Dedup.dedupIndexAppend(dIx, bd, col("doc_id"), col("text"))
+        val (served, npNew, rebuilt) = Similarity.ivfPqRebuildIfStale(
+          Similarity.ivfPqIndexAppend(aIx, survivors),
+          m = 4, ksub = 8, coarseIters = 1, pqIters = 1)
+        aIx = served; np = npNew
+        rebuilt
+      }
+      assert(fired.head, "the rebuild policy must fire on batch 1")
+      def served(ix: Similarity.IvfPqIndex, nProbe: Int) =
+        Similarity.ivfPqTopKIndexed(emb.filter(col("vec_id") % 50 === 0), ix, 3, nProbe)
+          .select(col("q_id").cast("long"), col("rank").cast("long"),
+            col("c_id").cast("long"), col("cos"))
+          .as[(Long, Long, Long, Double)].collect().toSet
+      val (ix, npStream) = annOpRef.get()
+      assert(npStream == np, s"operating point diverged: stream np=$npStream batch np=$np")
+      val streamServed = served(ix, npStream)
+      assert(streamServed == served(aIx, np) && streamServed.nonEmpty,
+        "post-drain ANN serving diverges from the batch composition")
+    } finally {
       GraftCaches.unpersistAll(blocking = true)
       GraftCaches.releaseArtifacts(blocking = true)
-      (pairs, served)
     }
-    val (copyPairs, copyServed) = runMode(delta = false)
-    val (deltaPairs, deltaServed) = runMode(delta = true)
-    assert(copyPairs == deltaPairs && copyPairs.nonEmpty,
-      s"pair files diverge: ${copyPairs.diff(deltaPairs)} vs ${deltaPairs.diff(copyPairs)}")
-    assert(copyServed == deltaServed && copyServed.nonEmpty,
-      "post-drain ANN serving diverges between append modes")
   }
 
   test("delta chains: a policy cut returns a standalone generation; the superseded chain releases as one unit") {
@@ -1154,9 +1190,9 @@ class StreamingSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     val base = Dedup.buildDedupIndex(docs.filter(col("doc_id") % 3 === 0),
       col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
-    val d1 = Dedup.dedupIndexAppendDelta(base,
+    val d1 = Dedup.dedupIndexAppend(base,
       docs.filter(col("doc_id") % 3 === 1), col("doc_id"), col("text"))
-    val d2 = Dedup.dedupIndexAppendDelta(d1,
+    val d2 = Dedup.dedupIndexAppend(d1,
       docs.filter(col("doc_id") % 3 === 2), col("doc_id"), col("text"))
     // rolled counter: base count + both batches, with zero standing scans
     assert(d2.rows.contains(docs.count()),
@@ -1192,7 +1228,7 @@ class StreamingSpec extends AnyFunSuite {
     // chain empty, banding at the derived geometry
     val legacy = Dedup.buildDedupIndex(docs.filter(col("doc_id") % 3 === 0),
       col("doc_id"), col("text"), numHashes = 32, nBands = 8, shingleK = 3)
-    val l1 = Dedup.dedupIndexAppendDelta(legacy,
+    val l1 = Dedup.dedupIndexAppend(legacy,
       docs.filter(col("doc_id") % 3 =!= 0), col("doc_id"), col("text"))
     val (rebanded, rbFired) = Dedup.rebuildCatalogIfStale(l1, threshold = 0.5)
     assert(rbFired && rebanded.chain.isEmpty && rebanded.nBands == 16)
@@ -1250,7 +1286,7 @@ class StreamingSpec extends AnyFunSuite {
     val q1 = IngestServing.startIngestStream(spark, batchDir, dedupRef,
       annOpRef, threshold = 0.5, pairsDir, ingestSchema = schema,
       checkpointLocation = Some(ckptDir), m = 4, ksub = 8,
-      deltaAppends = true, phashRef = Some(phRef))
+      phashRef = Some(phRef))
     q1.processAllAvailable()
     assert(q1.exception.isEmpty, s"delta b1: ${q1.exception}")
     q1.stop()
@@ -1280,13 +1316,13 @@ class StreamingSpec extends AnyFunSuite {
     val q2 = IngestServing.startIngestStream(spark, batchDir, dedupRef,
       annOpRef, threshold = 0.5, pairsDir, ingestSchema = schema,
       checkpointLocation = Some(ckptDir), m = 4, ksub = 8,
-      deltaAppends = true, phashRef = Some(phRef))
+      phashRef = Some(phRef))
     try {
       q2.processAllAvailable()
       assert(q2.exception.isEmpty,
         s"delta restart replayed a committed batch into the id guards: ${q2.exception}")
-      // text-pair contract across the restart boundary (the copy-mode
-      // restart test's oracle, now under delta lifecycle)
+      // text-pair contract across the restart boundary (the composed
+      // restart test's oracle)
       val full = Dedup.minHashDedupPairs(docs, col("doc_id"), col("text"),
           numHashes = 32, bands = 16, threshold = 0.5, shingleK = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -1359,7 +1395,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = IngestServing.startIngestStream(spark, batchDir, dedupRef,
       annOpRef, threshold = 0.5, pairsDir, m = 4, ksub = 8,
       geometryFactor = 100.0,
-      compactMaxPartitions = Some(annWidth0 + 1), deltaAppends = true)
+      compactMaxPartitions = Some(annWidth0 + 1))
     // the stream's own state lives under IngestServing.stateRoot, outside
     // the pairs sink's recacheByPath prefix
     def stateDir(sub: String): java.io.File = new java.io.File(
@@ -1442,7 +1478,7 @@ class StreamingSpec extends AnyFunSuite {
     // ANN members stay chained unions (base ∪ one delta per batch)
     val q = IngestServing.startIngestStream(spark, batchDir, dedupRef,
       annOpRef, threshold = 0.5, pairsDir, m = 4, ksub = 8,
-      geometryFactor = 100.0, deltaAppends = true)
+      geometryFactor = 100.0)
     val nBatches = 4
     try {
       try {
@@ -1487,6 +1523,109 @@ class StreamingSpec extends AnyFunSuite {
           s"the no-fire compaction read ran ${jobs.get} job(s) on the served index")
       } finally sc.removeSparkListener(listener)
     } finally {
+      GraftCaches.unpersistAll()
+      GraftCaches.releaseArtifacts()
+    }
+  }
+
+  test("delta-mode ingest and retention on one dedupRef: tombstones shrink a chained generation, the next batch dedups against the live corpus") {
+    // retention against DELTA generations: after batch 1 the served
+    // catalog and index are lazy unions over shared caches (a chain), so
+    // a tombstone roll must cut them standalone, release the whole
+    // pre-retention chain, and leave batch 2 deduping against exactly
+    // the live corpus (standing ∪ batch 1 ∖ tombstoned)
+    import java.nio.file.Files
+    import org.apache.spark.storage.StorageLevel
+    import graft.functions.{Dedup, Similarity}
+    import graft.streaming.{IngestServing, RetentionServing}
+    import spark.implicits._
+    val dir = "/root/testdata/sf0.001"
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val emb = Tables.embeddings(spark, dir)
+    val ingest = docs.join(emb.withColumnRenamed("vec_id", "doc_id")
+      .select(col("doc_id"), col("embedding")), Seq("doc_id"))
+    val corpus = ingest.filter(col("doc_id") % 5 =!= 0)
+    val b1 = ingest.filter(col("doc_id") % 10 === 0)
+    val b2 = ingest.filter(col("doc_id") % 10 === 5)
+    def pairsOf(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minHashDedupPairs(d, col("doc_id"), col("text"),
+          numHashes = 32, bands = 16, threshold = 0.5, shingleK = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // tombstone one standing doc and one batch-1 doc, each preferring a
+    // doc that near-dups a batch-2 doc, so retention removes pairs batch
+    // 2 would otherwise emit
+    val fullPairs = pairsOf(ingest.select(col("doc_id"), col("text")))
+    def tombstoneOf(ids: Seq[Long]): Long =
+      fullPairs.toSeq.sorted.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .collectFirst { case (x, y) if ids.contains(x) && y % 10 == 5 => x }
+        .getOrElse(ids.min)
+    val tombStanding = tombstoneOf(
+      corpus.select(col("doc_id")).as[Long].collect().toSeq)
+    val tombB1 = tombstoneOf(b1.select(col("doc_id")).as[Long].collect().toSeq)
+    val tombstoned = Set(tombStanding, tombB1)
+    val dedup0 = Dedup.buildDedupIndex(corpus.select(col("doc_id"), col("text")),
+      col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
+    val (nc, np0) = Similarity.autoGeometry(corpus.count())
+    val ann0 = Similarity.buildIvfPqIndex(
+      corpus.select(col("doc_id").as("vec_id"), col("embedding")),
+      nCentroids = nc, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
+    val batchDir = Files.createTempDirectory("ingest_ret_in").toString
+    val tsDir = Files.createTempDirectory("ingest_ret_ts").toString
+    val pairsDir = Files.createTempDirectory("ingest_ret_out").toString + "/pairs"
+    val dedupRef = new java.util.concurrent.atomic.AtomicReference(dedup0)
+    val annOpRef = new java.util.concurrent.atomic.AtomicReference((ann0, np0))
+    // geometryFactor 100 keeps both rebuild policies silent, so batch 1
+    // leaves chained generations and retention is what cuts them
+    b1.coalesce(1).write.mode("append").parquet(batchDir)
+    val qi = IngestServing.startIngestStream(spark, batchDir, dedupRef,
+      annOpRef, threshold = 0.5, pairsDir, m = 4, ksub = 8,
+      geometryFactor = 100.0)
+    var qr: Option[org.apache.spark.sql.streaming.StreamingQuery] = None
+    try {
+      qi.processAllAvailable() // batch 1: delta appends, no policy cut
+      assert(qi.exception.isEmpty, s"ingest batch 1 died: ${qi.exception}")
+      val preChain = dedupRef.get().chain.frames ++ annOpRef.get()._1.chain.frames
+      assert(dedupRef.get().chain.nonEmpty && annOpRef.get()._1.chain.nonEmpty,
+        "batch 1 must leave chained generations for retention to shrink")
+      Seq(tombStanding, tombB1).toDF("doc_id")
+        .coalesce(1).write.mode("append").parquet(tsDir)
+      qr = Some(RetentionServing.startRetentionStream(spark, tsDir, dedupRef,
+        annOpRef, threshold = 0.5, m = 4, ksub = 8, geometryFactor = 100.0))
+      qr.get.processAllAvailable() // retention: remove both tombstones
+      assert(qr.get.exception.isEmpty, s"retention died: ${qr.get.exception}")
+      preChain.foreach(f => assert(f.storageLevel == StorageLevel.NONE,
+        "a pre-retention chain frame is still cached after the retention roll"))
+      val catalogIds = dedupRef.get().staged.select(col("doc_id")).as[Long]
+        .collect().toSet
+      assert(tombstoned.forall(!catalogIds.contains(_)),
+        "tombstoned docs must leave the dedup catalog")
+      b2.coalesce(1).write.mode("append").parquet(batchDir)
+      qi.processAllAvailable() // batch 2 against the shrunk catalog
+      assert(qi.exception.isEmpty, s"ingest batch 2 died: ${qi.exception}")
+      // batch 2's pairs (the only ones touching a % 10 == 5 doc) equal the
+      // full run over the live corpus restricted to batch-2 pairs
+      val live = ingest.select(col("doc_id"), col("text"))
+        .filter(!col("doc_id").isin(tombstoned.toSeq: _*))
+      val expected = pairsOf(live).filter(p => p._1 % 10 == 5 || p._2 % 10 == 5)
+      val streamed = spark.read.parquet(pairsDir)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .filter(p => p._1 % 10 == 5 || p._2 % 10 == 5).toSet
+      assert(streamed == expected,
+        s"batch-2 pairs != live-corpus run: " +
+          s"${streamed.diff(expected)} vs ${expected.diff(streamed)}")
+      // served ANN results never return a tombstoned id
+      val (annF, npF) = annOpRef.get()
+      val annIds = annF.corpus.select(col("c_id")).as[Long].collect().toSet
+      assert(tombstoned.forall(!annIds.contains(_)),
+        "tombstoned ids must leave the ANN corpus")
+      val served = Similarity.ivfPqTopKIndexed(
+          emb.filter(col("vec_id") % 20 === 0), annF, 3, npF)
+        .select(col("c_id").cast("long")).as[Long].collect()
+      assert(served.nonEmpty && !served.exists(tombstoned),
+        "no tombstoned id may appear in the served ranking")
+    } finally {
+      qi.stop()
+      qr.foreach(_.stop())
       GraftCaches.unpersistAll()
       GraftCaches.releaseArtifacts()
     }
