@@ -185,6 +185,49 @@ object GraftCaches {
     back
   }
 
+  private val fillTags = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Fill the caches under `frames` in ONE job and return each frame's
+    * row count, in argument order: one aggregate over the union of
+    * per-frame tagged zero-column projections, so every cached leaf
+    * fills on its scan. The job and everything it spawns run under a
+    * fresh job tag; if it fails, every job still running under the tag
+    * is cancelled and awaited before the error propagates, so a failed
+    * fill leaves no job running detached. */
+  def fill(frames: DataFrame*): Seq[Long] =
+    if (frames.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.functions.{col, count, lit, when}
+      val sc = frames.head.sparkSession.sparkContext
+      val tag = s"graft-fill-${fillTags.incrementAndGet()}"
+      val tagged = frames.zipWithIndex
+        .map { case (f, i) => f.select(lit(i).as("__fill")) }
+        .reduce(_ union _)
+      sc.addJobTag(tag)
+      try {
+        val counts = frames.indices.map(i => count(when(col("__fill") === i, 1)))
+        val row = tagged.agg(counts.head, counts.tail: _*).head()
+        frames.indices.map(row.getLong)
+      } catch {
+        case e: Throwable =>
+          sc.cancelJobsWithTag(tag)
+          val deadline = System.nanoTime() + 60L * 1000000000L
+          def running = sc.statusTracker.getJobIdsForTag(tag).exists(id =>
+            sc.statusTracker.getJobInfo(id)
+              .exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+          while (running && System.nanoTime() < deadline) Thread.sleep(10L)
+          throw e
+      } finally sc.removeJobTag(tag)
+    }
+
+  /** True when every cache under `df` holds all of its blocks (vacuously
+    * true for a frame that reads no cache) — filling it would run a job
+    * for nothing. */
+  def isFilled(df: DataFrame): Boolean =
+    df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.forall(_.cacheBuilder.isCachedColumnBuffersLoaded)
+
   private val artifactEvents = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** MONOTONE count of artifact-tier persists since JVM start — the
@@ -198,8 +241,8 @@ object GraftCaches {
   def artifactBuildEvents(): Long = artifactEvents.get()
 
   /** Register a hook run by [[releaseArtifacts]] BEFORE frames unpersist —
-    * builders use it to drop memo tables so no stale handle can serve a
-    * released artifact. */
+    * [[ArtifactMemo]] uses it to drop its entries so no stale handle can
+    * serve a released artifact. */
   def onArtifactRelease(hook: () => Unit): Unit = artifactHooks.add(hook)
 
   /** Release the artifact tier: run registered hooks (memo invalidation),

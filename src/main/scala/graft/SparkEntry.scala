@@ -243,11 +243,9 @@ object SparkEntry {
     "emb_index_save" -> ((s: SparkSession, dir: String) => {
       val path = savedEmbIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Dedup.saveEmbIndex(
-          Dedup.embIndexFor(
+        Dedup.embIndexFor(
             Tables.embeddings(s, dir).filter(col("vec_id") % 5 =!= 0),
-            col("vec_id"), col("embedding"), nPlanes = 4),
-          path)
+            col("vec_id"), col("embedding"), nPlanes = 4).save(path)
       }
       GraftCaches.unpersistAll(blocking = true)
       ()
@@ -259,10 +257,8 @@ object SparkEntry {
     "ann_index_save" -> ((s: SparkSession, dir: String) => {
       val path = savedIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Similarity.saveIvfPqIndex(
-          Similarity.ivfPqIndexFor(Tables.embeddings(s, dir),
-            nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1),
-          path)
+        Similarity.ivfPqIndexFor(Tables.embeddings(s, dir),
+            nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1).save(path)
       }
       GraftCaches.unpersistAll(blocking = true)
       ()
@@ -274,12 +270,10 @@ object SparkEntry {
     "dedup_index_save" -> ((s: SparkSession, dir: String) => {
       val path = savedDedupIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Dedup.saveDedupIndex(
-          Dedup.dedupIndexFor(
+        Dedup.dedupIndexFor(
             Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0),
             col("doc_id"), col("text"), numHashes = 32, nBands = 16,
-            shingleK = 3),
-          path)
+            shingleK = 3).save(path)
       }
       GraftCaches.unpersistAll(blocking = true)
       ()
@@ -315,12 +309,10 @@ object SparkEntry {
     "phash_index_save" -> ((s: SparkSession, dir: String) => {
       val path = savedPhashIndexPath(dir)
       if (!new java.io.File(path, "hashes").isDirectory) {
-        Multimodal.savePhashIndex(
-          Multimodal.phashIndexFor(
+        Multimodal.phashIndexFor(
             Multimodal.syntheticMediaFor(
               Tables.documents(s, dir).select(col("doc_id")))
-              .filter(col("media_id") % 5 =!= 0)),
-          path)
+              .filter(col("media_id") % 5 =!= 0)).save(path)
       }
       GraftCaches.unpersistAll(blocking = true)
       ()
@@ -810,7 +802,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val index = Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
         col("vec_id"), col("embedding"), nPlanes = 4)
-      val shrunk = Dedup.embIndexRemove(index,
+      val shrunk = index.remove(
         emb.filter(col("vec_id") % 5 =!= 0 && col("vec_id") % 7 === 0)
           .select(col("vec_id")))
       Dedup.incrementalEmbeddingNearDups(shrunk,
@@ -839,10 +831,10 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val index = Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
         col("vec_id"), col("embedding"), nPlanes = 4)
-      val shrunk = Dedup.embIndexRemove(index,
+      val shrunk = index.remove(
         emb.filter(col("vec_id") % 5 =!= 0 && col("vec_id") % 7 === 0)
           .select(col("vec_id")))
-      val compacted = Dedup.compactEmbIndex(shrunk)
+      val compacted = shrunk.compact()
       Dedup.incrementalEmbeddingNearDups(compacted,
           emb.filter(col("vec_id") % 5 === 0),
           col("vec_id"), col("embedding"), threshold = 0.3)
@@ -862,12 +854,10 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val path = savedEmbIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Dedup.saveEmbIndex(
-          Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
-            col("vec_id"), col("embedding"), nPlanes = 4),
-          path)
+        Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
+            col("vec_id"), col("embedding"), nPlanes = 4).save(path)
       }
-      val loaded = Dedup.loadEmbIndex(s, path)
+      val loaded = Dedup.EmbIndex.load(s, path)
       Dedup.incrementalEmbeddingNearDups(loaded,
           emb.filter(col("vec_id") % 5 === 0),
           col("vec_id"), col("embedding"), threshold = 0.3)
@@ -900,7 +890,7 @@ object SparkEntry {
 
     // COMPACTION POLICY on the embedding catalog — width-arm
     // detector→actuator (dedup_compact_policy's shape on the semantic
-    // tier, through the shared convergent CompactionPolicy arithmetic):
+    // tier, through the shared convergent StandingIndex policy arithmetic):
     // the standing corpus assembles as a base build (% 7 ≠ 0,
     // bench-setup `emb_base_build`) plus two appends, so the member
     // frame carries three generations of concatenated partitions and
@@ -919,7 +909,7 @@ object SparkEntry {
           standing.filter(col("vec_id") % 7 === 0 && col("vec_id") % 2 === j),
           col("vec_id"), col("embedding"))
       }
-      val (served, fired) = Dedup.compactEmbIndexIfFragmented(grown,
+      val (served, fired) = grown.compactIfFragmented(
         maxPartitions = Some(baseWidth + 1))
       require(fired, "embdedup_compact_policy gate: the width arm did not " +
         "fire — an uncompacted catalog would serve and gate nothing")
@@ -1300,13 +1290,11 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val path = savedDedupIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Dedup.saveDedupIndex(
-          Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
+        Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
             col("doc_id"), col("text"), numHashes = 32, nBands = 16,
-            shingleK = 3),
-          path)
+            shingleK = 3).save(path)
       }
-      val loaded = Dedup.loadDedupIndex(s, path)
+      val loaded = Dedup.DedupIndex.load(s, path)
       Dedup.incrementalMinHashPairs(loaded, docs.filter(col("doc_id") % 5 === 0),
           col("doc_id"), col("text"), threshold = 0.5)
         .orderBy(col("id1"), col("id2"))
@@ -1353,7 +1341,7 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val index = Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
         col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
-      val shrunk = Dedup.dedupIndexRemove(index,
+      val shrunk = index.remove(
         docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 7 === 0)
           .select(col("doc_id")))
       Dedup.incrementalMinHashPairs(shrunk, docs.filter(col("doc_id") % 5 === 0),
@@ -1364,7 +1352,7 @@ object SparkEntry {
     // CATALOG COMPACTION — the churn counterpart of the remove gate: k
     // appends concatenate k generations of partitions into every batch
     // bucket join and removes leave full-width mostly-empty scans;
-    // compactDedupIndex re-materializes staged on doc_id and bands on
+    // compact() re-materializes staged on doc_id and bands on
     // the bucket key (band_idx, band_hash) — the equi-join key every
     // daily batch probes, so the standing side's layout amortizes across
     // batches. Content untouched; pair sets are partition-independent
@@ -1374,17 +1362,17 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val index = Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
         col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
-      val shrunk = Dedup.dedupIndexRemove(index,
+      val shrunk = index.remove(
         docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 7 === 0)
           .select(col("doc_id")))
-      val compacted = Dedup.compactDedupIndex(shrunk)
+      val compacted = shrunk.compact()
       Dedup.incrementalMinHashPairs(compacted, docs.filter(col("doc_id") % 5 === 0),
           col("doc_id"), col("text"), threshold = 0.5)
         .orderBy(col("id1"), col("id2"))
     }),
 
     // COMPACTION POLICY on the catalog — the detector→actuator for the
-    // merge cadence (Dedup.compactDedupIndexIfFragmented; "every k
+    // merge cadence (StandingIndex.compactIfFragmented; "every k
     // batches" is the wrong trigger since batch sizes vary — the policy
     // reads scheduling width directly). The standing corpus
     // (doc_id % 5 ≠ 0) assembles as a base build plus two appends, so
@@ -1407,7 +1395,7 @@ object SparkEntry {
           standing.filter(col("doc_id") % 7 === 0 && col("doc_id") % 2 === j),
           col("doc_id"), col("text"))
       }
-      val (served, fired) = Dedup.compactDedupIndexIfFragmented(grown,
+      val (served, fired) = grown.compactIfFragmented(
         maxPartitions = Some(baseWidth + 1))
       require(fired, "dedup_compact_policy gate: the width arm did not " +
         "fire — an uncompacted catalog would serve and gate nothing")
@@ -1960,7 +1948,7 @@ object SparkEntry {
     }),
 
     // PHASH CATALOG PARQUET ROUNDTRIP — the cross-session image-ingest
-    // job (Multimodal.savePhashIndex/loadPhashIndex): the catalog's value
+    // job (StandingIndex save / PhashIndex.load): the catalog's value
     // is never re-decoding the corpus, so the standing state must survive
     // a process restart as 3 longs per image. Save rides the bench-setup
     // line (`phash_index_save`, build through the memo); this line
@@ -1974,18 +1962,16 @@ object SparkEntry {
         Tables.documents(s, dir).select(col("doc_id")))
       val path = savedPhashIndexPath(dir)
       if (!new java.io.File(path, "hashes").isDirectory) {
-        Multimodal.savePhashIndex(
-          Multimodal.phashIndexFor(media.filter(col("media_id") % 5 =!= 0)),
-          path)
+        Multimodal.phashIndexFor(media.filter(col("media_id") % 5 =!= 0)).save(path)
       }
-      val loaded = Multimodal.loadPhashIndex(s, path)
+      val loaded = Multimodal.PhashIndex.load(s, path)
       Multimodal.incrementalPhashPairs(loaded,
           media.filter(col("media_id") % 5 === 0), maxHamming = 6)
         .orderBy(col("id1"), col("id2"))
     }),
 
     // RETENTION DELETE on the phash catalog — the image tier's takedown
-    // verb (Multimodal.phashIndexRemove; the r13 symmetry gap: PII images
+    // verb (StandingIndex.remove; the r13 symmetry gap: PII images
     // had no path OUT of the standing state): standing media with
     // media_id % 7 == 0 leave via the broadcast anti-join, then the
     // standard incremental batch serves against the shrunk catalog.
@@ -1999,7 +1985,7 @@ object SparkEntry {
         Tables.documents(s, dir).select(col("doc_id")))
       val ix = Multimodal.phashIndexFor(
         media.filter(col("media_id") % 5 =!= 0))
-      val shrunk = Multimodal.phashIndexRemove(ix,
+      val shrunk = ix.remove(
         media.filter(col("media_id") % 5 =!= 0 && col("media_id") % 7 === 0)
           .select(col("media_id")))
       Multimodal.incrementalPhashPairs(shrunk,
@@ -2377,10 +2363,10 @@ object SparkEntry {
       val queries = emb.filter(col("vec_id") % 50 === 0)
       val path = savedIndexPath(dir)
       if (!new java.io.File(path, "meta").isDirectory) {
-        Similarity.saveIvfPqIndex(Similarity.ivfPqIndexFor(emb,
-          nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1), path)
+        Similarity.ivfPqIndexFor(emb,
+          nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1).save(path)
       }
-      val loaded = Similarity.loadIvfPqIndex(s, path)
+      val loaded = Similarity.IvfPqIndex.load(s, path)
       Similarity.ivfPqTopKIndexed(queries, loaded, 5, nProbe = 4)
         .orderBy(col("q_id"), col("rank"))
     }),
@@ -2406,7 +2392,7 @@ object SparkEntry {
 
     // ---------------------------------------------------------------
     // RETENTION DELETE on the standing ANN index — FAISS remove_ids
-    // semantics (Similarity.ivfPqIndexRemove): the full-corpus standing
+    // semantics (StandingIndex.remove): the full-corpus standing
     // index sheds vec_id % 5 == 0 through broadcast anti-joins on its
     // keyed frames (quantizers untouched — no remaining vector's
     // assignment or code changes), and the standard query set serves
@@ -2419,7 +2405,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val full = Similarity.ivfPqIndexFor(emb,
         nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1)
-      val shrunk = Similarity.ivfPqIndexRemove(full,
+      val shrunk = full.remove(
         emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
       require(shrunk.corpus.count() < full.corpus.count(),
         "ann_index_remove gate: removal did not shrink the corpus — a " +
@@ -2443,7 +2429,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       val full = Similarity.ivfPqIndexFor(emb,
         nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1)
-      val shrunk = Similarity.ivfPqIndexRemove(full,
+      val shrunk = full.remove(
         emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
       val updated = Similarity.ivfPqIndexAppend(shrunk,
         emb.filter(col("vec_id") % 5 === 0))
@@ -2456,7 +2442,7 @@ object SparkEntry {
     // ivfPqIndexAppend CONCATENATES a batch's partitions into the keyed
     // frames, so after k daily appends every serving scan schedules k×
     // the tasks and drags a k-deep union lineage through analysis,
-    // independent of data size. compactIvfPqIndex hash-repartitions
+    // independent of data size. compact() hash-repartitions
     // corpus/assigned/codes on c_id to the session parallelism and cuts
     // lineage at a fresh artifact boundary. Content untouched; serving
     // is partition-independent (suite-wide invariant), so
@@ -2468,14 +2454,14 @@ object SparkEntry {
         nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1)
       val appended = Similarity.ivfPqIndexAppend(base,
         emb.filter(col("vec_id") % 5 === 0))
-      val compacted = Similarity.compactIvfPqIndex(appended)
+      val compacted = appended.compact()
       Similarity.ivfPqTopKIndexed(emb.filter(col("vec_id") % 50 === 0),
           compacted, 5, nProbe = 4)
         .orderBy(col("q_id"), col("rank"))
     }),
 
     // COMPACTION POLICY on the ANN index — the merge-cadence actuator
-    // (Similarity.compactIvfPqIndexIfFragmented): the 20% append arrives
+    // (StandingIndex.compactIfFragmented): the 20% append arrives
     // as FOUR sub-batches (vec_id % 20 ∈ {0,5,10,15}), each repartitioned
     // to the width a production batch read actually has (at sf0.01 the
     // whole table is one parquet sliver, so an un-repartitioned batch
@@ -2499,7 +2485,7 @@ object SparkEntry {
         Similarity.ivfPqIndexAppend(ix,
           emb.filter(col("vec_id") % 20 === j * 5).repartition(16))
       }
-      val (served, fired) = Similarity.compactIvfPqIndexIfFragmented(appended,
+      val (served, fired) = appended.compactIfFragmented(
         maxPartitions = Some(baseWidth + 2))
       require(fired, "ann_compact_policy gate: the width arm did not fire " +
         "— an uncompacted index would serve and gate nothing")
@@ -2532,14 +2518,13 @@ object SparkEntry {
       // the emptiness arm and failing the require with a misleading
       // "arm did not fire" at tiny scales
       val buildDensity = math.max(1L, full.corpus.count() / width)
-      val shrunk = Similarity.ivfPqIndexRemove(full,
+      val shrunk = full.remove(
         emb.filter(col("vec_id") % 5 === 0).select(col("vec_id")))
       val (afterGeom, np, rebuilt) = Similarity.ivfPqRebuildIfStale(shrunk)
       require(!rebuilt, "retention_pipeline gate: a 20% deletion must not " +
         "trip the geometry policy — the no-fire arm is the exercised path")
-      val (served, fired) = Similarity.compactIvfPqIndexIfFragmented(
-        afterGeom, maxPartitions = Some(width),
-        minRowsPerPartition = buildDensity)
+      val (served, fired) = afterGeom.compactIfFragmented(
+        maxPartitions = Some(width), minRowsPerPartition = buildDensity)
       require(fired, "retention_pipeline gate: the emptiness arm did not " +
         "fire — removal at constant width must drop density below build's")
       Similarity.ivfPqTopKIndexed(emb.filter(col("vec_id") % 50 === 0),
@@ -2571,8 +2556,8 @@ object SparkEntry {
       // text catalog
       val dIx = Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
         col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
-      val dShrunk = Dedup.dedupIndexRemove(dIx, tomb)
-      require(dShrunk.rows.exists(_ < dIx.stagedRows),
+      val dShrunk = dIx.remove(tomb)
+      require(dShrunk.rows.exists(_ < dIx.rowCount),
         "retention_pipeline_full: the dedup removal was a no-op")
       val dOut = Dedup.incrementalMinHashPairs(dShrunk,
           docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"),
@@ -2582,9 +2567,8 @@ object SparkEntry {
       // embedding catalog
       val eIx = Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
         col("vec_id"), col("embedding"), nPlanes = 4)
-      val eShrunk = Dedup.embIndexRemove(eIx,
-        tomb.select(col("doc_id").as("vec_id")))
-      require(eShrunk.rows.exists(_ < eIx.vecRows),
+      val eShrunk = eIx.remove(tomb.select(col("doc_id").as("vec_id")))
+      require(eShrunk.rows.exists(_ < eIx.rowCount),
         "retention_pipeline_full: the embedding removal was a no-op")
       val eOut = Dedup.incrementalEmbeddingNearDups(eShrunk,
           emb.filter(col("vec_id") % 5 === 0), col("vec_id"),
@@ -2594,8 +2578,7 @@ object SparkEntry {
       // phash catalog
       val pIx = Multimodal.phashIndexFor(
         media.filter(col("media_id") % 5 =!= 0))
-      val pShrunk = Multimodal.phashIndexRemove(pIx,
-        tomb.select(col("doc_id").as("media_id")))
+      val pShrunk = pIx.remove(tomb.select(col("doc_id").as("media_id")))
       require(pShrunk.rows.exists(r => pIx.rows.forall(r < _)),
         "retention_pipeline_full: the phash removal was a no-op")
       val pOut = Multimodal.incrementalPhashPairs(pShrunk,
@@ -2606,8 +2589,7 @@ object SparkEntry {
       // tombstones remove 1/7 of it)
       val aIx = Similarity.ivfPqIndexFor(emb,
         nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1)
-      val aShrunk = Similarity.ivfPqIndexRemove(aIx,
-        tomb.select(col("doc_id").as("vec_id")))
+      val aShrunk = aIx.remove(tomb.select(col("doc_id").as("vec_id")))
       require(aShrunk.corpus.count() < emb.count(),
         "retention_pipeline_full: the ANN removal was a no-op")
       val aOut = Similarity.ivfPqTopKIndexed(

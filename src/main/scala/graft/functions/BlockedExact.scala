@@ -3,8 +3,6 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import scala.collection.concurrent.TrieMap
-
 /** Blocked exact-cosine scoring kernel — the GEMM-shaped fast path behind
   * [[Similarity.cosineTopK]] / [[Similarity.hardNegatives]] /
   * [[Similarity.cosineRange]] for integral-id frames.
@@ -98,21 +96,17 @@ object BlockedExact {
 
   /** Memoized route probe (corpus side only): the eligibility decision
     * runs real (thin, bounded) jobs, and serving gates re-pose the same
-    * corpus frames many times per session — keyed by the ANALYZED plan's
-    * semantic hash like the index memos, cleared with the artifact tier.
+    * corpus frames many times per session — keyed by the analyzed plan
+    * like the index memos ([[graft.ArtifactMemo]]), cleared with the
+    * artifact tier.
     * The QUERY-side probe is deliberately NOT memoized: a plan-identical
     * query frame over a source that has since gained rows (growing
     * table/path) would reuse a stale |Q|·d measurement and let the driver
     * collect silently exceed `graft.kernel.maxQueryDoubles` — the exact
     * OOM the budget exists to prevent. A stale corpus memo only mis-picks
     * the ROUTE (join path vs kernel), never the driver's memory. */
-  private val probeMemo = TrieMap.empty[(Int, Int, String), Long]
-  graft.GraftCaches.onArtifactRelease(() => probeMemo.clear())
-
   private def memoProbe(df: DataFrame, tag: String)(job: => Long): Long =
-    probeMemo.getOrElseUpdate(
-      (System.identityHashCode(df.sparkSession),
-        df.queryExecution.analyzed.semanticHash(), tag), job)
+    graft.ArtifactMemo("kernelProbe", df, tag)(job)
 
   /** Total doubles in the query side's vector column — one thin aggregate
     * over `qv` only (column-pruned; linear in |Q|, which is exactly the

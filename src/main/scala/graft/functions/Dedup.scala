@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.GraftCaches.Persistable
+import graft.GraftCaches.{GenChain, Persistable}
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard verification. Built to scale: candidate
@@ -22,44 +22,6 @@ import graft.GraftCaches.Persistable
   * user's own persisted frames alone. `Bench` and `Verify` do this per
   * query.
   */
-/** Shared detector→target arithmetic for the standing structures'
-  * compaction policies ([[Dedup.compactDedupIndexIfFragmented]],
-  * [[Similarity.compactIvfPqIndexIfFragmented]],
-  * [[Dedup.compactEmbIndexIfFragmented]]). Two arms:
-  *
-  *  - WIDTH: `width > bound` — appends concatenate partitions, so k
-  *    appended batches cost k× the tasks per probe. Target
-  *    min(natural, bound): landing INSIDE the bound is what makes the
-  *    trigger a fixed point (compacting to natural when a caller pins
-  *    `bound < natural` would re-fire forever at constant width).
-  *  - EMPTINESS (opt-in, `minRowsPerPartition > 0`): removes shed rows
-  *    at constant width. Target derives from the ROW COUNT
-  *    (clamp(rows/minRowsPerPartition, 1, min(natural, bound))) — a
-  *    catalog below the floor even at natural width previously
-  *    re-compacted to the same width on every trigger (per tombstone
-  *    batch in the retention stream) with no convergence.
-  *
-  * Returns Some(target) only when an arm fires AND the target differs
-  * from the current width — the fixed-point guard that makes repeated
-  * policy evaluation idempotent. `rows` is by-name: the width arm never
-  * runs the count job. */
-private[graft] object CompactionPolicy {
-  def target(width: Int, natural: Int, bound: Int, rows: => Long,
-      minRowsPerPartition: Long): Option[Int] = {
-    require(bound >= 1, s"compaction width bound must be ≥ 1, got $bound")
-    val cap = math.min(natural, bound)
-    if (width > bound) Some(cap).filter(_ != width)
-    else if (minRowsPerPartition <= 0L) None
-    else {
-      val nRows = rows
-      if (nRows >= width.toLong * minRowsPerPartition) None
-      else Some(math.max(1L,
-        math.min(cap.toLong, nRows / minRowsPerPartition)).toInt)
-        .filter(_ != width)
-    }
-  }
-}
-
 object Dedup {
 
   // ------------------------------------------------------------ exact
@@ -277,22 +239,38 @@ object Dedup {
     * over the corpus. At 100 TB `bands` is the persisted "dedup catalog"
     * (4 ints per (doc, band)); `staged` backs the exact-Jaccard
     * verification of candidate pairs and is touched only keyed by
-    * candidate ids. */
-  /** `rows`: the staged doc count rolled forward as a MONOTONE COUNTER
-    * (build counts once; append adds the batch's count) so per-batch
-    * policy checks read a field instead of re-scanning the standing
-    * frame every trigger — None after operations that cannot derive it
-    * cheaply (remove), in which case policies fall back to one count.
-    * `chain`: with delta appends, the cached frames this generation's
-    * lazy unions READ (base standalone frames + every batch delta) —
-    * released as one unit when a policy cuts a standalone generation
-    * ([[graft.GraftCaches.GenChain]]); empty ⟺ the member frames are
-    * standalone. */
+    * candidate ids. The lifecycle verbs are [[StandingIndex]]'s;
+    * members: `staged` keyed on `doc_id`, `bands` on the bucket key
+    * `(band_idx, band_hash)` every incremental batch probes with. */
   final case class DedupIndex(staged: DataFrame, bands: DataFrame,
       numHashes: Int, nBands: Int, shingleK: Int,
       rows: Option[Long] = None,
-      chain: graft.GraftCaches.GenChain = graft.GraftCaches.GenChain()) {
-    private[graft] def stagedRows: Long = rows.getOrElse(staged.count())
+      chain: GenChain = GenChain()) extends StandingIndex[DedupIndex] {
+    def layout: Seq[StandingIndex.Member] = DedupIndex.layout
+    def memberFrames: Seq[DataFrame] = Seq(staged, bands)
+    private[functions] def idCol = "doc_id"
+    // the emptiness arm weighs the bucket table every batch probes
+    private[functions] override def densityRows: Long = bands.count()
+    private[functions] def withMembers(fs: Seq[DataFrame], rows: Option[Long],
+        chain: GenChain): DedupIndex =
+      copy(staged = fs(0), bands = fs(1), rows = rows, chain = chain)
+    private[functions] override def saveState(path: String): Unit =
+      staged.sparkSession.range(1)
+        .select(lit(numHashes).as("num_hashes"), lit(nBands).as("n_bands"),
+          lit(shingleK).as("shingle_k"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  object DedupIndex extends StandingIndex.Family[DedupIndex] {
+    val layout: Seq[StandingIndex.Member] = Seq(
+      StandingIndex.Member("staged", Seq("doc_id")),
+      StandingIndex.Member("bands", Seq("band_idx", "band_hash")))
+    private[functions] def assemble(spark: org.apache.spark.sql.SparkSession,
+        path: String, members: Seq[DataFrame]): DedupIndex = {
+      val meta = spark.read.parquet(s"$path/meta").head()
+      DedupIndex(members(0), members(1), meta.getAs[Int]("num_hashes"),
+        meta.getAs[Int]("n_bands"), meta.getAs[Int]("shingle_k"))
+    }
   }
 
   /** One tokenize+shingle pass (the staging projection of
@@ -333,27 +311,19 @@ object Dedup {
       val sigArr = minhashSigArr(staged, numHashes).persistTracked()
       val bands = graft.GraftCaches.persistedArtifact(
         bandsOfStaged(sigArr, numHashes, nBands))
-      bands.count()
-      val n = staged.count() // materialize inside the build
+      val n = graft.GraftCaches.fill(staged, bands).head
       DedupIndex(staged, bands, numHashes, nBands, shingleK, rows = Some(n))
     }
 
-  /** Build-once memo (contract of [[Similarity.ivfPqIndexFor]]): keyed by
-    * the analyzed (id, text) projection's semantic hash + parameters;
-    * entries drop with `GraftCaches.releaseArtifacts()`. */
-  private val dedupIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int, Int), DedupIndex]
-  graft.GraftCaches.onArtifactRelease(() => dedupIndexMemo.clear())
-
+  /** Build-once memo ([[graft.ArtifactMemo]]) keyed by the analyzed
+    * (id, text) projection + parameters. */
   def dedupIndexFor(docs: DataFrame, id: Column, text: Column,
-      numHashes: Int = 32, nBands: Int = 16, shingleK: Int = 3): DedupIndex = {
-    val key = (System.identityHashCode(docs.sparkSession),
-      docs.select(id.as("doc_id"), text.as("__txt"))
-        .queryExecution.analyzed.semanticHash(),
-      numHashes, nBands, shingleK)
-    dedupIndexMemo.getOrElseUpdate(key,
-      buildDedupIndex(docs, id, text, numHashes, nBands, shingleK))
-  }
+      numHashes: Int = 32, nBands: Int = 16, shingleK: Int = 3): DedupIndex =
+    graft.ArtifactMemo("dedupIndex",
+        docs.select(id.as("doc_id"), text.as("__txt")),
+        numHashes, nBands, shingleK) {
+      buildDedupIndex(docs, id, text, numHashes, nBands, shingleK)
+    }
 
   /** Stage a batch against an index: shingles + signatures + band buckets
     * for the BATCH ONLY, with the id-hygiene guards of the append path
@@ -520,166 +490,31 @@ object Dedup {
   }
 
   /** Grow the standing index by a batch (the freshness path, FAISS-`add`-
-    * shaped like [[Similarity.ivfPqIndexAppend]]) as a DELTA generation:
-    * only the BATCH's frames materialize (artifact-tier, batch-sized),
-    * and the new generation's members are LAZY UNIONS over the old
-    * generation's caches — serving scans read the standing cache plus
-    * one small delta cache per append, so per-batch cost never tracks
-    * corpus size (a re-persist of the full unioned members measured
-    * 27→39 s per batch over 16 ×30 batches, BENCH_INGEST_x30.json).
-    *
-    * LIFECYCLE: generations SHARE cached frames, so the caller must NOT
-    * release a superseded handle after the roll (unpersisting a shared
-    * parent degrades every successor to source re-reads). The shared
-    * frames ride the generation's `chain`: when a policy cuts standalone
-    * frames (compaction checkpoints fresh copies; a re-band on a chained
-    * index cuts BOTH frames fresh; a remove anti-joins into fresh
-    * copies), the successor's chain is empty and the superseded chain
-    * releases as one unit — [[graft.streaming.IngestServing]] performs
-    * that release, so a long-running stream's storage is bounded by ONE
-    * generation plus the deltas since the last cut. Union depth grows
-    * one per append until the compaction policy fires — the
-    * log-structured-merge trade.
-    *
-    * DURABILITY: the delta members persist with FULL LINEAGE
-    * ([[graft.GraftCaches.persistedArtifactFresh]]), rooted at the batch
-    * source: a lost executor block recomputes from source. */
+    * shaped like [[Similarity.ivfPqIndexAppend]]) as a DELTA generation
+    * ([[StandingIndex]]): only the BATCH's frames materialize
+    * (artifact-tier, batch-sized), and the new generation's members are
+    * lazy unions over the old generation's caches — per-batch cost never
+    * tracks corpus size (a re-persist of the full unioned members
+    * measured 27→39 s per batch over 16 ×30 batches,
+    * BENCH_INGEST_x30.json). The delta members persist with FULL
+    * LINEAGE ([[graft.GraftCaches.persistedArtifactFresh]]), rooted at
+    * the batch source: a lost executor block recomputes from source. */
   def dedupIndexAppend(index: DedupIndex, batch: DataFrame, id: Column,
       text: Column): DedupIndex =
     dedupIndexAppendStaged(index, stageBatch(index, batch, id, text))
 
   /** [[dedupIndexAppend]] of a batch already [[stageBatch]]'d against
-    * `index`. */
+    * `index`. The batch frames re-persist as ARTIFACT-tier entries under
+    * fresh plans: stageBatch's working-tier persists die at the caller's
+    * end-of-batch unpersistAll, and a same-plan re-persist would be a
+    * CacheManager no-op released with them. */
   private[graft] def dedupIndexAppendStaged(index: DedupIndex,
       batch: (DataFrame, DataFrame)): DedupIndex =
     graft.GraftCaches.inArtifactScope {
       val (bStaged, bBands) = batch
-      // the batch frames re-persist as ARTIFACT-tier entries under fresh
-      // plans: stageBatch's working-tier persists die at the caller's
-      // end-of-batch unpersistAll, and a same-plan re-persist would be a
-      // CacheManager no-op released with them — persistedArtifactFresh
-      // gives each delta its own lineage-bearing entry
-      val dStaged = graft.GraftCaches.persistedArtifactFresh(bStaged)
-      val dBands = graft.GraftCaches.persistedArtifactFresh(bBands)
-      dBands.count()
-      val bn = dStaged.count() // materialize the deltas; batch-sized
-      val staged = index.staged.unionByName(dStaged)
-      val base =
-        if (index.chain.nonEmpty) index.chain
-        else graft.GraftCaches.GenChain(Seq(index.staged, index.bands))
-      // rows roll forward from the standing counter (fresh ids — the
-      // clash require in stageBatch); one count when the handle lost it
-      DedupIndex(staged, index.bands.unionByName(dBands),
-        index.numHashes, index.nBands, index.shingleK,
-        rows = Some(index.rows.fold(staged.count())(_ + bn)),
-        chain = base ++ Seq(dStaged, dBands))
+      index.appended(Seq(bStaged, bBands)
+        .map(graft.GraftCaches.persistedArtifactFresh))
     }
-
-  /** RETENTION DELETE — shrink the standing catalog without a rebuild
-    * (the dedup mirror of [[Similarity.ivfPqIndexRemove]], completing
-    * the same lifecycle: right-to-be-forgotten / takedown events must
-    * REMOVE documents from the standing structures on batch-sized cost).
-    * Both member frames anti-join the removal set; nothing about any
-    * REMAINING doc changes (shingles, signatures and band hashes are
-    * all per-doc), so the shrunk catalog is EXACTLY a fresh build over
-    * corpus∖removed at the same banding — every incremental batch
-    * against it yields the full-run pair set minus pairs touching a
-    * removed doc, which is the `dedup_index_remove` gate's closed-form
-    * restriction oracle over the committed full-run fixture. Ids absent
-    * from the catalog are ignored (idempotent deletes — tombstone
-    * streams replay). The anti-join broadcasts the removal set:
-    * deletion events are batch-sized, the catalog is the corpus-sized
-    * side, one scan per frame, no shuffle. `ids` carries a `doc_id`
-    * column. The shrunk frames are standalone copies (empty chain): once
-    * they are materialized, the superseded generation and its chain
-    * release ([[graft.streaming.RetentionServing]]). */
-  def dedupIndexRemove(index: DedupIndex, ids: DataFrame): DedupIndex =
-    graft.GraftCaches.inArtifactScope {
-      val rm = broadcast(ids.select(col("doc_id")).distinct())
-      val staged = graft.GraftCaches.persistedArtifact(
-        index.staged.join(rm, Seq("doc_id"), "left_anti"))
-      val bands = graft.GraftCaches.persistedArtifact(
-        index.bands.join(rm, Seq("doc_id"), "left_anti"))
-      bands.count()
-      val n = staged.count()
-      DedupIndex(staged, bands, index.numHashes, index.nBands, index.shingleK,
-        rows = Some(n))
-    }
-
-  /** COMPACTION — re-materialize the catalog's frames at their natural
-    * partitioning (the dedup mirror of [[Similarity.compactIvfPqIndex]]):
-    * k appends concatenate k generations of partitions into every batch
-    * bucket join and removes leave full-width mostly-empty scans; a
-    * periodic merge restores bounded task counts and a flat lineage.
-    * Staged rows hash-partition on `doc_id`; band rows on the bucket key
-    * `(band_idx, band_hash)` — the equi-join key every incremental batch
-    * probes with, so a co-partitioned standing side is the layout a
-    * 100-TB catalog wants to amortize across daily batches. Content is
-    * untouched; pair sets are partition-independent (suite-wide
-    * invariant), so compacted serving reuses the remove gate's oracle
-    * verbatim (`dedup_index_compact`). */
-  /** `durableRoot`: when set (the serving streams), the cut
-    * materializes through [[graft.GraftCaches.durableCut]] — a parquet
-    * root under `durableRoot/{staged,bands}` — instead of a
-    * localCheckpoint, so the serving generation stays recoverable after
-    * the superseded chain releases (the r13 ADVICE finding). Batch
-    * pipelines keep the default checkpoint cut. */
-  def compactDedupIndex(index: DedupIndex,
-      partitions: Option[Int] = None,
-      durableRoot: Option[String] = None): DedupIndex =
-    graft.GraftCaches.inArtifactScope {
-      val n = partitions.getOrElse(
-        index.staged.sparkSession.sessionState.conf.numShufflePartitions)
-      def cut(df: DataFrame, name: String): DataFrame = durableRoot match {
-        case Some(root) => graft.GraftCaches.durableCut(df, s"$root/$name")
-        case None => graft.GraftCaches.checkpointed(df)
-      }
-      val staged = cut(index.staged.repartition(n, col("doc_id")), "staged")
-      val bands = cut(
-        index.bands.repartition(n, col("band_idx"), col("band_hash")),
-        "bands")
-      // content untouched ⇒ the row counter carries over; the compacted
-      // frames are STANDALONE cuts ⇒ chain resets (the caller releases
-      // the superseded chain)
-      DedupIndex(staged, bands, index.numHashes, index.nBands, index.shingleK,
-        rows = index.rows)
-    }
-
-  /** COMPACTION POLICY — detector→actuator over [[compactDedupIndex]],
-    * the dedup mirror of [[Similarity.compactIvfPqIndexIfFragmented]]
-    * (same two arms, same rationale): "compact every k batches" is the
-    * wrong trigger because batch sizes vary — what every incremental
-    * bucket join actually pays is SCHEDULING WIDTH, so the detector
-    * reads it directly. WIDTH arm: the wider member frame exceeds
-    * `maxPartitions` (default `widthFactor`× session shuffle
-    * parallelism) — unions concatenate partitions, so k appended
-    * batches cost k× the tasks per probe regardless of data size;
-    * planner-side read, job-free only while the member caches are
-    * filled (under AQE an emptied cache is re-filled by the read — see
-    * [[Similarity.compactIvfPqIndexIfFragmented]]). EMPTINESS arm (opt-in via
-    * `minRowsPerPartition` > 0): removes shrink rows at constant width,
-    * so a tombstone-churned catalog scans mostly-empty partitions;
-    * fires when band rows < width · minRowsPerPartition — one `count()`
-    * on the persisted artifact. No-fire passes the catalog through
-    * untouched. Pair sets are partition-independent, so the
-    * `dedup_compact_policy` gate pins policy-fired serving against the
-    * incremental restriction oracle (k sub-appends are
-    * content-identical to one build — member rows are per-doc). */
-  def compactDedupIndexIfFragmented(index: DedupIndex,
-      maxPartitions: Option[Int] = None, widthFactor: Double = 4.0,
-      minRowsPerPartition: Long = 0L,
-      durableRoot: Option[String] = None): (DedupIndex, Boolean) = {
-    val natural =
-      index.staged.sparkSession.sessionState.conf.numShufflePartitions
-    val bound = maxPartitions.getOrElse(math.ceil(widthFactor * natural).toInt)
-    val width = Seq(index.staged, index.bands)
-      .map(_.rdd.getNumPartitions).max
-    CompactionPolicy.target(width, natural, bound,
-        index.bands.count(), minRowsPerPartition) match {
-      case Some(t) => (compactDedupIndex(index, Some(t), durableRoot), true)
-      case None => (index, false)
-    }
-  }
 
   /** REBUILD POLICY for the standing catalog — the dedup mirror of
     * [[Similarity.ivfPqRebuildIfStale]], closing the loop [[autoBanding]]
@@ -703,16 +538,14 @@ object Dedup {
     * exactly (the `dedup_rebuild_policy` gate's closed-form oracle).
     * Pass-through returns the index object UNCHANGED (same reference).
     *
-    * Returns `(index, rebuilt)`; on `rebuilt = true` the caller rolls
-    * generations — release ONLY the superseded band frame
-    * (`index.bands.unpersist()`), NOT [[releaseDedupIndex]], which would
-    * also drop the staged frame the rebuilt catalog SHARES (the exact
-    * analogue of the ANN roll keeping the shared quantizer frames). */
+    * Returns `(index, rebuilt)`; on an unchained index the rebuilt
+    * catalog SHARES the staged frame, which [[StandingIndex.roll]]
+    * keeps while it releases the superseded band frame. */
   def rebuildCatalogIfStale(index: DedupIndex,
       threshold: Double): (DedupIndex, Boolean) = {
     // rolled-forward counter: the no-fire path (every routine batch) costs
     // zero jobs on the standing frame instead of a corpus-sized re-scan
-    val n = index.stagedRows
+    val n = index.rowCount
     val (h, b) = autoBanding(n, threshold)
     if (h == index.numHashes && b == index.nBands) (index, false)
     else graft.GraftCaches.inArtifactScope {
@@ -724,79 +557,13 @@ object Dedup {
       // release the superseded chain instead of carrying it forever
       val staged =
         if (index.chain.isEmpty) index.staged
-        else {
-          val s = graft.GraftCaches.persistedArtifact(index.staged)
-          s.count(); s
-        }
+        else graft.GraftCaches.persistedArtifact(index.staged)
       val sigArr = minhashSigArr(staged, h).persistTracked()
       val bands = graft.GraftCaches.persistedArtifact(
         bandsOfStaged(sigArr, h, b))
-      bands.count()
+      graft.GraftCaches.fill(staged, bands)
       (DedupIndex(staged, bands, h, b, index.shingleK, rows = Some(n)), true)
     }
-  }
-
-  /** PERSIST a built dedup index to parquet — the catalog's production
-    * artifact lifecycle, mirroring [[Similarity.saveIvfPqIndex]]: the
-    * offline build job writes the standing catalog once; any number of
-    * ingest jobs (other sessions, other clusters) [[loadDedupIndex]] it
-    * without re-staging the corpus. Two member directories (the per-doc
-    * shingle arrays and the 4-int band buckets) plus a one-row meta
-    * table. Loaded-serving is EXACTLY in-memory serving: band hashes and
-    * shingle arrays are storage-exact types (ints, strings), and every
-    * downstream join/aggregate is partition-order-independent — the
-    * `dedup_index_roundtrip` gate pins loaded-incremental ≡ the
-    * committed restriction oracle. */
-  def saveDedupIndex(index: DedupIndex, path: String): Unit = {
-    index.staged.write.mode("overwrite").parquet(s"$path/staged")
-    index.bands.write.mode("overwrite").parquet(s"$path/bands")
-    index.staged.sparkSession.range(1)
-      .select(lit(index.numHashes).as("num_hashes"),
-        lit(index.nBands).as("n_bands"), lit(index.shingleK).as("shingle_k"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a [[saveDedupIndex]]'d catalog for serving: members persist in
-    * the artifact tier and materialize here, so ingest batches plan no
-    * corpus re-staging and no repeated parquet scans of the catalog. */
-  def loadDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DedupIndex = graft.GraftCaches.inArtifactScope {
-    graft.plans.GraftFunctions.register(spark)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val staged = graft.GraftCaches.persistedArtifact(
-      spark.read.parquet(s"$path/staged"))
-    val bands = graft.GraftCaches.persistedArtifact(
-      spark.read.parquet(s"$path/bands"))
-    bands.count()
-    val n = staged.count()
-    DedupIndex(staged, bands, meta.getAs[Int]("num_hashes"),
-      meta.getAs[Int]("n_bands"), meta.getAs[Int]("shingle_k"),
-      rows = Some(n))
-  }
-
-  /** Materialize one generation's member caches (the dedup analogue of
-    * [[Similarity.materializeIndexData]] — see the cut-roll contract
-    * there): a standalone successor cut from its predecessor's caches
-    * (a remove's anti-joined copies) may still be LAZY, so a roll that
-    * releases the predecessor first would hand the next serving batch a
-    * full re-shingle of the standing corpus instead of a cache-to-cache
-    * copy. */
-  def materializeDedupIndex(index: DedupIndex): Unit = {
-    index.staged.count(); index.bands.count()
-    ()
-  }
-
-  /** Release one dedup-index generation's caches and its chain
-    * (idempotent; the analogue of [[Similarity.releaseIndexData]] — after
-    * a standalone cut, drop the superseded generation so long-lived
-    * sessions don't pin one corpus copy per generation; never after an
-    * append, whose successor reads these caches). */
-  def releaseDedupIndex(index: DedupIndex, blocking: Boolean = false): Unit = {
-    index.staged.unpersist(blocking)
-    index.bands.unpersist(blocking)
-    // delta generations: the member frames above are uncached lazy unions
-    // (their unpersist is a no-op); the actual storage rides the chain
-    index.chain.release(blocking)
   }
 
   /** DEDUP CATALOG HEALTH — the ops read on a standing index
@@ -1760,14 +1527,30 @@ object Dedup {
     * (bucket is a pure function of the vector), which gives every
     * lifecycle verb a closed-form oracle: incremental ≡ the full run
     * restricted to batch-touching pairs, remove ≡ a fresh build over
-    * corpus∖removed, compaction content-preserving. */
-  /** `rows`/`chain`: the [[DedupIndex]] contract — a rolled-forward row
-    * counter for per-batch policy checks, and the delta-generation chain
-    * released as one unit at a standalone cut. */
+    * corpus∖removed, compaction content-preserving. One member (`vecs`,
+    * keyed on its probe key `bucket`); the lifecycle verbs are
+    * [[StandingIndex]]'s. */
   final case class EmbIndex(vecs: DataFrame, nPlanes: Int,
       rows: Option[Long] = None,
-      chain: graft.GraftCaches.GenChain = graft.GraftCaches.GenChain()) {
-    private[graft] def vecRows: Long = rows.getOrElse(vecs.count())
+      chain: GenChain = GenChain()) extends StandingIndex[EmbIndex] {
+    def layout: Seq[StandingIndex.Member] = EmbIndex.layout
+    def memberFrames: Seq[DataFrame] = Seq(vecs)
+    private[functions] def idCol = "vec_id"
+    private[functions] def withMembers(fs: Seq[DataFrame], rows: Option[Long],
+        chain: GenChain): EmbIndex =
+      copy(vecs = fs(0), rows = rows, chain = chain)
+    private[functions] override def saveState(path: String): Unit =
+      vecs.sparkSession.range(1).select(lit(nPlanes).as("n_planes"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  object EmbIndex extends StandingIndex.Family[EmbIndex] {
+    val layout: Seq[StandingIndex.Member] =
+      Seq(StandingIndex.Member("vecs", Seq("bucket")))
+    private[functions] def assemble(spark: org.apache.spark.sql.SparkSession,
+        path: String, members: Seq[DataFrame]): EmbIndex =
+      EmbIndex(members(0),
+        spark.read.parquet(s"$path/meta").head().getAs[Int]("n_planes"))
   }
 
   /** One bucketing pass shared bit-for-bit by build, append and the
@@ -1808,20 +1591,14 @@ object Dedup {
     EmbIndex(vecs, nPlanes, rows = Some(n))
   }
 
-  private val embIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int), EmbIndex]
-  graft.GraftCaches.onArtifactRelease(() => embIndexMemo.clear())
-
   /** Build-once memo over [[buildEmbIndex]] (the [[dedupIndexFor]]
-    * pattern: one standing catalog per (session, corpus plan, nPlanes),
-    * dropped on artifact release so a stale handle never serves). */
+    * pattern: one standing catalog per (session, corpus plan, nPlanes)). */
   def embIndexFor(emb: DataFrame, id: Column, vec: Column,
-      nPlanes: Int = 4): EmbIndex = {
-    val key = (System.identityHashCode(emb.sparkSession),
-      emb.select(id.as("vec_id"), vec.as("__v"))
-        .queryExecution.analyzed.semanticHash(), nPlanes)
-    embIndexMemo.getOrElseUpdate(key, buildEmbIndex(emb, id, vec, nPlanes))
-  }
+      nPlanes: Int = 4): EmbIndex =
+    graft.ArtifactMemo("embIndex", emb.select(id.as("vec_id"), vec.as("__v")),
+        nPlanes) {
+      buildEmbIndex(emb, id, vec, nPlanes)
+    }
 
   /** INCREMENTAL embedding near-dup pairs — a batch against the standing
     * catalog, the [[incrementalMinHashPairs]] shape: ONE bucket equi-join
@@ -1872,70 +1649,12 @@ object Dedup {
   /** Append a batch into the standing embedding catalog — the
     * [[dedupIndexAppend]] delta generation on the semantic tier: only the
     * staged batch persists (artifact tier, batch-sized, lineage-bearing
-    * via [[graft.GraftCaches.persistedArtifactFresh]]); the new
-    * generation is a lazy union over the old generation's cache, and the
-    * shared frames ride `chain` for release at the next standalone cut.
-    * Id-hygiene guards via the shared staging. */
+    * via [[graft.GraftCaches.persistedArtifactFresh]]). Id-hygiene guards
+    * via the shared staging. */
   def embIndexAppend(index: EmbIndex, batch: DataFrame, id: Column,
       vec: Column): EmbIndex = graft.GraftCaches.inArtifactScope {
-    val b = stageEmbBatch(batch, id, vec, index.nPlanes, Some(index.vecs))
-    val d = graft.GraftCaches.persistedArtifactFresh(b)
-    val bn = d.count()
-    val vecs = index.vecs.unionByName(d)
-    val base =
-      if (index.chain.nonEmpty) index.chain
-      else graft.GraftCaches.GenChain(Seq(index.vecs))
-    EmbIndex(vecs, index.nPlanes,
-      rows = Some(index.rows.fold(vecs.count())(_ + bn)),
-      chain = base ++ Seq(d))
-  }
-
-  /** RETENTION DELETE on the standing embedding catalog — the broadcast
-    * anti-join path shared by all three standing families; per-vector
-    * rows make remove ≡ a fresh build on corpus∖removed, so the
-    * `embdedup_index_remove` gate reuses the full-run fixture restricted
-    * to no-removed-endpoint pairs. Absent ids are ignored (idempotent —
-    * tombstone replay). `ids` carries a `vec_id` column. */
-  def embIndexRemove(index: EmbIndex, ids: DataFrame): EmbIndex =
-    graft.GraftCaches.inArtifactScope {
-      val rm = broadcast(ids.select(col("vec_id")).distinct())
-      val vecs = graft.GraftCaches.persistedArtifact(
-        index.vecs.join(rm, Seq("vec_id"), "left_anti"))
-      val n = vecs.count()
-      EmbIndex(vecs, index.nPlanes, rows = Some(n))
-    }
-
-  /** COMPACTION of the standing embedding catalog at its probe key (the
-    * bucket every incremental batch equi-joins) — the same LSM merge as
-    * [[compactDedupIndex]]/[[Similarity.compactIvfPqIndex]]; pair sets
-    * are partition-independent, so compacted serving reuses the remove
-    * restriction oracle (`embdedup_index_compact`). */
-  def compactEmbIndex(index: EmbIndex,
-      partitions: Option[Int] = None,
-      durableRoot: Option[String] = None): EmbIndex =
-    graft.GraftCaches.inArtifactScope {
-      val n = partitions.getOrElse(
-        index.vecs.sparkSession.sessionState.conf.numShufflePartitions)
-      val repart = index.vecs.repartition(n, col("bucket"))
-      // content untouched ⇒ rows carry over; standalone cut ⇒ chain resets;
-      // durableRoot: the streaming parquet cut (see compactDedupIndex)
-      val vecs = durableRoot match {
-        case Some(root) => graft.GraftCaches.durableCut(repart, s"$root/vecs")
-        case None => graft.GraftCaches.checkpointed(repart)
-      }
-      EmbIndex(vecs, index.nPlanes, rows = index.rows)
-    }
-
-  /** See [[materializeDedupIndex]] — the cut-roll contract on the
-    * embedding catalog. */
-  def materializeEmbIndex(index: EmbIndex): Unit = {
-    index.vecs.count()
-    ()
-  }
-
-  def releaseEmbIndex(index: EmbIndex, blocking: Boolean = false): Unit = {
-    index.vecs.unpersist(blocking)
-    index.chain.release(blocking)
+    index.appended(Seq(graft.GraftCaches.persistedArtifactFresh(
+      stageEmbBatch(batch, id, vec, index.nPlanes, Some(index.vecs)))))
   }
 
   /** EMBEDDING CATALOG HEALTH — [[dedupIndexHealth]]'s analogue on the
@@ -1970,37 +1689,6 @@ object Dedup {
       .select(col("r.metric"), col("r.key"), col("r.value"))
   }
 
-  // ------------------------------------------- emb catalog lifecycle
-  /** PERSIST the standing embedding catalog to parquet — the third
-    * standing structure gets the same cross-session artifact lifecycle
-    * as [[saveDedupIndex]] / [[Similarity.saveIvfPqIndex]]: the offline
-    * build job writes once; ingest jobs [[loadEmbIndex]] without
-    * re-bucketing the corpus. One member directory (the per-vector
-    * `(vec_id, v, bucket)` rows) plus a one-row meta table. Loaded
-    * serving is EXACTLY in-memory serving: doubles and the bucket long
-    * are storage-exact, and every downstream join/aggregate is
-    * partition-order-independent — the `embdedup_index_roundtrip` gate
-    * pins loaded-incremental ≡ the committed restriction oracle. */
-  def saveEmbIndex(index: EmbIndex, path: String): Unit = {
-    index.vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    index.vecs.sparkSession.range(1)
-      .select(lit(index.nPlanes).as("n_planes"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a [[saveEmbIndex]]'d catalog for serving: members persist in
-    * the artifact tier and materialize here, so ingest batches plan no
-    * corpus re-bucketing and no repeated parquet scans. */
-  def loadEmbIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): EmbIndex = graft.GraftCaches.inArtifactScope {
-    graft.plans.GraftFunctions.register(spark)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val vecs = graft.GraftCaches.persistedArtifact(
-      spark.read.parquet(s"$path/vecs"))
-    val n = vecs.count()
-    EmbIndex(vecs, meta.getAs[Int]("n_planes"), rows = Some(n))
-  }
-
   /** SCALE-ADAPTIVE PLANE COUNT — [[autoBanding]]'s analogue for the
     * hyperplane bucket space: the plane count fixes the number of cells
     * (2^p), so a catalog that keeps its build-time planes while the
@@ -2029,12 +1717,11 @@ object Dedup {
     * [[buildEmbIndex]] uses — so rebuilt serving equals fresh-built
     * serving at the derived planes exactly (the `embdedup_rebuild_policy`
     * gate's closed-form oracle). Pass-through returns the index object
-    * UNCHANGED. On `rebuilt = true` the caller rolls generations
-    * ([[releaseEmbIndex]] on the superseded one). */
+    * UNCHANGED; a rebuilt catalog is standalone. */
   def rebuildEmbIndexIfStale(index: EmbIndex,
       targetBucket: Long = 32L): (EmbIndex, Boolean) = {
     // rolled-forward counter: the no-fire path costs zero standing jobs
-    val n = index.vecRows
+    val n = index.rowCount
     val p = autoPlanes(n, targetBucket)
     if (p == index.nPlanes) (index, false)
     else graft.GraftCaches.inArtifactScope {
@@ -2047,27 +1734,6 @@ object Dedup {
           .withColumn("bucket", Similarity.hyperplaneBucket(col("v"), p)))
       vecs.count()
       (EmbIndex(vecs, p, rows = Some(n)), true)
-    }
-  }
-
-  /** COMPACTION POLICY on the embedding catalog — the same two
-    * detector arms as [[compactDedupIndexIfFragmented]] (shared
-    * [[CompactionPolicy]] arithmetic: width from appends, emptiness
-    * from removes; fires only when compaction would actually change the
-    * width, so repeated triggers reach a fixed point). Pair sets are
-    * partition-independent, so the `embdedup_compact_policy` gate pins
-    * policy-fired serving against the incremental restriction oracle. */
-  def compactEmbIndexIfFragmented(index: EmbIndex,
-      maxPartitions: Option[Int] = None, widthFactor: Double = 4.0,
-      minRowsPerPartition: Long = 0L,
-      durableRoot: Option[String] = None): (EmbIndex, Boolean) = {
-    val natural =
-      index.vecs.sparkSession.sessionState.conf.numShufflePartitions
-    val bound = maxPartitions.getOrElse(math.ceil(widthFactor * natural).toInt)
-    CompactionPolicy.target(index.vecs.rdd.getNumPartitions, natural, bound,
-        index.vecs.count(), minRowsPerPartition) match {
-      case Some(t) => (compactEmbIndex(index, Some(t), durableRoot), true)
-      case None => (index, false)
     }
   }
 

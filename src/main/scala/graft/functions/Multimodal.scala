@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftCaches.GenChain
+
 /** Multimodal-column plumbing for a training-data pipeline: media travel as
   * opaque `binary` columns with a typed metadata struct; decode /
   * feature-extract run per-partition in batches.
@@ -317,24 +319,17 @@ object Multimodal {
     * PNG encoder throughput into whichever query line runs first —
     * encoder cost stays visible as the bench-setup `mm_media_corpus_build`
     * line, exactly the offline-ingest/online-dedup split of the ANN
-    * gates. Keyed by the analyzed doc-id projection's semantic hash +
-    * geometry; entries drop with `GraftCaches.releaseArtifacts()`. */
-  private val mediaMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int), DataFrame]
-  graft.GraftCaches.onArtifactRelease(() => mediaMemo.clear())
-
+    * gates. Keyed ([[graft.ArtifactMemo]]) by the analyzed doc-id
+    * projection + geometry. */
   def syntheticMediaFor(docIds: DataFrame, side: Int = 32,
-      groupSize: Int = 8): DataFrame = {
-    val key = (System.identityHashCode(docIds.sparkSession),
-      docIds.select(col("doc_id")).queryExecution.analyzed.semanticHash(),
-      side, groupSize)
-    mediaMemo.getOrElseUpdate(key, {
+      groupSize: Int = 8): DataFrame =
+    graft.ArtifactMemo("syntheticMedia", docIds.select(col("doc_id")),
+        side, groupSize) {
       val m = graft.GraftCaches.persistedArtifact(
         syntheticMixedMedia(docIds, side, groupSize))
       m.count()
       m
-    })
-  }
+    }
 
   /** Deterministic synthetic VIDEO corpus: each video's payload is
     * `frames` REAL PNGs concatenated back-to-back — a codec-free stand-in
@@ -379,22 +374,15 @@ object Multimodal {
     * [[syntheticMediaFor]] contract): the frame-concatenated corpus is
     * bench-SETUP cost (`mm_video_corpus_build`), so the frame-dedup
     * gates measure split → decode → hash → band → verify. */
-  private val videoMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int, Int), DataFrame]
-  graft.GraftCaches.onArtifactRelease(() => videoMemo.clear())
-
   def syntheticVideoFor(docIds: DataFrame, frames: Int = 3,
-      side: Int = 32, groupSize: Int = 8): DataFrame = {
-    val key = (System.identityHashCode(docIds.sparkSession),
-      docIds.select(col("doc_id")).queryExecution.analyzed.semanticHash(),
-      frames, side, groupSize)
-    videoMemo.getOrElseUpdate(key, {
+      side: Int = 32, groupSize: Int = 8): DataFrame =
+    graft.ArtifactMemo("syntheticVideo", docIds.select(col("doc_id")),
+        frames, side, groupSize) {
       val m = graft.GraftCaches.persistedArtifact(
         syntheticVideoMedia(docIds, frames, side, groupSize))
       m.count()
       m
-    })
-  }
+    }
 
   /** FRAME SAMPLING of PNG-concatenated video payloads — real container
     * walking, no codec: scan each payload for the 8-byte PNG signature
@@ -451,16 +439,11 @@ object Multimodal {
     * maxFrames) makes the downstream keys stable; the frame stream
     * itself stays UNCACHED — cold gates still pay their full
     * split+decode. */
-  private val frameStreamMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int), DataFrame]
-  graft.GraftCaches.onArtifactRelease(() => frameStreamMemo.clear())
-
   def splitPngFramesFor(media: DataFrame,
       maxFramesPerVideo: Int = 64): DataFrame =
-    frameStreamMemo.getOrElseUpdate(
-      (System.identityHashCode(media.sparkSession),
-        media.queryExecution.analyzed.semanticHash(), maxFramesPerVideo),
-      splitPngFrames(media, maxFramesPerVideo))
+    graft.ArtifactMemo("frameStream", media, maxFramesPerVideo) {
+      splitPngFrames(media, maxFramesPerVideo)
+    }
 
   // ------------------------------------------------- standing phash catalog
   /** STANDING PHASH CATALOG — the image tier's standing structure,
@@ -476,11 +459,27 @@ object Multimodal {
     * geometry/re-band policy exists either — band layout DERIVES
     * PER-CALL from `maxHamming` via [[Dedup.bandGeometry]] (the stored
     * state is raw hashes, never band rows), so the catalog cannot carry
-    * stale geometry; compaction is the only standing maintenance.
-    * `rows`/`chain`: the [[graft.functions.Dedup.DedupIndex]] contract. */
+    * stale geometry; compaction is the only standing maintenance. One
+    * member (`hashes`, keyed on `media_id`) and no other state: a saved
+    * catalog is its hash rows alone. The lifecycle verbs are
+    * [[StandingIndex]]'s. */
   final case class PhashIndex(hashes: DataFrame,
       rows: Option[Long] = None,
-      chain: graft.GraftCaches.GenChain = graft.GraftCaches.GenChain())
+      chain: GenChain = GenChain()) extends StandingIndex[PhashIndex] {
+    def layout: Seq[StandingIndex.Member] = PhashIndex.layout
+    def memberFrames: Seq[DataFrame] = Seq(hashes)
+    private[functions] def idCol = "media_id"
+    private[functions] def withMembers(fs: Seq[DataFrame], rows: Option[Long],
+        chain: GenChain): PhashIndex =
+      copy(hashes = fs(0), rows = rows, chain = chain)
+  }
+
+  object PhashIndex extends StandingIndex.Family[PhashIndex] {
+    val layout: Seq[StandingIndex.Member] =
+      Seq(StandingIndex.Member("hashes", Seq("media_id")))
+    private[functions] def assemble(spark: SparkSession, path: String,
+        members: Seq[DataFrame]): PhashIndex = PhashIndex(members(0))
+  }
 
   /** Build the standing catalog (offline, once): one decode+hash pass. */
   def buildPhashIndex(media: DataFrame): PhashIndex =
@@ -490,18 +489,13 @@ object Multimodal {
       PhashIndex(h, rows = Some(n))
     }
 
-  private val phashIndexMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int), PhashIndex]
-  graft.GraftCaches.onArtifactRelease(() => phashIndexMemo.clear())
-
   /** Build-once memo over [[buildPhashIndex]] (the
     * [[graft.functions.Similarity.ivfPqIndexFor]] pattern). */
-  def phashIndexFor(media: DataFrame): PhashIndex = {
-    val key = (System.identityHashCode(media.sparkSession),
-      media.select(col("media_id"), col("payload"))
-        .queryExecution.analyzed.semanticHash())
-    phashIndexMemo.getOrElseUpdate(key, buildPhashIndex(media))
-  }
+  def phashIndexFor(media: DataFrame): PhashIndex =
+    graft.ArtifactMemo("phashIndex",
+        media.select(col("media_id"), col("payload"))) {
+      buildPhashIndex(media)
+    }
 
   /** [[phashNearDups]] served from the STANDING catalog — the 100 TB
     * shape of a FULL-CORPUS near-dup audit: the corpus decodes once at
@@ -557,117 +551,12 @@ object Multimodal {
   /** Grow the standing catalog by a batch — the
     * [[graft.functions.Dedup.dedupIndexAppend]] delta generation on the
     * image tier: only the batch's hashes persist (lineage-bearing,
-    * batch-sized); the generation is a lazy union and the shared frames
-    * ride `chain` for release at a standalone cut. */
+    * batch-sized). */
   def phashIndexAppend(index: PhashIndex,
       mediaBatch: DataFrame): PhashIndex = graft.GraftCaches.inArtifactScope {
-    val d = graft.GraftCaches.persistedArtifactFresh(
-      stagePhashBatch(index, mediaBatch))
-    val bn = d.count()
-    val hashes = index.hashes.unionByName(d)
-    val base =
-      if (index.chain.nonEmpty) index.chain
-      else graft.GraftCaches.GenChain(Seq(index.hashes))
-    PhashIndex(hashes, rows = Some(index.rows.fold(hashes.count())(_ + bn)),
-      chain = base ++ Seq(d))
+    index.appended(Seq(graft.GraftCaches.persistedArtifactFresh(
+      stagePhashBatch(index, mediaBatch))))
   }
-
-  /** COMPACTION + policy — the LSM merge every standing family carries
-    * (appends concatenate batch-sized partition slivers into the band
-    * join); hash rows are per-media, so compacted serving is identical. */
-  def compactPhashIndex(index: PhashIndex,
-      partitions: Option[Int] = None,
-      durableRoot: Option[String] = None): PhashIndex =
-    graft.GraftCaches.inArtifactScope {
-      val n = partitions.getOrElse(
-        index.hashes.sparkSession.sessionState.conf.numShufflePartitions)
-      val repart = index.hashes.repartition(n, col("media_id"))
-      // durableRoot: the streaming parquet cut (see
-      // [[graft.functions.Dedup.compactDedupIndex]])
-      val hashes = durableRoot match {
-        case Some(root) =>
-          graft.GraftCaches.durableCut(repart, s"$root/hashes")
-        case None => graft.GraftCaches.checkpointed(repart)
-      }
-      PhashIndex(hashes, rows = index.rows)
-    }
-
-  def compactPhashIndexIfFragmented(index: PhashIndex,
-      maxPartitions: Option[Int] = None, widthFactor: Double = 4.0,
-      minRowsPerPartition: Long = 0L,
-      durableRoot: Option[String] = None): (PhashIndex, Boolean) = {
-    val natural =
-      index.hashes.sparkSession.sessionState.conf.numShufflePartitions
-    val bound = maxPartitions.getOrElse(math.ceil(widthFactor * natural).toInt)
-    CompactionPolicy.target(index.hashes.rdd.getNumPartitions, natural, bound,
-        index.rows.getOrElse(index.hashes.count()), minRowsPerPartition) match {
-      case Some(t) => (compactPhashIndex(index, Some(t), durableRoot), true)
-      case None => (index, false)
-    }
-  }
-
-  /** See [[graft.functions.Dedup.materializeDedupIndex]] — the cut-roll
-    * contract on the image tier: fill the successor's lazy hash cache
-    * before the superseded generation releases, or the next serving
-    * batch re-decodes the standing corpus. */
-  def materializePhashIndex(index: PhashIndex): Unit = {
-    index.hashes.count()
-    ()
-  }
-
-  def releasePhashIndex(index: PhashIndex, blocking: Boolean = false): Unit = {
-    index.hashes.unpersist(blocking)
-    index.chain.release(blocking)
-  }
-
-  /** PERSIST the standing phash catalog to parquet — the production
-    * artifact lifecycle ([[graft.functions.Dedup.saveDedupIndex]] on the
-    * image tier): the catalog's entire value is never re-decoding the
-    * corpus (at 100 TB of payloads the decode IS the corpus-sized cost;
-    * the standing state is 3 longs per image), so without a durable form
-    * every process restart re-paid a full-corpus decode. One member
-    * directory, no meta table — the band layout derives from each call's
-    * `maxHamming` ([[graft.functions.Dedup.bandGeometry]]), not from
-    * build-time state, so there is nothing else to store and a loaded
-    * catalog can never carry stale geometry. Hash rows are exact longs;
-    * every downstream join is partition-order-independent — the
-    * `phash_index_roundtrip` gate pins loaded-incremental ≡ the committed
-    * restriction oracle. */
-  def savePhashIndex(index: PhashIndex, path: String): Unit =
-    index.hashes.write.mode("overwrite").parquet(s"$path/hashes")
-
-  /** Load a [[savePhashIndex]]'d catalog for serving: hashes persist in
-    * the artifact tier and materialize here, so ingest batches plan
-    * band equi-joins against the cached frame — never a corpus re-decode
-    * and no repeated parquet scans. */
-  def loadPhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): PhashIndex = graft.GraftCaches.inArtifactScope {
-    val hashes = graft.GraftCaches.persistedArtifact(
-      spark.read.parquet(s"$path/hashes"))
-    val n = hashes.count()
-    PhashIndex(hashes, rows = Some(n))
-  }
-
-  /** RETENTION DELETE on the standing phash catalog — the image tier's
-    * right-to-be-forgotten verb ([[graft.functions.Dedup.dedupIndexRemove]]
-    * mirrored; the r13 verdict's symmetry gap: takedowns could reach the
-    * text/embedding/ANN catalogs but not the image one). Broadcast
-    * anti-join on `media_id` (deletion events are batch-sized; the
-    * catalog is scanned once, never shuffled); hash rows are per-media,
-    * so the shrunk catalog is EXACTLY a fresh build over corpus∖removed —
-    * every incremental batch against it yields the full-run pair set
-    * minus pairs touching a removed image, the `phash_index_remove`
-    * gate's closed-form restriction oracle. Ids absent from the catalog
-    * are ignored (idempotent — tombstone streams replay). `ids` carries
-    * a `media_id` column. */
-  def phashIndexRemove(index: PhashIndex, ids: DataFrame): PhashIndex =
-    graft.GraftCaches.inArtifactScope {
-      val rm = broadcast(ids.select(col("media_id")).distinct())
-      val hashes = graft.GraftCaches.persistedArtifact(
-        index.hashes.join(rm, Seq("media_id"), "left_anti"))
-      val n = hashes.count()
-      PhashIndex(hashes, rows = Some(n))
-    }
 
   /** REAL image resize over PNG-encoded payloads: decode → bilinear resize
     * → re-encode, per partition (codec state amortized). Non-decodable

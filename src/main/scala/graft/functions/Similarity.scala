@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftCaches.Persistable
+import graft.GraftCaches.{GenChain, Persistable}
 
 /** Approximate-nearest-neighbour search over an embedding column.
   *
@@ -308,16 +308,11 @@ object Similarity {
   /** Build-once memo over [[buildIvfIndex]] (same contract and keying as
     * [[ivfPqIndexFor]]): ann_ivf_topk and ann_ivf_topk_p8 differ only in
     * query-time nProbe, so they serve from ONE trained index. */
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int), IvfIndex]
-  graft.GraftCaches.onArtifactRelease(() => ivfMemo.clear())
-
   def ivfIndexFor(corpus: DataFrame, nCentroids: Int = 16,
-      lloydIters: Int = 2): IvfIndex = {
-    val key = (System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.semanticHash(), nCentroids, lloydIters)
-    ivfMemo.getOrElseUpdate(key, buildIvfIndex(corpus, nCentroids, lloydIters))
-  }
+      lloydIters: Int = 2): IvfIndex =
+    graft.ArtifactMemo("ivfIndex", corpus, nCentroids, lloydIters) {
+      buildIvfIndex(corpus, nCentroids, lloydIters)
+    }
 
   /** IVF serving over a BUILT index: probe the trained coarse quantizer,
     * score exact cosines against only the probed inverted lists, rank
@@ -662,9 +657,10 @@ object Similarity {
 
   /** BUILT PQ INDEX — per-subspace codebook + per-vector codes (the
     * compressed corpus) plus the keyed raw vectors for surrogate-id
-    * candidate mapping. Artifact-tier, like [[IvfPqIndex]]. */
+    * candidate mapping, and the codes' serving pivot ([[pivotOf]]).
+    * Artifact-tier, like [[IvfPqIndex]]. */
   final case class PqIndex(corpus: DataFrame, codebook: DataFrame,
-      codes: DataFrame, m: Int)
+      codes: DataFrame, m: Int, pivot: DataFrame)
 
   /** Train a PQ codebook + codes over `corpus` (offline build job) —
     * identical training math to the pre-split pqTopK, so the committed
@@ -683,24 +679,19 @@ object Similarity {
     val codes = graft.GraftCaches.persistedArtifact(
       assignNearestSub(csub, codebook)
         .select(col("c_id"), col("sub"), col("code")))
-    codes.count(); c.count() // materialize inside the build
-    // the serving pivot is construction cost (setup/query boundary —
-    // see [[withServingPivot]]); shares the IVF-PQ pivot memo
-    pivotedCodesFrame(codes).count()
-    PqIndex(c, codebook, codes, m)
+    // materialize inside the build, the serving pivot included (it is
+    // construction cost, not first-serve cost — the setup/query boundary)
+    val pivot = pivotOf(codes)
+    graft.GraftCaches.fill(codes, c, pivot)
+    PqIndex(c, codebook, codes, m, pivot)
   }
 
   /** Build-once memo over [[buildPqIndex]] (contract of [[ivfPqIndexFor]]). */
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int, Int), PqIndex]
-  graft.GraftCaches.onArtifactRelease(() => pqMemo.clear())
-
   def pqIndexFor(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
-      lloydIters: Int = 2): PqIndex = {
-    val key = (System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.semanticHash(), m, ksub, lloydIters)
-    pqMemo.getOrElseUpdate(key, buildPqIndex(corpus, m, ksub, lloydIters))
-  }
+      lloydIters: Int = 2): PqIndex =
+    graft.ArtifactMemo("pqIndex", corpus, m, ksub, lloydIters) {
+      buildPqIndex(corpus, m, ksub, lloydIters)
+    }
 
   /** PQ-ADC serving over a BUILT index: per-query broadcast distance
     * table, code equi-join, exact integer partial sums, k-bounded rank.
@@ -723,7 +714,7 @@ object Similarity {
       val partials = BlockedExact.adcTopKPartials(
           qtabs.select(col("q_id").cast("long").as("q_id"),
             col("ip_tab"), col("cn2_tab"), col("qnorm")),
-          pivotedCodesFrame(index.codes)
+          index.pivot
             .select(col("c_id").cast("long").as("c_id"), col("codes")),
           k)
         .withColumn("q_id", col("q_id").cast(qIdType))
@@ -736,7 +727,7 @@ object Similarity {
     * frames so BlockedExactSpec can pin kernel ≡ join on one index. */
   private def pqTopKIndexedJoinPath(qtabs: DataFrame, index: PqIndex,
       k: Int): DataFrame = {
-    val scored = pivotedCodesFrame(index.codes)
+    val scored = index.pivot
       .join(broadcast(qtabs), col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
         expr("graft_adc_fold(codes, ip_tab)").as("ip_sum"),
@@ -884,37 +875,79 @@ object Similarity {
     * offline job and answers many queries against it; the original query
     * shape re-trained the full index inside every call (so topK + rerank
     * together trained the identical index twice — the two heaviest
-    * queries in the bench). All member frames are eagerly materialized
-    * and artifact-persisted ([[graft.GraftCaches.persistedArtifact]]):
+    * queries in the bench). All frames are eagerly materialized and
+    * artifact-persisted ([[graft.GraftCaches.persistedArtifact]]):
     * per-query `unpersistAll` leaves them cached; sessions release them
     * with `GraftCaches.releaseArtifacts()`.
     *
-    *  - `corpus`     (c_id, cv): keyed raw vectors — the exact tier
+    * Members ([[StandingIndex]], all keyed on `c_id`):
+    *  - `corpus`  (c_id, cv): keyed raw vectors — the exact tier
+    *  - `assigned` (cent_id, c_id): inverted lists, sorted on `c_id`
+    *  - `codes`   (c_id, sub, code): PQ codes (the compressed corpus)
+    *  - `pivot`   (c_id, codes): the codes pivoted to one `array<int>`
+    *    row (ordered by sub) — the scorer's join side, sorted on `c_id`
+    *    so the serve's lists⋈pivot join plans no sort
+    * Quantizer state, shared by every append generation (never chained,
+    * geometry-sized, not corpus-sized):
     *  - `centroids`  (cent_id, centroid): coarse quantizer
-    *  - `assigned`   (cent_id, c_id): inverted lists
     *  - `codebook`   (sub, cent, centroid): residual PQ codebook
-    *  - `codes`      (c_id, sub, code): PQ codes (the compressed corpus)
     *  - `crossTerms` (ut_cent_id, ut_sub, ut_cent, ur2rn2_e9): the
     *    query-independent centroid×codeword table of the ADC expansion
-    */
-  /** `rows`: the corpus count rolled forward as a monotone counter so
-    * per-batch policy checks (rebuild geometry) read a field instead of
-    * re-counting the standing corpus every trigger; None when an
-    * operation cannot derive it cheaply. `chain`: with delta appends, the
-    * cached frames this generation's lazy unions read (base standalone
-    * corpus/assigned/codes + serving pivot + every batch delta) —
-    * released as one unit when a policy cuts a standalone generation
-    * ([[graft.GraftCaches.GenChain]]); empty ⟺ members are standalone.
-    * The tiny trained frames (centroids, codebook, crossTerms) never ride
-    * the chain: they are shared across appends by construction and their
-    * size is geometry-bounded, not corpus-bounded. */
+    *  - `utab` (ut_cid, utab): `crossTerms` pivoted to one
+    *    `array[sub][code]` row per coarse centroid ([[utabOf]]), so a
+    *    serve broadcasts the cached nCentroids-row table
+    * `listSizes`: per-centroid list sizes rolled forward by appends, so
+    * the rebuild policy's imbalance check reads driver state; None when
+    * an operation cannot derive them cheaply. */
   final case class IvfPqIndex(corpus: DataFrame, centroids: DataFrame,
       assigned: DataFrame, codebook: DataFrame, codes: DataFrame,
-      crossTerms: DataFrame, m: Int,
+      crossTerms: DataFrame, m: Int, pivot: DataFrame, utab: DataFrame,
       rows: Option[Long] = None,
-      chain: graft.GraftCaches.GenChain = graft.GraftCaches.GenChain(),
-      listSizes: Option[Map[Int, Long]] = None) {
-    private[graft] def corpusRows: Long = rows.getOrElse(corpus.count())
+      chain: GenChain = GenChain(),
+      listSizes: Option[Map[Int, Long]] = None)
+      extends StandingIndex[IvfPqIndex] {
+    def layout: Seq[StandingIndex.Member] = IvfPqIndex.layout
+    def memberFrames: Seq[DataFrame] = Seq(corpus, assigned, codes, pivot)
+    private[functions] def idCol = "c_id"
+    private[functions] override def removeIdCol = "vec_id"
+    private[functions] override def stateFrames: Seq[DataFrame] =
+      Seq(centroids, codebook, crossTerms, utab)
+    private[functions] def withMembers(fs: Seq[DataFrame], rows: Option[Long],
+        chain: GenChain): IvfPqIndex =
+      copy(corpus = fs(0), assigned = fs(1), codes = fs(2), pivot = fs(3),
+        rows = rows, chain = chain)
+    private[functions] override def saveState(path: String): Unit = {
+      centroids.write.mode("overwrite").parquet(s"$path/centroids")
+      codebook.write.mode("overwrite").parquet(s"$path/codebook")
+      crossTerms.write.mode("overwrite").parquet(s"$path/cross_terms")
+      corpus.sparkSession.range(1).select(lit(m).as("m"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    }
+    /** Quantizers (and so the cross-term table and every remaining
+      * vector's codes) are untouched, so serving the shrunk index is
+      * EXACTLY serving the remaining corpus through the same quantizers
+      * (the `ann_index_remove` gate; the remove∘append-back identity
+      * gives `ann_index_update` its closed-form oracle). An UPDATE is
+      * remove + append of the new vector under the same id. */
+    override def remove(ids: DataFrame): IvfPqIndex =
+      super.remove(ids).copy(listSizes = None)
+  }
+
+  object IvfPqIndex extends StandingIndex.Family[IvfPqIndex] {
+    val layout: Seq[StandingIndex.Member] = Seq(
+      StandingIndex.Member("corpus", Seq("c_id")),
+      StandingIndex.Member("assigned", Seq("c_id"), sorted = true),
+      StandingIndex.Member("codes", Seq("c_id")),
+      StandingIndex.Member("pivot", Seq("c_id"), sorted = true))
+    private[functions] def assemble(spark: SparkSession, path: String,
+        members: Seq[DataFrame]): IvfPqIndex = {
+      def state(n: String) = graft.GraftCaches.persistedArtifact(
+        spark.read.parquet(s"$path/$n"))
+      val crossTerms = state("cross_terms")
+      IvfPqIndex(members(0), state("centroids"), members(1), state("codebook"),
+        members(2), crossTerms, spark.read.parquet(s"$path/meta").head().getInt(0),
+        members(3), utabOf(crossTerms))
+    }
   }
 
   /** Train an IVF-PQ index over `corpus` (the offline build job): coarse
@@ -961,7 +994,7 @@ object Similarity {
     // magnitude bigger than its input (measured: 2.7 s single-task stage
     // in ann_auto_topk_fixedq at sf0.1). Width derives from the session's
     // shuffle parallelism — the same "natural width" notion
-    // compactIvfPqIndex maintains — not from a local constant. Integer
+    // compaction maintains — not from a local constant. Integer
     // content only; row placement is result-irrelevant (suite-wide
     // partition-independence invariant).
     // sorted within partitions on the cut key: the serve's lists⋈pivot
@@ -990,32 +1023,19 @@ object Similarity {
     // queries read it instead of re-deriving it
     val crossTerms = crossTermRows(centroids, codebook, m)
       .localCheckpointTracked()
-    // materialize the artifact INSIDE the build (count forces the cache),
+    // materialize the artifact INSIDE the build (fills force the caches),
     // so query wall-time measures serving, not deferred training.
     // codes.count() fills the shared lazy parents (assignedFull → csub →
     // codes, and c underneath); assigned.count() then cuts the serving
-    // width from the filled assignedFull. The REMAINING materializations
-    // (corpus count, list-size collect, the two serving lookup pivots)
-    // are independent reads of already-filled caches — run them as
-    // concurrent jobs (guide §2.6 "overlap independent jobs") instead of
-    // four serial driver actions.
+    // width from the filled assignedFull. The serving pivots are
+    // construction cost too (the setup/query boundary): they fill with
+    // the corpus count in one job.
     codes.count(); assigned.count()
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fN = Future(c.count())
-      val fLs = Future(listSizesOf(assigned))
-      val fPivot = Future(pivotedCodesFrame(codes).count())
-      val fUtab = Future(pivotedCrossTerms(crossTerms).count())
-      val n = Await.result(fN, Duration.Inf)
-      val ls = Await.result(fLs, Duration.Inf)
-      Await.result(fPivot, Duration.Inf); Await.result(fUtab, Duration.Inf)
-      // fPivot/fUtab ARE withServingPivot's fills (same memo entries) —
-      // the index is construction-complete without re-counting them
-      IvfPqIndex(c, centroids, assigned, codebook, codes, crossTerms, m,
-        rows = Some(n), listSizes = Some(ls))
-    }
+    val pivot = pivotOf(codes)
+    val utab = utabOf(crossTerms)
+    val n = graft.GraftCaches.fill(c, pivot, utab).head
+    IvfPqIndex(c, centroids, assigned, codebook, codes, crossTerms, m,
+      pivot, utab, rows = Some(n), listSizes = Some(listSizesOf(assigned)))
   }
 
   /** Per-centroid member counts of an assignment frame, collected to a
@@ -1034,26 +1054,6 @@ object Similarity {
     base.map(b => delta.foldLeft(b) { case (m, (k, v)) =>
       m.updated(k, m.getOrElse(k, 0L) + v) })
 
-  /** Materialize the scorer's pivoted-codes artifact WITH the index:
-    * the pivot is construction cost, not first-serve cost — the
-    * setup/query boundary (SetupBoundarySpec) counts artifact persists
-    * at serving time, and a lazily-built pivot would charge a corpus
-    * groupBy to whichever query serves the generation first. Every path
-    * that mints a NEW codes frame (build, load, append, remove, compact,
-    * warm grow/shrink) returns through here. */
-  private def withServingPivot(ix: IvfPqIndex): IvfPqIndex = {
-    // the two serving lookup artifacts are independent cache fills over
-    // already-materialized member frames — overlap them (guide §2.6)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val fills = Seq(
-      Future(pivotedCodes(ix).count()),
-      Future(pivotedCrossTerms(ix.crossTerms).count()))
-    fills.foreach(Await.result(_, Duration.Inf))
-    ix
-  }
-
   /** The ADC cross-term rows for a set of coarse centroids against a
     * codebook — factored so the build and the WARM rebuild produce
     * bit-identical arithmetic (the warm path recomputes rows only for
@@ -1069,52 +1069,6 @@ object Similarity {
           + round(dotp(col("codeword"), col("codeword")) * 1e9).cast("long"))
           .as("ur2rn2_e9"))
 
-  /** PERSIST a built IVF-PQ index to parquet — the production artifact
-    * lifecycle: the offline build job writes the index once; any number
-    * of serving jobs (other sessions, other clusters) [[loadIvfPqIndex]]
-    * it without retraining. Six member directories plus a one-row meta
-    * table (m). Serving from a saved-then-loaded index is EXACTLY the
-    * in-memory serving (integer-quantized ADC terms and id tie-breaks
-    * make the ranking independent of storage partitioning) — the
-    * `ann_index_roundtrip` gate pins loaded-serving equal to the
-    * committed `ann_ivfpq_topk` fixture. */
-  def saveIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
-    val spark = index.corpus.sparkSession
-    index.corpus.write.mode("overwrite").parquet(s"$path/corpus")
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    index.assigned.write.mode("overwrite").parquet(s"$path/assigned")
-    index.codebook.write.mode("overwrite").parquet(s"$path/codebook")
-    index.codes.write.mode("overwrite").parquet(s"$path/codes")
-    index.crossTerms.write.mode("overwrite").parquet(s"$path/cross_terms")
-    spark.range(1).select(lit(index.m).as("m"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a [[saveIvfPqIndex]]'d index for serving: all members persist
-    * in the artifact tier and materialize here, so queries plan no
-    * training jobs and no repeated parquet scans of the index. */
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): IvfPqIndex =
-    graft.GraftCaches.inArtifactScope {
-      graft.plans.GraftFunctions.register(spark)
-      def part(n: String) = graft.GraftCaches.persistedArtifact(
-        spark.read.parquet(s"$path/$n"))
-      // assigned re-cut to serving width on load: a saved index's members
-      // read back at file-packing width (ONE partition for a small index),
-      // and the candidate expansion runs map-side over exactly this
-      // cache's partitioning — same rationale as the build-time cut
-      def partWide(n: String) = graft.GraftCaches.persistedArtifact(
-        spark.read.parquet(s"$path/$n").repartition(
-          spark.sessionState.conf.numShufflePartitions, col("c_id"))
-          .sortWithinPartitions(col("c_id")))
-      val m = spark.read.parquet(s"$path/meta").head().getInt(0)
-      val base = IvfPqIndex(part("corpus"), part("centroids"), partWide("assigned"),
-        part("codebook"), part("codes"), part("cross_terms"), m)
-      base.codes.count(); base.assigned.count()
-      val n = base.corpus.count()
-      base.centroids.count(); base.codebook.count(); base.crossTerms.count()
-      withServingPivot(base.copy(rows = Some(n)))
-    }
-
   /** INCREMENTAL APPEND — grow a built index without retraining: new
     * vectors are assigned to the EXISTING coarse centroids and their
     * residuals coded with the EXISTING codebook. Quantizers (and
@@ -1129,18 +1083,12 @@ object Similarity {
     * pins the served ranking end-to-end). Rebuild when drift accumulates
     * ([[ivfPqRebuildIfStale]]).
     *
-    * The grown index is a DELTA generation: only the BATCH's frames
-    * materialize (artifact-tier: vectors, assignments, codes, and the
-    * delta's own serving pivot — all batch-sized), the members are LAZY
-    * UNIONS over the old generation's caches, and the serving-pivot memo
-    * is seeded with `old pivot ∪ delta pivot` — valid because appended
-    * ids are fresh, so no c_id group straddles the union.
-    *
-    * LIFECYCLE (see [[Dedup.dedupIndexAppend]]): generations share
-    * cached frames — do NOT release a superseded handle after the roll;
-    * chains release when a rebuild/compaction/remove cuts standalone
-    * frames or with the artifact tier. Union depth grows one per append
-    * until the compaction policy fires. */
+    * The grown index is a DELTA generation ([[StandingIndex]]): only the
+    * BATCH's frames materialize (artifact-tier: vectors, assignments,
+    * codes, and the delta's own serving pivot — all batch-sized), and
+    * every member is a lazy union over the old generation's caches.
+    * Union depth grows one per append until the compaction policy
+    * fires. */
   def ivfPqIndexAppend(index: IvfPqIndex, newVectors: DataFrame): IvfPqIndex =
     graft.GraftCaches.inArtifactScope {
       graft.plans.GraftFunctions.register(index.corpus.sparkSession)
@@ -1157,16 +1105,13 @@ object Similarity {
       // (within the batch or against the index) would sum both copies'
       // ADC terms into one corrupted cosine; fresh ids are also what
       // makes the pivot union below exact. An update is remove + append.
-      // ONE batch pass fills nc and yields its size and the intra-batch
-      // duplicate count: sum of per-id counts = batch rows, any count > 1
-      // = a duplicate
-      val st = nc.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
-        .agg(coalesce(sum(col("n")), lit(0L)).as("bn"),
-          coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)).as("dups"))
-        .head()
-      val bn = st.getLong(0)
-      require(st.getLong(1) == 0L,
-        s"ivfPqIndexAppend: ${st.getLong(1)} vec_id(s) appear more than once " +
+      // ONE batch pass fills nc and yields the intra-batch duplicate
+      // count: any per-id count > 1 = a duplicate
+      val dups = nc.groupBy(col("c_id")).agg(count(lit(1)).as("n"))
+        .agg(coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L)))
+        .head().getLong(0)
+      require(dups == 0L,
+        s"ivfPqIndexAppend: $dups vec_id(s) appear more than once " +
           "in the append batch — dedup the batch first")
       // id-clash probe against the vector-free inverted lists: same id
       // set as the corpus, ~30× fewer bytes scanned per append at 100 TB
@@ -1175,211 +1120,26 @@ object Similarity {
       require(clashes == 0L,
         s"ivfPqIndexAppend: $clashes appended vec_id(s) already exist " +
           "in the index — appends must carry fresh ids")
-      val assignedDelta = graft.GraftCaches.persistedArtifactFresh(
-        assignNearest(nc, index.centroids))
-      val resid = assignedDelta.join(broadcast(index.centroids), Seq("cent_id"))
+      // batch-scoped: (cent_id, c_id, cv) feeds both the inverted-list
+      // delta and the residuals
+      val assignedFull = assignNearest(nc, index.centroids).persistTracked()
+      val resid = assignedFull.join(broadcast(index.centroids), Seq("cent_id"))
         .select(col("c_id"),
           zip_with(col("cv"), col("centroid"), (a, b) => a - b).as("cv"))
       val codesDelta = graft.GraftCaches.persistedArtifactFresh(
         assignNearestSub(pqSubVectors(resid, index.m), index.codebook)
           .select(col("c_id"), col("sub"), col("code")))
-      val corpus = index.corpus.unionByName(nc)
-      val assigned = index.assigned
-        .unionByName(assignedDelta.select(col("cent_id"), col("c_id")))
-      val codes = index.codes.unionByName(codesDelta)
-      // serving pivot for the new generation: old generation's memoized
-      // pivot ∪ the delta's own pivot (batch-sized groupBy) — never a
-      // full-code-table re-aggregation
-      val basePivot = pivotedCodesFrame(index.codes)
-      val deltaPivot = graft.GraftCaches.persistedArtifactFresh(
-        codesDelta.groupBy(col("c_id"))
-          .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-          .select(col("c_id"), col("sc.code").as("codes")))
-      // one job fills the delta chain: the pivot reads codesDelta, which
-      // reads assignedDelta — each cache fills on its first scan
-      deltaPivot.count()
-      codesPivotMemo.put(codesPivotKey(codes),
-        basePivot.unionByName(deltaPivot))
-      val base =
-        if (index.chain.nonEmpty) index.chain
-        else graft.GraftCaches.GenChain(
-          Seq(index.corpus, index.assigned, index.codes, basePivot))
-      IvfPqIndex(corpus, index.centroids, assigned, index.codebook, codes,
-        index.crossTerms, index.m,
-        // rows roll forward (fresh ids); one count when the handle lost it
-        rows = Some(index.rows.fold(corpus.count())(_ + bn)),
-        chain = base ++ Seq(nc, assignedDelta, codesDelta, deltaPivot),
-        listSizes = mergeListSizes(index.listSizes,
-          listSizesOf(assignedDelta.select(col("cent_id"), col("c_id")))))
+      // the pivot delta is a batch-sized groupBy — never a re-aggregation
+      // of the full code table; exact because appended ids are fresh, so
+      // no c_id group straddles the union
+      val assignedDelta = graft.GraftCaches.persistedArtifactFresh(
+        assignedFull.select(col("cent_id"), col("c_id")))
+      val pivotDelta = graft.GraftCaches.persistedArtifactFresh(
+        pivotRows(codesDelta))
+      index.appended(Seq(nc, assignedDelta, codesDelta, pivotDelta))
+        .copy(listSizes =
+          mergeListSizes(index.listSizes, listSizesOf(assignedDelta)))
     }
-
-  /** RETENTION DELETE — shrink a built index without retraining (FAISS
-    * `remove_ids` semantics, the missing half of the freshness story:
-    * appends grow a standing index daily, but right-to-be-forgotten /
-    * license-revocation events must REMOVE vectors on the same index
-    * without a corpus-sized rebuild). The keyed frames (corpus, inverted
-    * lists, codes) anti-join the removal set; quantizers, codebook and
-    * the cross-term table are untouched — removal never changes how any
-    * REMAINING vector is assigned or coded, so serving from the shrunk
-    * index is EXACTLY serving the remaining corpus through the same
-    * quantizers (the `ann_index_remove` gate pins the ranking; the
-    * remove∘append-back identity gives `ann_index_update` its
-    * closed-form oracle against the committed full-build fixture).
-    * Ids absent from the index are ignored (idempotent deletes — the
-    * production tombstone stream replays). The anti-join broadcasts the
-    * removal set: deletion events are batch-sized, the index is the
-    * 100-TB side, and each member frame is one scan with no shuffle.
-    * `removeIds` carries a `vec_id` column (the append-side key name).
-    *
-    * The shrunk frames are standalone copies (empty chain): once they
-    * materialize, the caller releases the superseded generation and its
-    * chain ([[graft.streaming.RetentionServing]]). An UPDATE is remove +
-    * append of the new
-    * vector under the same id — the `ann_index_update` gate runs that
-    * composition end-to-end. */
-  def ivfPqIndexRemove(index: IvfPqIndex, removeIds: DataFrame): IvfPqIndex =
-    graft.GraftCaches.inArtifactScope {
-      val rm = broadcast(
-        removeIds.select(col("vec_id").as("c_id")).distinct())
-      val corpus = graft.GraftCaches.persistedArtifact(
-        index.corpus.join(rm, Seq("c_id"), "left_anti"))
-      val assigned = graft.GraftCaches.persistedArtifact(
-        index.assigned.join(rm, Seq("c_id"), "left_anti"))
-      val codes = graft.GraftCaches.persistedArtifact(
-        index.codes.join(rm, Seq("c_id"), "left_anti"))
-      // one count (rows is load-bearing for the rebuild policy); the
-      // codes/assigned caches fill on their first serve scan instead of
-      // paying two more standing-sized passes here (guide §1.2)
-      val n = corpus.count()
-      // SERVING-PIVOT SEED: the pivot is keyed by c_id, so anti-joining
-      // the CACHED base pivot is row-identical to re-aggregating the
-      // anti-joined code table — O(standing) groupBy → one broadcast
-      // anti-join over an already-cached frame
-      val pivot = graft.GraftCaches.persistedArtifact(
-        pivotedCodesFrame(index.codes).join(rm, Seq("c_id"), "left_anti"))
-      codesPivotMemo.put(codesPivotKey(codes), pivot)
-      withServingPivot(
-        IvfPqIndex(corpus, index.centroids, assigned, index.codebook, codes,
-          index.crossTerms, index.m, rows = Some(n)))
-    }
-
-  /** COMPACTION — re-materialize the growing member frames at their
-    * natural partitioning. Every [[ivfPqIndexAppend]] unions a batch into
-    * corpus/assigned/codes, and a union CONCATENATES partitions: after k
-    * daily appends each serving scan schedules k× the tasks (most of
-    * them batch-sized slivers) and drags a k-deep union lineage through
-    * Catalyst analysis, independent of data size — the LSM-tree
-    * fragmentation problem, solved the same way (periodic merge).
-    * [[ivfPqIndexRemove]] adds the mirror image: anti-joined frames keep
-    * their partition COUNT while shrinking, so a churned index pays
-    * full-width scheduling over mostly-empty partitions.
-    *
-    * Compaction hash-repartitions each keyed frame on `c_id` to the
-    * session shuffle parallelism (or an explicit target) and cuts the
-    * lineage at the fresh artifact boundary. Row content is untouched,
-    * and serving is partition-independent by the suite-wide invariant
-    * (integer ADC terms, id tie-breaks), so compacted-serving ≡
-    * uncompacted-serving exactly — the `ann_index_compact` gate reuses
-    * the committed append fixture as its oracle. Run it on the standing
-    * index every k appends/removes (k ~ 10 keeps scheduling width within
-    * 2× of natural; the right cadence is an ops dial, not a constant). */
-  def compactIvfPqIndex(index: IvfPqIndex,
-      partitions: Option[Int] = None,
-      durableRoot: Option[String] = None): IvfPqIndex =
-    graft.GraftCaches.inArtifactScope {
-      val n = partitions.getOrElse(
-        index.corpus.sparkSession.sessionState.conf.numShufflePartitions)
-      // durableRoot: the streaming parquet cut (see
-      // [[graft.functions.Dedup.compactDedupIndex]]) — the ANN members
-      // especially need it, their delta lineage roots are the pruned
-      // survivor epochs
-      // assigned and the pivot additionally sort on the cut key so the
-      // serve's lists⋈pivot join reads cached ordering (localCheckpoint
-      // preserves partitioning+ordering; the durable parquet root cannot,
-      // and streaming serving re-sorts — the documented trade)
-      def compacted(df: DataFrame, name: String,
-          sorted: Boolean = false): DataFrame = {
-        val cut0 = df.repartition(n, col("c_id"))
-        val cut = if (sorted) cut0.sortWithinPartitions(col("c_id")) else cut0
-        durableRoot match {
-          case Some(root) => graft.GraftCaches.durableCut(cut, s"$root/$name")
-          case None => graft.GraftCaches.checkpointed(cut)
-        }
-      }
-      val corpus = compacted(index.corpus, "corpus")
-      val assigned = compacted(index.assigned, "assigned", sorted = true)
-      val codes = compacted(index.codes, "codes")
-      // SERVING-PIVOT CUT: compaction leaves row content untouched, so the
-      // new generation's pivot is the OLD pivot re-cut at the target width
-      // — never a re-aggregation of the corpus-sized code table. Cut like
-      // the members (checkpoint / durable root) so the superseded chain
-      // can release without stranding the pivot's lineage.
-      val pivot = durableRoot match {
-        case Some(root) => graft.GraftCaches.durableCut(
-          pivotedCodesFrame(index.codes).repartition(n, col("c_id"))
-            .sortWithinPartitions(col("c_id")),
-          s"$root/pivot")
-        case None => graft.GraftCaches.checkpointed(
-          pivotedCodesFrame(index.codes).repartition(n, col("c_id"))
-            .sortWithinPartitions(col("c_id")))
-      }
-      codesPivotMemo.put(codesPivotKey(codes), pivot)
-      // content untouched ⇒ rows carry over; standalone cut ⇒ chain resets
-      withServingPivot(
-        IvfPqIndex(corpus, index.centroids, assigned, index.codebook, codes,
-          index.crossTerms, index.m, rows = index.rows,
-          listSizes = index.listSizes))
-    }
-
-  /** COMPACTION POLICY — the detector→actuator loop for
-    * [[compactIvfPqIndex]], completing the round's pattern (every ops
-    * dial derived, not pinned: [[autoGeometry]] for centroids,
-    * [[ivfPqRebuildIfStale]] for retraining, this for the merge cadence).
-    * "Every k appends" is the wrong trigger at 100 TB — batch sizes vary
-    * wildly, and what serving actually pays for is SCHEDULING WIDTH, so
-    * the detector reads the symptom directly. Two arms, both free of
-    * corpus-sized work:
-    *
-    *  - WIDTH (append fragmentation): the widest keyed frame exceeds
-    *    `maxPartitions` (defaulting to `widthFactor`× the session shuffle
-    *    parallelism — the width a fresh shuffle-built index would have).
-    *    Unions concatenate partitions, so k appends schedule k× the
-    *    tasks per serving scan regardless of data size. Planner-side
-    *    read (`rdd.getNumPartitions`), job-free only while the member
-    *    caches are filled: under AQE it plans table-cache stages, and an
-    *    emptied cache (e.g. one a file write's `recacheByPath` dropped)
-    *    is re-filled by this read — a corpus-sized recompute.
-    *  - EMPTINESS (remove churn, opt-in via `minRowsPerPartition` > 0):
-    *    anti-joins shrink rows but keep partition COUNT, so a
-    *    heavily-tombstoned index pays full scheduling width over
-    *    mostly-empty partitions. Fires when corpus rows fall below
-    *    `width · minRowsPerPartition` — one `count()` on an
-    *    already-persisted artifact frame.
-    *
-    * When neither fires the index passes through untouched (zero-cost
-    * no-op — the per-trigger call in the retention stream relies on
-    * this). When either fires, [[compactIvfPqIndex]] re-materializes at
-    * natural width; serving is partition-independent, so the
-    * `ann_compact_policy` gate pins policy-fired serving against the
-    * committed append fixture (k sub-appends are content-identical to
-    * one append — per-vector assignment and coding are per-row). */
-  def compactIvfPqIndexIfFragmented(index: IvfPqIndex,
-      maxPartitions: Option[Int] = None, widthFactor: Double = 4.0,
-      minRowsPerPartition: Long = 0L,
-      durableRoot: Option[String] = None): (IvfPqIndex, Boolean) = {
-    val natural =
-      index.corpus.sparkSession.sessionState.conf.numShufflePartitions
-    val bound = maxPartitions.getOrElse(math.ceil(widthFactor * natural).toInt)
-    val width = Seq(index.corpus, index.assigned, index.codes)
-      .map(_.rdd.getNumPartitions).max
-    // shared convergent target arithmetic — see [[Dedup.CompactionPolicy]]:
-    // width-arm lands inside the bound; emptiness-arm sizes from rows
-    CompactionPolicy.target(width, natural, bound,
-        index.corpus.count(), minRowsPerPartition) match {
-      case Some(t) => (compactIvfPqIndex(index, Some(t), durableRoot), true)
-      case None => (index, false)
-    }
-  }
 
   /** METADATA-FILTERED ANN over a built index — the vector-DB "filtered
     * search" surface: top-k among only the corpus vectors whose metadata
@@ -1402,10 +1162,8 @@ object Similarity {
     // ADC sums downstream — one thin-column exchange buys correctness for
     // any caller input
     val keep = meta.filter(pred).select(col("c_id")).distinct()
-    val filtered = IvfPqIndex(index.corpus, index.centroids,
-      index.assigned.join(keep, Seq("c_id")), index.codebook, index.codes,
-      index.crossTerms, index.m)
-    ivfPqTopKIndexed(queries, filtered, k, nProbe)
+    ivfPqTopKIndexed(queries,
+      index.copy(assigned = index.assigned.join(keep, Seq("c_id"))), k, nProbe)
   }
 
   /** Exact filtered search — brute-force cosine top-k restricted to the
@@ -1477,80 +1235,18 @@ object Similarity {
     listRows.unionByName(imbalance).unionByName(errRows)
   }
 
-  /** Release ONE index generation's DATA-tier caches (corpus, inverted
-    * lists, codes, serving pivot, and its delta chain) without touching
-    * the quantizer frames it SHARES with successor generations
-    * ([[ivfPqIndexAppend]] reuses centroids / codebook / cross-terms).
-    * Call it only on a generation superseded by a STANDALONE cut
-    * (remove, compaction, rebuild), after the successor materializes —
-    * an appended successor reads the superseded caches through its lazy
-    * unions. Otherwise every superseded generation keeps a full corpus
-    * copy pinned in the artifact tier, and the only other lever
-    * (`GraftCaches.releaseArtifacts()`) drops EVERYTHING including the
-    * live index and the memos. Unpersist is idempotent, so the artifact
-    * registry's own later release of the same frames is harmless. */
-  def releaseIndexData(index: IvfPqIndex, blocking: Boolean = false): Unit = {
-    index.corpus.unpersist(blocking)
-    index.assigned.unpersist(blocking)
-    index.codes.unpersist(blocking)
-    // the scorer's pivoted-codes cache rides the generation: drop it
-    // here so per-batch rolls in a serving stream release their pivots
-    // (the artifact registry's later unpersist of the same frame is
-    // idempotent and harmless)
-    codesPivotMemo.remove(codesPivotKey(index.codes))
-      .foreach(_.unpersist(blocking))
-    // delta generations: member unions above are uncached (no-op
-    // unpersist); the storage rides the chain
-    index.chain.release(blocking)
-  }
-
-  /** Materialize one generation's DATA-tier member caches (corpus,
-    * inverted lists, codes — the serving pivot is already counted at
-    * construction by [[withServingPivot]]). THE CUT-ROLL CONTRACT: a
-    * successor minted by a remove holds lazy anti-join caches OVER the
-    * superseded generation's caches, so they must fill BEFORE
-    * [[releaseIndexData]] drops the parents — a
-    * cache-to-cache copy here versus a full standing-lineage recompute
-    * (back to the last durable cut) charged to the first serving query
-    * after the roll. The serving rolls call this between the ref swap
-    * and the superseded generation's release; counts on already-filled
-    * caches are metadata-cheap, so the call is idempotent in cost too. */
-  def materializeIndexData(index: IvfPqIndex): Unit = {
-    index.codes.count(); index.assigned.count(); index.corpus.count()
-    ()
-  }
-
-  /** Drop a superseded codes frame's serving-pivot memo entry WITHOUT
-    * unpersisting its frame (delta generations share the pivot's cached
-    * pieces with their successors) — the per-roll hygiene of a
-    * serving stream, so the memo does not accrete one dead entry per
-    * micro-batch. */
-  private[graft] def dropCodesPivotEntry(codes: DataFrame): Unit = {
-    codesPivotMemo.remove(codesPivotKey(codes))
-    ()
-  }
-
-  /** Build-once memo over [[buildIvfPqIndex]]: one trained index per
-    * (session, corpus plan, parameters) — `ivfPqTopK` and
-    * `ivfPqRerankTopK` against the same corpus share one training run,
-    * like production's offline index + online serving split. Keyed by the
-    * ANALYZED plan's semantic hash, so two reads of the same table with
-    * differently-aliased but equivalent plans still share. Entries drop
-    * when [[graft.GraftCaches.releaseArtifacts]] runs (registered hook) —
-    * a stale handle can never serve a released artifact. */
-  private val indexMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int, Int, Int, Int), IvfPqIndex]
-  graft.GraftCaches.onArtifactRelease(() => indexMemo.clear())
-
+  /** Build-once memo over [[buildIvfPqIndex]] ([[graft.ArtifactMemo]]):
+    * one trained index per (session, corpus plan, parameters) —
+    * `ivfPqTopK` and `ivfPqRerankTopK` against the same corpus share one
+    * training run, like production's offline index + online serving
+    * split; differently-aliased but equivalent corpus plans share. */
   def ivfPqIndexFor(corpus: DataFrame, nCentroids: Int = 16,
       coarseIters: Int = 2, m: Int = 8, ksub: Int = 16,
-      pqIters: Int = 2): IvfPqIndex = {
-    val key = (System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.semanticHash(),
-      nCentroids, coarseIters, m, ksub, pqIters)
-    indexMemo.getOrElseUpdate(key,
-      buildIvfPqIndex(corpus, nCentroids, coarseIters, m, ksub, pqIters))
-  }
+      pqIters: Int = 2): IvfPqIndex =
+    graft.ArtifactMemo("ivfPqIndex", corpus,
+        nCentroids, coarseIters, m, ksub, pqIters) {
+      buildIvfPqIndex(corpus, nCentroids, coarseIters, m, ksub, pqIters)
+    }
 
   // ------------------------------------------------- Scale-adaptive geometry
   /** SCALE-ADAPTIVE IVF GEOMETRY — the production sizing rule. A FIXED
@@ -1588,10 +1284,6 @@ object Similarity {
     * every vector once. */
   val AutoTrainPerCentroid = 128
 
-  private val autoMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int, Int, Int, Int, Int), (IvfPqIndex, Int)]
-  graft.GraftCaches.onArtifactRelease(() => autoMemo.clear())
-
   /** Build-once memo of the AUTO-GEOMETRY IVF-PQ index: counts the corpus
     * (one metadata-only parquet job), derives `(nCentroids, nProbe)` from
     * [[autoGeometry]], trains the quantizers on a deterministic
@@ -1599,16 +1291,13 @@ object Similarity {
     * returns the built index with its recommended nProbe. Same artifact
     * lifecycle as [[ivfPqIndexFor]]. */
   def ivfPqAutoIndexFor(corpus: DataFrame, m: Int = 16, ksub: Int = 32,
-      coarseIters: Int = 1, pqIters: Int = 1): (IvfPqIndex, Int) = {
-    val key = (System.identityHashCode(corpus.sparkSession),
-      corpus.queryExecution.analyzed.semanticHash(), m, ksub, coarseIters, pqIters)
-    autoMemo.getOrElseUpdate(key, {
+      coarseIters: Int = 1, pqIters: Int = 1): (IvfPqIndex, Int) =
+    graft.ArtifactMemo("ivfPqAutoIndex", corpus, m, ksub, coarseIters, pqIters) {
       val n = corpus.count()
       val (nc, np) = autoGeometry(n)
       (buildIvfPqIndex(corpus, nc, coarseIters, m, ksub, pqIters,
         autoTrainSample(n, nc)), np)
-    })
-  }
+    }
 
   /** Deterministic hash-thresholded sample of ~[[AutoTrainPerCentroid]]·nc
     * training vectors (cap ≥ N → no predicate, training sees the full
@@ -1646,15 +1335,15 @@ object Similarity {
     * [[ivfPqAutoIndexFor]], so rebuilt-serving equals fresh-auto-built
     * serving exactly (the `ann_rebuild_policy` gate's closed-form oracle).
     * Returns `(index, nProbe, rebuilt)`; on `rebuilt = true` the caller
-    * rolls generations ([[releaseIndexData]] on the superseded one once
-    * the new index serves — the AnnServing rollover pattern, pinned with
-    * a regeometry case in StreamingSpec). */
+    * rolls generations ([[StandingIndex.roll]] releases the superseded
+    * one once the new index serves — the AnnServing rollover pattern,
+    * pinned with a regeometry case in StreamingSpec). */
   def ivfPqRebuildIfStale(index: IvfPqIndex, m: Int = 16, ksub: Int = 32,
       coarseIters: Int = 1, pqIters: Int = 1, geometryFactor: Double = 1.3,
       imbalanceMaxPermille: Long = 4000L): (IvfPqIndex, Int, Boolean) = {
     require(geometryFactor > 1.0, "a factor ≤ 1 rebuilds on every call")
     // rolled-forward counter: the no-fire path costs zero corpus jobs
-    val n = index.corpusRows
+    val n = index.rowCount
     val ncHave = index.centroids.count().toInt
     val (ncWant, npWant) = autoGeometry(n)
     val geomStale = ncWant >= geometryFactor * ncHave ||
@@ -1730,7 +1419,7 @@ object Similarity {
       coarseIters: Int = 1, pqIters: Int = 1, geometryFactor: Double = 1.3,
       imbalanceMaxPermille: Long = 4000L): (IvfPqIndex, Int, Boolean, Boolean) = {
     require(geometryFactor > 1.0, "a factor ≤ 1 rebuilds on every call")
-    val n = index.corpusRows // rolled-forward counter
+    val n = index.rowCount // rolled-forward counter
     // count AND max id in one pass: fresh GROW ids must mint past the
     // LARGEST existing cent_id, not the centroid COUNT — after a SHRINK
     // the surviving ids are non-contiguous, and count-based minting
@@ -1853,24 +1542,20 @@ object Similarity {
           Seq("ut_cent_id"), "left_anti")
         .unionByName(crossTermRows(newCentroids, index.codebook, index.m))
         .localCheckpointTracked()
-      // SERVING-PIVOT SEED (see ivfPqIndexAppend/ivfPqIndexRemove): only
-      // moved members change codes, so the new pivot is cached-base-pivot
-      // minus moved ids union the delta's own pivot — moved-sized work
-      // instead of a corpus-sized re-aggregation
-      codesPivotMemo.put(codesPivotKey(codes2),
-        graft.GraftCaches.persistedArtifact(
-          pivotedCodesFrame(index.codes)
-            .join(members.select(col("c_id")), Seq("c_id"), "left_anti")
-            .unionByName(newCodes.groupBy(col("c_id"))
-              .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-              .select(col("c_id"), col("sc.code").as("codes")))))
-      codes2.count(); assigned2.count(); centroids2.count()
+      // SERVING PIVOT: only moved members change codes, so the new pivot
+      // is the cached base pivot minus moved ids union the delta's own
+      // pivot — moved-sized work instead of a corpus-sized re-aggregation
+      val pivot2 = graft.GraftCaches.persistedArtifact(index.pivot
+        .join(members.select(col("c_id")), Seq("c_id"), "left_anti")
+        .unionByName(pivotRows(newCodes)))
+      val utab2 = utabOf(crossTerms2)
+      graft.GraftCaches.fill(codes2, assigned2, centroids2, pivot2, utab2)
       // the corpus frame is SHARED with the pre-fire generation, so a
       // chained (delta) index's chain carries forward — a warm fire is
       // not a standalone cut
-      (withServingPivot(IvfPqIndex(index.corpus, centroids2, assigned2,
-        index.codebook, codes2, crossTerms2, index.m,
-        rows = Some(n), chain = index.chain)), npWant, true, true)
+      (IvfPqIndex(index.corpus, centroids2, assigned2, index.codebook, codes2,
+        crossTerms2, index.m, pivot2, utab2, rows = Some(n),
+        chain = index.chain), npWant, true, true)
     } else graft.GraftCaches.inArtifactScope {
       // SHRINK: merge the k coldest lists into their nearest survivors.
       // The k coldest ids stay a k-row FRAME (no driver collect, no
@@ -1910,19 +1595,16 @@ object Similarity {
         .join(broadcast(dropFrame.select(col("cent_id").as("ut_cent_id"))),
           Seq("ut_cent_id"), "left_anti")
         .localCheckpointTracked()
-      // serving-pivot seed, the GROW arm's shape (moved-sized work)
-      codesPivotMemo.put(codesPivotKey(codes2),
-        graft.GraftCaches.persistedArtifact(
-          pivotedCodesFrame(index.codes)
-            .join(moved.select(col("c_id")), Seq("c_id"), "left_anti")
-            .unionByName(newCodes.groupBy(col("c_id"))
-              .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-              .select(col("c_id"), col("sc.code").as("codes")))))
-      codes2.count(); assigned2.count(); survivors.count()
+      // serving pivot, the GROW arm's shape (moved-sized work)
+      val pivot2 = graft.GraftCaches.persistedArtifact(index.pivot
+        .join(moved.select(col("c_id")), Seq("c_id"), "left_anti")
+        .unionByName(pivotRows(newCodes)))
+      val utab2 = utabOf(crossTerms2)
+      graft.GraftCaches.fill(codes2, assigned2, survivors, pivot2, utab2)
       // corpus shared with the pre-fire generation — chain carries forward
-      (withServingPivot(IvfPqIndex(index.corpus, survivors, assigned2,
-        index.codebook, codes2, crossTerms2, index.m,
-        rows = Some(n), chain = index.chain)), npWant, true, true)
+      (IvfPqIndex(index.corpus, survivors, assigned2, index.codebook, codes2,
+        crossTerms2, index.m, pivot2, utab2, rows = Some(n),
+        chain = index.chain), npWant, true, true)
     }
   }
 
@@ -1987,64 +1669,44 @@ object Similarity {
     * candidate) pair, the integer-decomposed approximate cosine rounded
     * to the output's 6-dp granularity. */
   /** Per-vector PQ codes pivoted to one `array<int>` row (ordered by
-    * sub) — the scorer's join side. Corpus-sized, so it is computed ONCE
-    * per index generation: memoized by the codes frame's semantic hash
-    * and persisted in the artifact tier; [[releaseIndexData]] drops the
-    * entry with the generation so long-lived serving streams (per-batch
-    * rolls) cannot accrete dead pivots. */
-  private val codesPivotMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int), DataFrame]
-  graft.GraftCaches.onArtifactRelease(() => codesPivotMemo.clear())
+    * sub) — the scorer's join side, unpartitioned: the batch-sized form
+    * an append's or warm rebuild's delta pivot takes. */
+  private def pivotRows(codes: DataFrame): DataFrame =
+    codes.groupBy(col("c_id"))
+      .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
+      .select(col("c_id"), col("sc.code").as("codes"))
 
-  private def codesPivotKey(codes: DataFrame): (Int, Int) =
-    (System.identityHashCode(codes.sparkSession),
-      codes.queryExecution.analyzed.semanticHash())
-
-  private def pivotedCodesFrame(codes: DataFrame): DataFrame =
-    codesPivotMemo.getOrElseUpdate(codesPivotKey(codes),
-      graft.GraftCaches.persistedArtifact(
-        codes.groupBy(col("c_id"))
-          .agg(array_sort(collect_list(struct(col("sub"), col("code")))).as("sc"))
-          .select(col("c_id"), col("sc.code").as("codes"))
-          // serving-width cut (see buildIvfPqIndex's assigned): the PQ ADC
-          // kernel scans this cache unshuffled, so its parallelism is this
-          // frame's width — AQE coalesces the tiny pivot shuffle to one
-          // partition otherwise. Integer content, per-row scoring. Sorted
-          // on the cut key so the serve's lists⋈pivot join plans no sort.
-          .repartition(
-            codes.sparkSession.sessionState.conf.numShufflePartitions,
-            col("c_id"))
-          .sortWithinPartitions(col("c_id"))))
-
-  private def pivotedCodes(index: IvfPqIndex): DataFrame =
-    pivotedCodesFrame(index.codes)
+  /** The serving pivot of a whole code table, persisted in the artifact
+    * tier. Corpus-sized, so an index computes it ONCE per generation (a
+    * member of [[IvfPqIndex]], a field of [[PqIndex]]): derived
+    * generations seed theirs from the predecessor's pivot instead. A
+    * serving-width cut (see buildIvfPqIndex's assigned): the PQ ADC
+    * kernel scans this cache unshuffled, so its parallelism is this
+    * frame's width — AQE coalesces the tiny pivot shuffle to one
+    * partition otherwise. Integer content, per-row scoring. Sorted on
+    * the cut key so the serve's lists⋈pivot join plans no sort. */
+  private def pivotOf(codes: DataFrame): DataFrame =
+    graft.GraftCaches.persistedArtifact(pivotRows(codes)
+      .repartition(codes.sparkSession.sessionState.conf.numShufflePartitions,
+        col("c_id"))
+      .sortWithinPartitions(col("c_id")))
 
   /** QUERY-INDEPENDENT pivoted cross-term lookup table (`utab`) — one
-    * `array[sub][code]` row per coarse centroid. The serve previously
-    * re-aggregated the cross-term rows into this shape PER QUERY CALL
-    * (two exchanges + two object aggregations before the broadcast —
-    * pure fixed cost, the table depends only on index state). Memoized
-    * per cross-term frame like [[codesPivotMemo]] and materialized at
-    * index construction ([[withServingPivot]]), so a serve just
-    * broadcasts the cached nCentroids-row table. Cross-terms are
-    * quantizer-tier state shared across append generations (never
-    * chained), so entries drop with the artifact tier, not per roll. */
-  private val crossTabMemo = scala.collection.concurrent.TrieMap
-    .empty[(Int, Int), DataFrame]
-  graft.GraftCaches.onArtifactRelease(() => crossTabMemo.clear())
-
-  private def pivotedCrossTerms(crossTerms: DataFrame): DataFrame =
-    crossTabMemo.getOrElseUpdate(
-      (System.identityHashCode(crossTerms.sparkSession),
-        crossTerms.queryExecution.analyzed.semanticHash()),
-      graft.GraftCaches.persistedArtifact(
-        crossTerms
-          .groupBy(col("ut_cent_id"), col("ut_sub"))
-          .agg(array_sort(collect_list(struct(col("ut_cent"), col("ur2rn2_e9")))).as("cs"))
-          .select(col("ut_cent_id"), col("ut_sub"), col("cs.ur2rn2_e9").as("arr"))
-          .groupBy(col("ut_cent_id"))
-          .agg(array_sort(collect_list(struct(col("ut_sub"), col("arr")))).as("sa"))
-          .select(col("ut_cent_id").as("ut_cid"), col("sa.arr").as("utab"))))
+    * `array[sub][code]` row per coarse centroid, persisted in the
+    * artifact tier. The serve previously re-aggregated the cross-term
+    * rows into this shape PER QUERY CALL (two exchanges + two object
+    * aggregations before the broadcast — pure fixed cost, the table
+    * depends only on quantizer state); it is computed with the
+    * quantizers instead and rides every append generation with them. */
+  private def utabOf(crossTerms: DataFrame): DataFrame =
+    graft.GraftCaches.persistedArtifact(
+      crossTerms
+        .groupBy(col("ut_cent_id"), col("ut_sub"))
+        .agg(array_sort(collect_list(struct(col("ut_cent"), col("ur2rn2_e9")))).as("cs"))
+        .select(col("ut_cent_id"), col("ut_sub"), col("cs.ur2rn2_e9").as("arr"))
+        .groupBy(col("ut_cent_id"))
+        .agg(array_sort(collect_list(struct(col("ut_sub"), col("arr")))).as("sa"))
+        .select(col("ut_cent_id").as("ut_cid"), col("sa.arr").as("utab")))
 
   private def ivfPqAdcScored(queries: DataFrame, index: IvfPqIndex,
       nProbe: Int): DataFrame = {
@@ -2099,7 +1761,7 @@ object Similarity {
     // ×|Q| blow-up then runs map-side against the broadcast probe frame:
     // no candidate-sized exchange exists anywhere in the serve.
     val candidates = index.assigned
-      .join(pivotedCodes(index), Seq("c_id"))
+      .join(index.pivot, Seq("c_id"))
       .join(broadcast(probes), Seq("cent_id"))
       .filter(col("q_id") =!= col("c_id"))
     // PIVOTED ADC LOOKUP TABLES — one row per query / per coarse cell,
@@ -2122,7 +1784,7 @@ object Similarity {
       .groupBy(col("qt_qid"))
       .agg(array_sort(collect_list(struct(col("sub"), col("arr")))).as("sa"))
       .select(col("qt_qid"), col("sa.arr").as("qtab"))
-    val utab = pivotedCrossTerms(index.crossTerms)
+    val utab = index.utab
     val scored = candidates
       .join(broadcast(qtab), col("q_id") === col("qt_qid"))
       .join(broadcast(utab), col("cent_id") === col("ut_cid"))

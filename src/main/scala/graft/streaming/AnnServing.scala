@@ -19,7 +19,7 @@ import graft.functions.Similarity
   *
   * At scale this is the retrieval serving tier: the index artifacts are
   * built offline ([[Similarity.buildIvfPqIndex]]) or loaded
-  * ([[Similarity.loadIvfPqIndex]]), stay resident across micro-batches,
+  * (`Similarity.IvfPqIndex.load`), stay resident across micro-batches,
   * and each trigger pays only |batch|·(probes + ADC) work. The demo sink
   * appends parquet per micro-batch; foreachBatch is at-least-once under
   * retries, so a production sink should write epoch-keyed paths or an
@@ -57,11 +57,10 @@ object AnnServing {
     *   1. `g2 = `[[Similarity.ivfPqIndexAppend]]`(g1, batch)` — a delta
     *      generation whose members are lazy unions over g1's caches
     *      (quantizer frames shared: append never retrains);
-    *   2. `indexRef.set(g2)`;
-    *   3. release NOTHING: g2 reads g1's caches. Release only at a CUT —
-    *      once a policy returns a standalone generation (compaction,
-    *      rebuild, remove), set it, then release the superseded chain
-    *      ([[Similarity.releaseIndexData]] on the pre-cut generation).
+    *   2. `StandingIndex.roll(g2, Seq(g1))(indexRef.set)` — a delta
+    *      successor is only set (it reads g1's caches); a standalone one
+    *      (compaction, rebuild, remove) is filled, set, and the
+    *      superseded chain releases.
     *
     * A batch already executing against the previous generation still
     * computes correctly (unpersist does not invalidate the plan, it

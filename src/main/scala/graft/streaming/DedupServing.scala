@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.functions.Dedup
+import graft.functions.{Dedup, StandingIndex}
 
 /** STREAMING INGEST DEDUP — the streaming face of the standing dedup
   * index ([[Dedup.DedupIndex]]), completing the symmetry with
@@ -19,14 +19,13 @@ import graft.functions.Dedup
   *      staging + bucket equi-joins, never a corpus recompute;
   *   2. APPENDS itself into the index ([[Dedup.dedupIndexAppend]] — a
   *      delta generation over the superseded one's caches), lets the
-  *      COMPACTION policy ([[Dedup.compactDedupIndexIfFragmented]]) bound
-  *      the union width, and rolls the served reference — so batch N+1
-  *      dedups against the corpus AND batches 1..N. A routine roll
-  *      releases nothing (the successor reads the shared caches); a
-  *      compaction cut materializes through a durable parquet root under
-  *      [[IngestServing.stateRoot]] of `outDir` and releases the pre-cut
-  *      chain. No banding policy runs here, so the banding — and with it
-  *      the pair contract below — is the standing index's own.
+  *      COMPACTION policy ([[StandingIndex.compactIfFragmented]]) bound
+  *      the union width, and rolls the served reference
+  *      ([[StandingIndex.roll]]) — so batch N+1 dedups against the corpus
+  *      AND batches 1..N. A compaction cut materializes through a durable
+  *      parquet root under [[IngestServing.stateRoot]] of `outDir`. No
+  *      banding policy runs here, so the banding — and with it the pair
+  *      contract below — is the standing index's own.
   *
   * This is the ingest-time dedup front door of a training-data pipeline:
   * the near-dup decision is made as data ARRIVES, against everything
@@ -91,15 +90,11 @@ object DedupServing {
           .write.mode("append").parquet(outDir)
         // roll the generation: later batches must dedup against this one
         val grown = Dedup.dedupIndexAppendStaged(index, staged)
-        val (served, cut) = Dedup.compactDedupIndexIfFragmented(grown,
+        val (served, cut) = grown.compactIfFragmented(
           durableRoot = Some(s"$state/_gen/dedup/b$batchId"))
-        indexRef.set(served)
-        // only a cut leaves the pre-cut chain unread by any live handle;
-        // its parquet root also supersedes every older one
-        if (cut) {
-          grown.chain.release()
-          IngestServing.pruneEpochs(spark, s"$state/_gen/dedup", batchId)
-        }
+        StandingIndex.roll(served, Seq(index, grown))(indexRef.set)
+        // a cut's parquet root supersedes every older one
+        if (cut) IngestServing.pruneEpochs(spark, s"$state/_gen/dedup", batchId)
         // batch staging was working-tier
         graft.GraftCaches.unpersistAll()
         ()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.GraftCaches.Persistable
-import graft.functions.{Dedup, Multimodal, Similarity}
+import graft.functions.{Dedup, Multimodal, Similarity, StandingIndex}
 
 /** STREAMING INGEST PIPELINE — the streaming face of the composed
   * `ingest_pipeline_policy` gate, joining [[DedupServing]] (standing
@@ -35,7 +35,7 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   *      than the catalog carries, the band projection recomputes over the
   *      catalog's own staged frame — no corpus re-read), falls back to
   *      the COMPACTION policy when the banding passes through
-  *      ([[Dedup.compactDedupIndexIfFragmented]] — k appended batches
+  *      ([[StandingIndex.compactIfFragmented]] — k appended batches
   *      otherwise concatenate k generations of partitions into every
   *      bucket join), and rolls the served reference;
   *   4. appends only SURVIVOR embeddings into the ANN index
@@ -49,18 +49,15 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   *      [[AnnServing.startServingStreamOp]] contract, since a rebuild
   *      changes inverted-list geometry and the probe depth must move
   *      with it; when the policy passes through, the COMPACTION policy
-  *      ([[Similarity.compactIvfPqIndexIfFragmented]]) bounds the keyed
+  *      ([[StandingIndex.compactIfFragmented]]) bounds the keyed
   *      frames' scheduling width the same way.
   *
-  * Every append is a DELTA generation ([[Dedup.dedupIndexAppend]] and
-  * its siblings): only the batch's frames persist, and the successor's
-  * members are lazy unions over the superseded generation's caches, so
-  * per-batch append cost stays batch-sized. A routine roll therefore
-  * releases NOTHING — the shared frames ride each index's `chain` — and
-  * when a POLICY CUTS a standalone generation (re-band, rebuild,
-  * re-bucket, compaction) this stream releases the whole pre-cut chain,
-  * so executor storage stays bounded by one generation plus the deltas
-  * since the last cut. Survivor embeddings cut lineage through an
+  * Every generation change is a [[StandingIndex.roll]] (the lifecycle
+  * contract lives there): appends are delta generations, so a routine
+  * roll releases nothing, and a policy cut (re-band, rebuild, re-bucket,
+  * compaction) releases the whole pre-cut chain — executor storage stays
+  * bounded by one generation plus the deltas since the last cut.
+  * Survivor embeddings cut lineage through an
   * epoch-keyed parquet write under `<state>/_survivors` (a real lineage
   * root for the ANN deltas), compactions cut through durable parquet
   * roots under `<state>/_gen`, and a compaction cut prunes the epochs
@@ -259,21 +256,13 @@ object IngestServing {
           Some(s"$state/_gen/$family/b$batchId")
         val servedDedup =
           if (rebanded) rebandedDedup
-          else Dedup.compactDedupIndexIfFragmented(grownDedup,
-            compactMaxPartitions, compactWidthFactor,
-            durableRoot = genRoot("dedup"))._1
-        dedupRef.set(servedDedup)
-        // a routine roll releases nothing — the successor's lazy unions
-        // read the superseded generation's caches. When a policy cut a
-        // standalone generation, the pre-cut chain (base frames + every
-        // delta) is unreadable by any live handle: release it
-        if (servedDedup.chain.isEmpty) {
-          grownDedup.chain.release()
-          // compaction cuts are parquet-rooted → older gen roots are
-          // unreferenced (reband cuts keep lineage: no prune)
-          if (!rebanded) pruneEpochs(batch.sparkSession,
-            s"$state/_gen/dedup", batchId)
-        }
+          else grownDedup.compactIfFragmented(compactMaxPartitions,
+            compactWidthFactor, durableRoot = genRoot("dedup"))._1
+        StandingIndex.roll(servedDedup, Seq(dedupIx, grownDedup))(dedupRef.set)
+        // compaction cuts are parquet-rooted → older gen roots are
+        // unreferenced (reband cuts keep lineage: no prune)
+        if (servedDedup.chain.isEmpty && !rebanded)
+          pruneEpochs(batch.sparkSession, s"$state/_gen/dedup", batchId)
         // roll the ANN generation on the SURVIVORS (accepted-corpus
         // semantics), then let the rebuild policy pick the geometry; when
         // it passes through, the compaction policy bounds scheduling width
@@ -283,29 +272,19 @@ object IngestServing {
           m, ksub, coarseIters, pqIters, geometryFactor)
         val served =
           if (rebuilt) rebuiltAnn
-          else Similarity.compactIvfPqIndexIfFragmented(grownAnn,
-            compactMaxPartitions, compactWidthFactor,
-            durableRoot = genRoot("ann"))._1
-        annOpRef.set((served, np))
-        // per-roll hygiene: the superseded generation's serving-pivot
-        // memo entry drops (its cached pieces stay — shared with the
-        // successor); on a policy cut the whole pre-cut chain releases
-        Similarity.dropCodesPivotEntry(annIx.codes)
-        if (served.chain.isEmpty) {
-          grownAnn.chain.release()
-          Similarity.dropCodesPivotEntry(grownAnn.codes)
-          // a COMPACTION cut is parquet-rooted: the superseded survivor
-          // epochs (the ANN deltas' lineage roots) and older gen roots
-          // are unreferenced by anything live — reclaim them in the
-          // same roll (the r13 unbounded-_survivors-growth finding).
-          // A REBUILD cut keeps lineage through the pre-cut chain, so
-          // it leaves the epochs to the next compaction cut.
-          if (!rebuilt) {
-            pruneEpochs(batch.sparkSession,
-              s"$state/_survivors", batchId)
-            pruneEpochs(batch.sparkSession,
-              s"$state/_gen/ann", batchId)
-          }
+          else grownAnn.compactIfFragmented(compactMaxPartitions,
+            compactWidthFactor, durableRoot = genRoot("ann"))._1
+        StandingIndex.roll(served, Seq(annIx, grownAnn))(ix =>
+          annOpRef.set((ix, np)))
+        // a COMPACTION cut is parquet-rooted: the superseded survivor
+        // epochs (the ANN deltas' lineage roots) and older gen roots are
+        // unreferenced by anything live — reclaim them in the same roll
+        // (the r13 unbounded-_survivors-growth finding). A REBUILD cut
+        // keeps lineage through the pre-cut chain, so it leaves the
+        // epochs to the next compaction cut.
+        if (served.chain.isEmpty && !rebuilt) {
+          pruneEpochs(batch.sparkSession, s"$state/_survivors", batchId)
+          pruneEpochs(batch.sparkSession, s"$state/_gen/ann", batchId)
         }
         // roll the EMBEDDING catalog on the whole batch (seen-corpus
         // semantics, like the dedup catalog — semantic near-dup checks
@@ -324,15 +303,11 @@ object IngestServing {
             Dedup.rebuildEmbIndexIfStale(grownEmb, embTargetBucket)
           val servedEmb =
             if (rebucketed) rebuiltEmb
-            else Dedup.compactEmbIndexIfFragmented(grownEmb,
-              compactMaxPartitions, compactWidthFactor,
-              durableRoot = genRoot("emb"))._1
-          ref.set(servedEmb)
-          if (servedEmb.chain.isEmpty) {
-            grownEmb.chain.release()
-            if (!rebucketed) pruneEpochs(batch.sparkSession,
-              s"$state/_gen/emb", batchId)
-          }
+            else grownEmb.compactIfFragmented(compactMaxPartitions,
+              compactWidthFactor, durableRoot = genRoot("emb"))._1
+          StandingIndex.roll(servedEmb, Seq(embIx, grownEmb))(ref.set)
+          if (servedEmb.chain.isEmpty && !rebucketed)
+            pruneEpochs(batch.sparkSession, s"$state/_gen/emb", batchId)
         }
         // roll the PHASH catalog on the whole batch's media payloads
         // (seen-corpus semantics like the text/embedding catalogs): the
@@ -344,16 +319,13 @@ object IngestServing {
           val phIx = ref.get()
           val media = batch.select(col("doc_id").as("media_id"), col("payload"))
           val grownPh = Multimodal.phashIndexAppend(phIx, media)
-          val (servedPh, _) = Multimodal.compactPhashIndexIfFragmented(grownPh,
+          val (servedPh, _) = grownPh.compactIfFragmented(
             compactMaxPartitions, compactWidthFactor,
             durableRoot = genRoot("phash"))
-          ref.set(servedPh)
-          if (servedPh.chain.isEmpty) {
-            grownPh.chain.release()
-            // phash cuts are always compaction-fired (no geometry policy)
-            pruneEpochs(batch.sparkSession,
-              s"$state/_gen/phash", batchId)
-          }
+          StandingIndex.roll(servedPh, Seq(phIx, grownPh))(ref.set)
+          // phash cuts are always compaction-fired (no geometry policy)
+          if (servedPh.chain.isEmpty)
+            pruneEpochs(batch.sparkSession, s"$state/_gen/phash", batchId)
         }
         graft.GraftCaches.unpersistAll()
         ()

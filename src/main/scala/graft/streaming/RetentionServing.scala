@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
-import graft.functions.{Dedup, Multimodal, Similarity}
+import graft.functions.{Dedup, Multimodal, Similarity, StandingIndex}
 
 /** STREAMING RETENTION — the tombstone front door, completing the
   * streaming lifecycle [[IngestServing]] starts: ingest APPENDS roll the
@@ -22,10 +22,10 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   * Each tombstone micro-batch
   *
   *   1. REMOVES the batch ids from the standing dedup catalog and the
-  *      standing ANN index ([[Dedup.dedupIndexRemove]] /
-  *      [[Similarity.ivfPqIndexRemove]] — broadcast anti-joins on the
-  *      keyed frames; quantizers untouched; absent ids ignored, which is
-  *      what makes this stream safe under at-least-once replay);
+  *      standing ANN index ([[StandingIndex.remove]] — broadcast
+  *      anti-joins on the keyed frames; quantizers untouched; absent ids
+  *      ignored, which is what makes this stream safe under
+  *      at-least-once replay);
   *   2. runs the REBUILD policies on the shrunk structures
   *      ([[Dedup.rebuildCatalogIfStale]] / [[Similarity.ivfPqRebuildIfStale]]
   *      — mass deletions shrink the corpus the same way ingest grows it,
@@ -33,17 +33,15 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   *      derived dials must follow; both policies detect drift in either
   *      direction);
   *   3. when no rebuild fired, runs the COMPACTION policy
-  *      ([[Dedup.compactDedupIndexIfFragmented]] /
-  *      [[Similarity.compactIvfPqIndexIfFragmented]]): anti-joins keep
+  *      ([[StandingIndex.compactIfFragmented]]): anti-joins keep
   *      partition width while shedding rows, so a churned index pays
   *      full-width scheduling over mostly-empty partitions until the
   *      emptiness arm (or accumulated-append width) says merge. A rebuild
   *      already re-materializes at natural width, so the arms are
   *      mutually exclusive per trigger;
-  *   4. rolls the served references atomically and releases the
-  *      superseded generations ([[AnnServing]]'s rollover contract —
-  *      in-flight readers keep their generation, the next reader sees
-  *      the shrunk one).
+  *   4. rolls the served references ([[StandingIndex.roll]] — in-flight
+  *      readers keep their generation, the next reader sees the shrunk
+  *      one).
   *
   * IDEMPOTENT REPLAY is the restart story and is pinned in StreamingSpec:
   * with no checkpoint a restarted stream replays every tombstone file,
@@ -51,7 +49,7 @@ import graft.functions.{Dedup, Multimodal, Similarity}
   * deterministic functions of the surviving state, the replayed stream
   * converges to the same served state — no recovery hook needed (pass
   * `checkpointLocation` anyway in production to skip the wasted work).
-  * This is exactly why [[Similarity.ivfPqIndexRemove]] specifies
+  * This is exactly why [[StandingIndex.remove]] specifies
   * tombstone-replay idempotence rather than erroring on unknown ids.
   *
   * At 100 TB the per-trigger cost is one broadcast anti-join per keyed
@@ -108,59 +106,39 @@ object RetentionServing {
         val ids = batch.select(col("doc_id"))
         // dedup catalog: remove → banding policy → compaction policy
         val dedupIx = dedupRef.get()
-        val shrunkD = Dedup.dedupIndexRemove(dedupIx, ids)
+        val shrunkD = dedupIx.remove(ids)
         val (rebanded, rebandFired) =
           Dedup.rebuildCatalogIfStale(shrunkD, threshold)
         val servedD =
           if (rebandFired) rebanded
-          else Dedup.compactDedupIndexIfFragmented(shrunkD,
-            compactMaxPartitions, compactWidthFactor,
-            compactMinRowsPerPartition)._1
-        dedupRef.set(servedD)
-        // materialize-before-release: remove paths leave member caches
-        // lazy — fill them from the still-cached predecessor before it
-        // (and, for a delta generation, its whole chain) releases
-        Dedup.materializeDedupIndex(servedD)
-        Dedup.releaseDedupIndex(dedupIx)
-        // on reband the staged frame is SHARED with the served catalog —
-        // release the superseded band frame alone; on compaction both
-        // shrunk frames are superseded
-        if (rebandFired) shrunkD.bands.unpersist(false)
-        else if (servedD ne shrunkD) Dedup.releaseDedupIndex(shrunkD)
+          else shrunkD.compactIfFragmented(compactMaxPartitions,
+            compactWidthFactor, compactMinRowsPerPartition)._1
+        StandingIndex.roll(servedD, Seq(dedupIx, shrunkD))(dedupRef.set)
         // ANN index: remove → geometry policy → compaction policy
         val (annIx, _) = annOpRef.get()
-        val shrunkA = Similarity.ivfPqIndexRemove(annIx,
-          ids.select(col("doc_id").as("vec_id")))
+        val shrunkA = annIx.remove(ids.select(col("doc_id").as("vec_id")))
         val (rebuilt, np, rebuildFired) = Similarity.ivfPqRebuildIfStale(
           shrunkA, m, ksub, coarseIters, pqIters, geometryFactor)
         val servedA =
           if (rebuildFired) rebuilt
-          else Similarity.compactIvfPqIndexIfFragmented(shrunkA,
-            compactMaxPartitions, compactWidthFactor,
-            compactMinRowsPerPartition)._1
-        annOpRef.set((servedA, np))
-        Similarity.materializeIndexData(servedA) // materialize-before-release
-        Similarity.releaseIndexData(annIx)
-        if (servedA ne shrunkA) Similarity.releaseIndexData(shrunkA)
+          else shrunkA.compactIfFragmented(compactMaxPartitions,
+            compactWidthFactor, compactMinRowsPerPartition)._1
+        StandingIndex.roll(servedA, Seq(annIx, shrunkA))(ix =>
+          annOpRef.set((ix, np)))
         // embedding catalog: remove → plane policy → compaction policy —
         // the third standing structure leaves on the same tombstones
         // (vec_id = doc_id, the ingest-side convention); removes ignore
         // absent ids, so replay idempotence holds here too
         embRef.foreach { ref =>
           val embIx = ref.get()
-          val shrunkE = Dedup.embIndexRemove(embIx,
-            ids.select(col("doc_id").as("vec_id")))
+          val shrunkE = embIx.remove(ids.select(col("doc_id").as("vec_id")))
           val (rebuiltE, rebucketed) =
             Dedup.rebuildEmbIndexIfStale(shrunkE, embTargetBucket)
           val servedE =
             if (rebucketed) rebuiltE
-            else Dedup.compactEmbIndexIfFragmented(shrunkE,
-              compactMaxPartitions, compactWidthFactor,
-              compactMinRowsPerPartition)._1
-          ref.set(servedE)
-          Dedup.materializeEmbIndex(servedE) // materialize-before-release
-          Dedup.releaseEmbIndex(embIx)
-          if (servedE ne shrunkE) Dedup.releaseEmbIndex(shrunkE)
+            else shrunkE.compactIfFragmented(compactMaxPartitions,
+              compactWidthFactor, compactMinRowsPerPartition)._1
+          StandingIndex.roll(servedE, Seq(embIx, shrunkE))(ref.set)
         }
         // phash catalog: remove → compaction policy — the FOURTH standing
         // family leaves on the same tombstones (media_id = doc_id, the
@@ -171,15 +149,10 @@ object RetentionServing {
         // ignore absent ids, preserving replay idempotence
         phashRef.foreach { ref =>
           val phIx = ref.get()
-          val shrunkP = Multimodal.phashIndexRemove(phIx,
-            ids.select(col("doc_id").as("media_id")))
-          val (servedP, _) = Multimodal.compactPhashIndexIfFragmented(shrunkP,
-            compactMaxPartitions, compactWidthFactor,
-            compactMinRowsPerPartition)
-          ref.set(servedP)
-          Multimodal.materializePhashIndex(servedP) // materialize-before-release
-          Multimodal.releasePhashIndex(phIx)
-          if (servedP ne shrunkP) Multimodal.releasePhashIndex(shrunkP)
+          val shrunkP = phIx.remove(ids.select(col("doc_id").as("media_id")))
+          val (servedP, _) = shrunkP.compactIfFragmented(compactMaxPartitions,
+            compactWidthFactor, compactMinRowsPerPartition)
+          StandingIndex.roll(servedP, Seq(phIx, shrunkP))(ref.set)
         }
         graft.GraftCaches.unpersistAll()
         ()

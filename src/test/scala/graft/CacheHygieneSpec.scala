@@ -70,4 +70,30 @@ class CacheHygieneSpec extends AnyFunSuite {
             .filterKeys(leftover).values.map(_.toString).mkString(" | ")})")
     }
   }
+
+  test("one memo: no TrieMap or onArtifactRelease outside ArtifactMemo/GraftCaches, no scala.concurrent under functions/") {
+    // the build-once memo and the one-job fill are written once; a new
+    // hand-written memo table or a detached-future fill in a family
+    // would quietly reintroduce hash-keyed hits and orphaned jobs
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File("src/main/scala").toPath
+    assert(Files.isDirectory(root), s"source root not found: ${root.toAbsolutePath}")
+    val owners = Set("graft/ArtifactMemo.scala", "graft/GraftCaches.scala")
+    val sources: Seq[Path] = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.size > 20)
+    val offenders = sources.flatMap { f =>
+      val rel = root.relativize(f).toString.replace('\\', '/')
+      val text = new String(Files.readAllBytes(f), "UTF-8")
+      Seq(
+        (!owners(rel) && text.contains("TrieMap")) -> s"$rel: TrieMap",
+        (!owners(rel) && text.contains("onArtifactRelease(")) ->
+          s"$rel: onArtifactRelease(",
+        (rel.startsWith("graft/functions/") && text.contains("scala.concurrent")) ->
+          s"$rel: scala.concurrent")
+        .collect { case (true, what) => what }
+    }
+    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
 }

@@ -142,7 +142,7 @@ class DedupTextSpec extends AnyFunSuite {
       numHashes = 32, nBands = 16, shingleK = 3)
     // remove the odd ids 1..7 — their twins (0,2,4,6) lose their partner
     val rmIds = Seq(1L, 3L, 5L, 7L).toDF("doc_id")
-    val shrunk = Dedup.dedupIndexRemove(index, rmIds)
+    val shrunk = index.remove(rmIds)
     assert(shrunk.staged.count() == 16 && shrunk.bands.count() == 16 * 16,
       "remove must shrink both member frames by exactly the removed docs")
     // per-doc member rows: the shrunk catalog ≡ a fresh build over the
@@ -164,13 +164,13 @@ class DedupTextSpec extends AnyFunSuite {
     assert(pairs.contains((0L, 100L)) && !pairs.exists(p => p._1 == 1L),
       s"shrunk catalog must pair with kept docs only, got $pairs")
     // idempotent deletes: absent ids are ignored (tombstone replay)
-    val again = Dedup.dedupIndexRemove(shrunk, Seq(1L, 999L).toDF("doc_id"))
+    val again = shrunk.remove(Seq(1L, 999L).toDF("doc_id"))
     assert(again.staged.count() == 16 && again.bands.count() == 16 * 16,
       "removing absent ids must be a no-op")
     // compaction: content untouched, pair set identical, partition count
     // at the explicit target (churned frames would otherwise keep
     // full-width scans over mostly-empty partitions)
-    val compacted = Dedup.compactDedupIndex(shrunk, partitions = Some(3))
+    val compacted = shrunk.compact(partitions = Some(3))
     assert(compacted.staged.rdd.getNumPartitions == 3 &&
       compacted.bands.rdd.getNumPartitions == 3,
       "compaction must re-materialize at the target partition count")
@@ -191,8 +191,7 @@ class DedupTextSpec extends AnyFunSuite {
     val w0 = math.max(index.staged.rdd.getNumPartitions,
       index.bands.rdd.getNumPartitions)
     // pass-through: width within bound, emptiness arm off → same instance
-    val (same, fired0) = Dedup.compactDedupIndexIfFragmented(index,
-      maxPartitions = Some(w0))
+    val (same, fired0) = index.compactIfFragmented(maxPartitions = Some(w0))
     assert(!fired0 && (same eq index),
       "a within-bound catalog must pass through untouched")
     // WIDTH arm: appends concatenate partitions past the bound
@@ -205,22 +204,20 @@ class DedupTextSpec extends AnyFunSuite {
     val wF = math.max(frag.staged.rdd.getNumPartitions,
       frag.bands.rdd.getNumPartitions)
     assert(wF > w0, "appends must have widened the member frames")
-    val (compacted, fired1) = Dedup.compactDedupIndexIfFragmented(frag,
-      maxPartitions = Some(w0))
+    val (compacted, fired1) = frag.compactIfFragmented(maxPartitions = Some(w0))
     val target = spark.sessionState.conf.numShufflePartitions
     assert(fired1 &&
       compacted.staged.rdd.getNumPartitions == target &&
       compacted.staged.count() == 14,
       "width arm must fire and re-materialize at natural width")
     // EMPTINESS arm: removes shed rows at constant width
-    val shrunk = Dedup.dedupIndexRemove(compacted, (0L until 12L).toDF("doc_id"))
+    val shrunk = compacted.remove((0L until 12L).toDF("doc_id"))
     assert(shrunk.bands.rdd.getNumPartitions == target &&
       shrunk.bands.count() == 2 * 16)
-    val (_, fired2) = Dedup.compactDedupIndexIfFragmented(shrunk,
+    val (_, fired2) = shrunk.compactIfFragmented(
       maxPartitions = Some(100), minRowsPerPartition = 10L)
     assert(fired2, "emptiness arm must fire at 32 band rows over 4·10 floor")
-    val (_, fired3) = Dedup.compactDedupIndexIfFragmented(shrunk,
-      maxPartitions = Some(100))
+    val (_, fired3) = shrunk.compactIfFragmented(maxPartitions = Some(100))
     assert(!fired3, "emptiness arm is opt-in — disabled it must not fire")
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()
@@ -271,7 +268,7 @@ class DedupTextSpec extends AnyFunSuite {
     val grown = Dedup.embIndexAppend(index, batch,
       col("vec_id"), col("embedding"))
     assert(grown.vecs.count() == 8)
-    val shrunk = Dedup.embIndexRemove(grown, Seq(0L, 999L).toDF("vec_id"))
+    val shrunk = grown.remove(Seq(0L, 999L).toDF("vec_id"))
     assert(shrunk.vecs.count() == 7, "absent ids must be ignored")
     val fresh = Dedup.buildEmbIndex(emb.filter(col("vec_id") =!= 0L),
       col("vec_id"), col("embedding"), nPlanes = 4)
@@ -279,7 +276,7 @@ class DedupTextSpec extends AnyFunSuite {
       fresh.vecs.collect().map(_.toSeq).toSet,
       "shrunk catalog must equal the fresh build on corpus∖removed")
     // compaction: content-identical at the target partition count
-    val compacted = Dedup.compactEmbIndex(shrunk, partitions = Some(3))
+    val compacted = shrunk.compact(partitions = Some(3))
     assert(compacted.vecs.rdd.getNumPartitions == 3)
     val probe = Seq((100L, v(3))).toDF("vec_id", "embedding")
     def pairsOf(ix: Dedup.EmbIndex) =
@@ -787,7 +784,7 @@ class DedupTextSpec extends AnyFunSuite {
     val quar = Dedup.quarantinedPairs(index, 0.5, maxBucket = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(quar == plain, s"no-op quarantine diverged: $quar vs $plain")
-    Dedup.releaseDedupIndex(index)
+    index.release()
   }
 
   test("quarantine on a planted hot bucket: candidate cost drops, pair recall preserved") {
@@ -813,7 +810,7 @@ class DedupTextSpec extends AnyFunSuite {
     assert(quar.contains((20L, 21L)), "clean near-dup pair must survive on the cold path")
     assert((1L to 8L).combinations(2).forall(p => quar.contains((p(0), p(1)))),
       "boilerplate pairs must be recovered by the exact fallback")
-    Dedup.releaseDedupIndex(index)
+    index.release()
   }
 
   test("quarantine budget policy: bound is the largest affordable cumulative prefix; recall never drops") {
@@ -838,7 +835,7 @@ class DedupTextSpec extends AnyFunSuite {
     assert(boundMid >= 1L && boundMid < 8L, s"bound $boundMid")
     val setMid = pairsMid.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(plain.subsetOf(setMid))
-    Dedup.releaseDedupIndex(index)
+    index.release()
   }
 
   test("incremental quarantine: batch vs planted hot bucket — cold join shrinks, batch-touching recall preserved") {
@@ -869,7 +866,7 @@ class DedupTextSpec extends AnyFunSuite {
     // no standing-standing pair may appear (the incremental contract)
     assert(quar.forall(p => p._1 >= 100L || p._2 >= 100L),
       s"non-batch pair leaked: ${quar.filter(p => p._1 < 100L && p._2 < 100L)}")
-    Dedup.releaseDedupIndex(index)
+    index.release()
   }
 
   test("dedup catalog save→load serves incremental batches identically to the built index") {
@@ -885,14 +882,14 @@ class DedupTextSpec extends AnyFunSuite {
     assert(inMem.nonEmpty)
     graft.GraftCaches.unpersistAll(blocking = true)
     val path = java.nio.file.Files.createTempDirectory("dedup_rt").toString
-    Dedup.saveDedupIndex(built, path)
-    val loaded = Dedup.loadDedupIndex(spark, path)
+    built.save(path)
+    val loaded = Dedup.DedupIndex.load(spark, path)
     assert(loaded.numHashes == 32 && loaded.nBands == 16 && loaded.shingleK == 3)
     val fromDisk = Dedup.incrementalMinHashPairs(loaded, batch, col("doc_id"), col("text"), 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fromDisk == inMem,
       s"loaded catalog diverged: ${fromDisk -- inMem} / ${inMem -- fromDisk}")
-    Dedup.releaseDedupIndex(built); Dedup.releaseDedupIndex(loaded)
+    built.release(); loaded.release()
   }
 
   test("autoBanding: committed 16×2 at gate scale; rows rise with corpus decades; recall bound holds; budget caps") {
@@ -963,7 +960,7 @@ class DedupTextSpec extends AnyFunSuite {
     legacy.bands.unpersist(true)
     assert(rebuilt.staged.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
       "shared staged frame must stay resident after releasing the old bands")
-    Dedup.releaseDedupIndex(current); Dedup.releaseDedupIndex(rebuilt)
+    current.release(); rebuilt.release()
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()
   }
@@ -989,8 +986,8 @@ class DedupTextSpec extends AnyFunSuite {
     // the bucket long are storage-exact)
     val dir = java.nio.file.Files.createTempDirectory("graft_emb_rt").toFile
     try {
-      Dedup.saveEmbIndex(index, dir.getAbsolutePath)
-      val loaded = Dedup.loadEmbIndex(spark, dir.getAbsolutePath)
+      index.save(dir.getAbsolutePath)
+      val loaded = Dedup.EmbIndex.load(spark, dir.getAbsolutePath)
       assert(loaded.nPlanes == 4 && served(loaded) == base,
         "loaded catalog must serve the built catalog's pair set")
     } finally {
@@ -1036,20 +1033,18 @@ class DedupTextSpec extends AnyFunSuite {
       Dedup.incrementalEmbeddingNearDups(ix, probe,
           col("vec_id"), col("embedding"), threshold = 0.95)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val (cp, f1) = Dedup.compactEmbIndexIfFragmented(grown,
-      maxPartitions = Some(w0))
+    val (cp, f1) = grown.compactIfFragmented(maxPartitions = Some(w0))
     val cap = math.min(spark.sessionState.conf.numShufflePartitions, w0)
     assert(f1 && cp.vecs.rdd.getNumPartitions == cap &&
       servedP(cp) == servedP(grown) && servedP(cp).contains((2L, 100L)),
       "width arm must fire, land inside the bound, and preserve serving")
-    val (_, refire1) = Dedup.compactEmbIndexIfFragmented(cp,
-      maxPartitions = Some(w0))
+    val (_, refire1) = cp.compactIfFragmented(maxPartitions = Some(w0))
     assert(!refire1, "width arm must reach a fixed point")
-    val (lean, f2) = Dedup.compactEmbIndexIfFragmented(cp,
+    val (lean, f2) = cp.compactIfFragmented(
       maxPartitions = Some(100), minRowsPerPartition = 5L)
     assert(f2 && lean.vecs.rdd.getNumPartitions == 1,
       "emptiness target derives from rows: clamp(8/5, 1, 4) = 1")
-    val (_, refire2) = Dedup.compactEmbIndexIfFragmented(lean,
+    val (_, refire2) = lean.compactIfFragmented(
       maxPartitions = Some(100), minRowsPerPartition = 5L)
     assert(!refire2, "emptiness arm must reach a fixed point")
     // QUARANTINE: with every multi-member bucket quarantined (bound 1),

@@ -239,8 +239,8 @@ class SimilaritySpec extends AnyFunSuite {
     val built = Similarity.buildIvfPqIndex(emb, nCentroids = 4, coarseIters = 1,
       m = 4, ksub = 4, pqIters = 1)
     val dir = java.nio.file.Files.createTempDirectory("graft_ix_rt_").toString
-    Similarity.saveIvfPqIndex(built, dir)
-    val loaded = Similarity.loadIvfPqIndex(spark, dir)
+    built.save(dir)
+    val loaded = Similarity.IvfPqIndex.load(spark, dir)
     def serve(ix: Similarity.IvfPqIndex) =
       Similarity.ivfPqTopKIndexed(queries, ix, k = 3, nProbe = 2)
         .select("q_id", "rank", "c_id", "cos").collect()
@@ -293,9 +293,9 @@ class SimilaritySpec extends AnyFunSuite {
     // compaction cuts one, and releasing the pre-cut generation (its
     // chain: the built data caches plus the deltas) must leave it
     // serving identically (shared quantizer frames untouched)
-    val cut = Similarity.compactIvfPqIndex(grown)
+    val cut = grown.compact()
     assert(cut.chain.isEmpty && grown.chain.nonEmpty)
-    Similarity.releaseIndexData(grown, blocking = true)
+    grown.release(blocking = true)
     assert(grown.chain.frames.forall(
       _.storageLevel == org.apache.spark.storage.StorageLevel.NONE))
     val reServed = Similarity.ivfPqTopKIndexed(twins, cut, k = 1, nProbe = 4)
@@ -332,7 +332,7 @@ class SimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     // remove 6 ids: keyed frames shrink by exactly those; quantizers shared
     val rmIds = (0L until 6L).toDF("vec_id")
-    val shrunk = Similarity.ivfPqIndexRemove(built, rmIds)
+    val shrunk = built.remove(rmIds)
     assert(shrunk.corpus.count() == 10 && shrunk.assigned.count() == 10 &&
       shrunk.codes.count() == 10 * 4,
       "remove must shrink corpus, inverted lists and codes by the removed ids")
@@ -341,7 +341,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!servedShrunk.exists(_._3 < 6L),
       "no removed id may appear in the served ranking")
     // idempotent deletes: absent ids are ignored (tombstone replay)
-    val again = Similarity.ivfPqIndexRemove(shrunk, Seq(0L, 999L).toDF("vec_id"))
+    val again = shrunk.remove(Seq(0L, 999L).toDF("vec_id"))
     assert(again.corpus.count() == 10 && again.codes.count() == 10 * 4,
       "removing absent ids must be a no-op")
     // UPDATE path: re-appending the removed vectors through the frozen
@@ -355,7 +355,7 @@ class SimilaritySpec extends AnyFunSuite {
       "remove∘append-back must restore the full-build serving exactly")
     // compaction: serving identical, partition count at the target (k
     // appends concatenate k generations of partitions otherwise)
-    val compacted = Similarity.compactIvfPqIndex(updated, partitions = Some(3))
+    val compacted = updated.compact(partitions = Some(3))
     assert(compacted.corpus.rdd.getNumPartitions == 3 &&
       compacted.codes.rdd.getNumPartitions == 3,
       "compaction must re-materialize keyed frames at the target partition count")
@@ -377,8 +377,7 @@ class SimilaritySpec extends AnyFunSuite {
     val w0 = Seq(built.corpus, built.assigned, built.codes)
       .map(_.rdd.getNumPartitions).max
     // pass-through: width within bound, emptiness arm off → same instance
-    val (same, fired0) = Similarity.compactIvfPqIndexIfFragmented(built,
-      maxPartitions = Some(w0))
+    val (same, fired0) = built.compactIfFragmented(maxPartitions = Some(w0))
     assert(!fired0 && (same eq built),
       "a within-bound index must pass through untouched")
     // WIDTH arm: appends concatenate partitions past the bound
@@ -389,8 +388,7 @@ class SimilaritySpec extends AnyFunSuite {
     val wF = Seq(frag.corpus, frag.assigned, frag.codes)
       .map(_.rdd.getNumPartitions).max
     assert(wF > w0, "appends must have widened the keyed frames")
-    val (compacted, fired1) = Similarity.compactIvfPqIndexIfFragmented(frag,
-      maxPartitions = Some(w0))
+    val (compacted, fired1) = frag.compactIfFragmented(maxPartitions = Some(w0))
     val target = spark.sessionState.conf.numShufflePartitions
     assert(fired1 &&
       compacted.corpus.rdd.getNumPartitions == target &&
@@ -398,14 +396,13 @@ class SimilaritySpec extends AnyFunSuite {
       "width arm must fire and re-materialize at natural width")
     // EMPTINESS arm: removes shed rows at constant width — mostly-empty
     // partitions until the opt-in arm says merge
-    val shrunk = Similarity.ivfPqIndexRemove(compacted,
+    val shrunk = compacted.remove(
       (0L until 14L).toDF("vec_id"))  // leaves {14, 16}: 2 rows wide 4
     assert(shrunk.corpus.rdd.getNumPartitions == target)
-    val (_, fired2) = Similarity.compactIvfPqIndexIfFragmented(shrunk,
+    val (_, fired2) = shrunk.compactIfFragmented(
       maxPartitions = Some(100), minRowsPerPartition = 1L)
     assert(fired2, "emptiness arm must fire at 2 rows over 4 partitions")
-    val (_, fired3) = Similarity.compactIvfPqIndexIfFragmented(shrunk,
-      maxPartitions = Some(100))
+    val (_, fired3) = shrunk.compactIfFragmented(maxPartitions = Some(100))
     assert(!fired3, "emptiness arm is opt-in — disabled it must not fire")
     graft.GraftCaches.unpersistAll()
     graft.GraftCaches.releaseArtifacts()

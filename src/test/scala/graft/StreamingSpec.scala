@@ -259,10 +259,10 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable() // batch 2 serves generation 2
       // CUT: compaction returns a standalone generation; after the swap
       // the pre-cut chain is unread by any live handle and releases
-      val g3 = Similarity.compactIvfPqIndex(g2)
+      val g3 = g2.compact()
       assert(g3.chain.isEmpty, "compaction must cut a standalone generation")
       ref.set(g3)
-      Similarity.releaseIndexData(g2, blocking = true)
+      g2.release(blocking = true)
       assert(g2.chain.frames.forall(_.storageLevel == StorageLevel.NONE),
         "the released chain must hold no data-tier cache")
       assert(rows(Similarity.ivfPqTopKIndexed(qB, g3, k = 3, nProbe = 2)) == truthB,
@@ -323,7 +323,7 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
         .toSet
       opRef.set((rebuilt, np2))
-      Similarity.releaseIndexData(grown, blocking = true)
+      grown.release(blocking = true)
       assert(grown.corpus.storageLevel == StorageLevel.NONE
         && grown.codes.storageLevel == StorageLevel.NONE,
         "superseded generation must hold no data-tier cache")
@@ -424,7 +424,7 @@ class StreamingSpec extends AnyFunSuite {
     // checkpoint must resume AFTER the committed batch-1 file — a
     // checkpoint-less restart would replay it and crash-loop the strict
     // id-hygiene guard against exactly this rebuilt index.
-    Dedup.releaseDedupIndex(ref.get())
+    ref.get().release()
     GraftCaches.unpersistAll(blocking = true)
     val rebuilt = Dedup.buildDedupIndex(corpus.unionByName(batch1),
       col("doc_id"), col("text"), numHashes = 32, nBands = 16, shingleK = 3)
@@ -544,7 +544,7 @@ class StreamingSpec extends AnyFunSuite {
     val (annSnap, npSnap, _) = Similarity.ivfPqRebuildIfStale(
       Similarity.ivfPqIndexAppend(ann0, survivors1),
       m = 4, ksub = 8, coarseIters = 1, pqIters = 1)
-    Dedup.releaseDedupIndex(dedupRef.get())
+    dedupRef.get().release()
     GraftCaches.unpersistAll(blocking = true)
     val dedupSnap = Dedup.buildDedupIndex(
       corpus.select(col("doc_id"), col("text")).unionByName(b1d),
@@ -855,18 +855,15 @@ class StreamingSpec extends AnyFunSuite {
       var aT = seedAnn()
       var npT = annOpRef.get()._2
       Seq(t1, t2).foreach { ts =>
-        val shrunkD = Dedup.dedupIndexRemove(dT, ts)
+        val shrunkD = dT.remove(ts)
         val (rb, rbFired) = Dedup.rebuildCatalogIfStale(shrunkD, 0.5)
         dT = if (rbFired) rb
-          else Dedup.compactDedupIndexIfFragmented(shrunkD,
-            maxPartitions = Some(target))._1
-        val shrunkA = Similarity.ivfPqIndexRemove(aT,
-          ts.select(col("doc_id").as("vec_id")))
+          else shrunkD.compactIfFragmented(maxPartitions = Some(target))._1
+        val shrunkA = aT.remove(ts.select(col("doc_id").as("vec_id")))
         val (rbA, np2, rbAFired) = Similarity.ivfPqRebuildIfStale(shrunkA,
           m = 4, ksub = 8, coarseIters = 1, pqIters = 1)
         aT = if (rbAFired) rbA
-          else Similarity.compactIvfPqIndexIfFragmented(shrunkA,
-            maxPartitions = Some(target))._1
+          else shrunkA.compactIfFragmented(maxPartitions = Some(target))._1
         npT = np2
       }
       assert(npF == npT, s"operating point diverged: stream np=$npF batch np=$npT")
@@ -893,7 +890,7 @@ class StreamingSpec extends AnyFunSuite {
       // checkpoint replays BOTH tombstone files against the already-shrunk
       // state; removes ignore absent ids and the policies are no-ops at
       // natural width, so the served state converges without a recovery
-      // hook (ivfPqIndexRemove's tombstone-replay contract, end-to-end)
+      // hook (StandingIndex.remove's tombstone-replay contract, end-to-end)
       q.stop()
       val q2 = RetentionServing.startRetentionStream(spark, tsDir, dedupRef,
         annOpRef, threshold = 0.5, m = 4, ksub = 8,
@@ -1202,8 +1199,7 @@ class StreamingSpec extends AnyFunSuite {
     d2.chain.frames.foreach(f =>
       assert(f.storageLevel != StorageLevel.NONE, "chain frame not cached"))
     // a compaction fire (width bound below current) cuts standalone
-    val (cut, fired) = Dedup.compactDedupIndexIfFragmented(d2,
-      maxPartitions = Some(1))
+    val (cut, fired) = d2.compactIfFragmented(maxPartitions = Some(1))
     assert(fired && cut.chain.isEmpty && cut.rows == d2.rows)
     // the stream's release step: the whole superseded chain drops
     d2.chain.release(blocking = true)
@@ -1235,6 +1231,91 @@ class StreamingSpec extends AnyFunSuite {
     l1.chain.release(blocking = true)
     assert(serve(rebanded) == serve(fresh),
       "post-reband serving != fresh-build serving after the chain released")
+
+    // StandingIndex.roll — one input per roll kind
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    import org.apache.spark.TestListenerBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import graft.functions.StandingIndex
+    def loaded(df: DataFrame): Boolean = {
+      val ls = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+      ls.nonEmpty && ls.forall(_.cacheBuilder.isCachedColumnBuffersLoaded)
+    }
+    def cached(df: DataFrame) = df.storageLevel != StorageLevel.NONE
+    def build(pred: Column, nBands: Int = 16) = Dedup.buildDedupIndex(
+      docs.filter(pred), col("doc_id"), col("text"),
+      numHashes = 32, nBands = nBands, shingleK = 3)
+    def grow(ix: Dedup.DedupIndex, pred: Column) =
+      Dedup.dedupIndexAppend(ix, docs.filter(pred), col("doc_id"), col("text"))
+    val ref = new AtomicReference[Dedup.DedupIndex](null)
+    // no-cut append roll: a chained successor is only set — no job runs
+    // and nothing releases (it reads every superseded frame)
+    val r0 = build(col("doc_id") % 3 === 0)
+    val r1 = grow(r0, col("doc_id") % 3 === 1)
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      StandingIndex.roll(r1, Seq(r0))(ref.set)
+      TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0 && (ref.get eq r1),
+      s"the append roll ran ${jobs.get} job(s)")
+    assert(r1.chain.frames.forall(cached), "an append roll released a frame")
+    // compaction cut: every pre-cut chain frame releases
+    val r2 = grow(r1, col("doc_id") % 3 === 2)
+    StandingIndex.roll(r2, Seq(r1))(ref.set)
+    val (r3, cutFired) = r2.compactIfFragmented(maxPartitions = Some(1))
+    assert(cutFired && r3.chain.isEmpty)
+    StandingIndex.roll(r3, Seq(r2))(ref.set)
+    assert(ref.get eq r3)
+    r2.chain.frames.foreach(f => assert(f.storageLevel == StorageLevel.NONE,
+      "a pre-cut chain frame survived the compaction roll"))
+    assert(serve(r3) == serve(fresh), "post-cut-roll serving != fresh build")
+    // remove roll: the successor's members are filled before the
+    // superseded generation releases
+    val f0 = build(col("doc_id") % 2 === 0)
+    val f1 = f0.remove(docs.filter(col("doc_id") % 10 === 0).select(col("doc_id")))
+    StandingIndex.roll(f1, Seq(f0)) { next =>
+      assert(next.memberFrames.forall(loaded),
+        "the remove successor was set before its members were filled")
+      assert(f0.memberFrames.forall(cached),
+        "the superseded generation released before its successor was set")
+      ref.set(next)
+    }
+    assert(f0.memberFrames.forall(f => !cached(f)) && f1.memberFrames.forall(cached))
+    // a standalone successor still LAZY over its predecessor's caches is
+    // filled by the roll itself, before the predecessor releases
+    val f2 = f1.copy(
+      staged = GraftCaches.persistedArtifact(f1.staged.filter(col("doc_id") % 4 === 0)),
+      bands = GraftCaches.persistedArtifact(f1.bands.filter(col("doc_id") % 4 === 0)),
+      rows = None)
+    assert(!f2.memberFrames.exists(loaded))
+    StandingIndex.roll(f2, Seq(f1)) { next =>
+      assert(next.memberFrames.forall(loaded) && f1.memberFrames.forall(cached),
+        "a lazy successor must be filled while its predecessor is still cached")
+      ref.set(next)
+    }
+    assert(f1.memberFrames.forall(f => !cached(f)))
+    // re-band of an UNCHAINED catalog: the served staged frame is the
+    // superseded one's — it stays; the superseded bands release
+    val u = build(lit(true), nBands = 8)
+    val (ub, ubFired) = Dedup.rebuildCatalogIfStale(u, threshold = 0.5)
+    assert(ubFired && (ub.staged eq u.staged))
+    StandingIndex.roll(ub, Seq(u))(ref.set)
+    assert(cached(ub.staged) && loaded(ub.staged),
+      "the re-band roll released the staged frame the successor serves")
+    assert(u.bands.storageLevel == StorageLevel.NONE,
+      "the superseded band frame survived the re-band roll")
+    assert(serve(ub) == serve(fresh), "post-reband-roll serving != fresh build")
     GraftCaches.unpersistAll(blocking = true)
     GraftCaches.releaseArtifacts(blocking = true)
   }
@@ -1303,8 +1384,8 @@ class StreamingSpec extends AnyFunSuite {
     val (annSnap, npSnap, _) = Similarity.ivfPqRebuildIfStale(
       Similarity.ivfPqIndexAppend(ann0, survivors1),
       m = 4, ksub = 8, coarseIters = 1, pqIters = 1)
-    Dedup.releaseDedupIndex(dedupRef.get())
-    Multimodal.releasePhashIndex(phRef.get())
+    dedupRef.get().release()
+    phRef.get().release()
     GraftCaches.unpersistAll(blocking = true)
     val seen1 = corpus.unionByName(b1)
     dedupRef.set(Dedup.buildDedupIndex(seen1.select(col("doc_id"), col("text")),
@@ -1516,7 +1597,7 @@ class StreamingSpec extends AnyFunSuite {
       TestListenerBus.drain(sc)
       sc.addSparkListener(listener)
       try {
-        val (_, fired) = Similarity.compactIvfPqIndexIfFragmented(ann)
+        val (_, fired) = ann.compactIfFragmented()
         TestListenerBus.drain(sc)
         assert(!fired, "the default width bound must not fire after four batches")
         assert(jobs.get == 0,
