@@ -15,27 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // ENOSPC-proofing (round-10 incident): completed queries' shuffle
-      // files are only released when ContextCleaner sees their exchange
-      // objects collected, and at multi-GB heaps a full driver GC can be
-      // HOURS apart — a long multi-query run accretes dead shuffle spill
-      // until the disk fills. Forcing a periodic GC makes the cleaner's
-      // cadence a protocol property instead of a babysitting step.
-      .config("spark.cleaner.periodicGC.interval", "2min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Releasing a locally-checkpointed RDD triggers a WARN per RDD ("saved
-    // blocks cannot be recomputed") from RDD.unpersist — intended here (the
-    // query is done; the blocks must go), but the flood buried the result
-    // JSON line past the driver's captured stderr tail. The warning is
-    // logged under the concrete RDD class, so silence the rdd package.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.builder().getOrCreate()
     val selected =
       if (args.nonEmpty) SparkEntry.queries.view.filterKeys(args.contains(_)).toMap
       else SparkEntry.queries
@@ -89,8 +69,8 @@ object Bench {
     // record {min, max, n} per query — a noisy window is then visible
     // IN the record instead of as an unexplained cross-record delta.
     // disk headroom per query (stderr): a shrinking trend mid-run is the
-    // ENOSPC early warning the round-10 incident lacked — the periodic-GC
-    // config above should hold it flat, and this line proves it did
+    // ENOSPC early warning the round-10 incident lacked — the recipe's
+    // periodic GC should hold it flat, and this line proves it did
     val localDir = new java.io.File(
       spark.sparkContext.getConf.get("spark.local.dir",
         System.getProperty("java.io.tmpdir")).split(",").head)

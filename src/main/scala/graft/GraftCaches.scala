@@ -160,7 +160,22 @@ object GraftCaches {
     def isEmpty: Boolean = frames.isEmpty
     def nonEmpty: Boolean = frames.nonEmpty
     def release(blocking: Boolean = false): Unit =
-      frames.foreach(_.unpersist(blocking))
+      frames.foreach(GraftCaches.release(_, blocking))
+  }
+
+  /** Release one frame's storage: its cache and, when the frame IS a
+    * tracked checkpoint ([[checkpointed]]), the checkpoint's blocks and
+    * registry entry — `Dataset.unpersist` on a checkpoint frame is a
+    * no-op, so a compaction cut's blocks would otherwise stay until
+    * [[releaseArtifacts]]. Reads only the frame's analyzed plan (no
+    * planning). */
+  def release(df: DataFrame, blocking: Boolean = false): Unit = {
+    df.unpersist(blocking)
+    df.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        if (ckpts.remove(l.rdd) || artifactCkpts.remove(l.rdd)) l.rdd.unpersist(blocking)
+      case _ =>
+    }
   }
 
   /** DURABLE CUT — materialize a standalone generation through a parquet

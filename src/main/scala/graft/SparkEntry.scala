@@ -62,51 +62,19 @@ object SparkEntry {
 
   private def q(name: String): (SparkSession, String) => DataFrame = queries(name)
 
-  /** Save path for the roundtrip gate's index: keyed by PID (two harness
-    * processes must not race on one directory) and by the sf-dir (a
-    * process verifying one SF then benching another must not serve the
-    * stale index). Registered with the shutdown sweep: without cleanup
-    * the dirs accumulate across runs, and after PID reuse a stale dir
-    * from an OLDER BUILD would be silently served instead of re-saved —
-    * a format change would then surface as a confusing roundtrip-gate
-    * failure rather than a fresh save. */
-  private def savedIndexPath(sfDir: String): String = {
+  /** Save path of a `kind` roundtrip gate's saved index (`ivfpq`,
+    * `dedup`, `emb`, `phash`): keyed by PID (two harness processes must
+    * not race on one directory) and by the sf-dir (a process verifying
+    * one SF then benching another must not serve the stale index).
+    * Registered with the shutdown sweep: without cleanup the dirs
+    * accumulate across runs, and after PID reuse a stale dir from an
+    * OLDER BUILD would be silently served instead of re-saved — a format
+    * change would then surface as a confusing roundtrip-gate failure
+    * rather than a fresh save. */
+  private def savedPath(kind: String, sfDir: String): String = {
     require(scratchHookInstalled)
     val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivfpq_index_rt_${ProcessHandle.current().pid()}_" +
-        (sfDir.hashCode & 0x7fffffff).toString)
-    scratchDirs.add(f.toPath)
-    f.getAbsolutePath
-  }
-
-  /** Save path for the dedup-catalog roundtrip gate (same PID+sf keying
-    * and shutdown-sweep registration as [[savedIndexPath]]). */
-  private def savedDedupIndexPath(sfDir: String): String = {
-    require(scratchHookInstalled)
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_dedup_index_rt_${ProcessHandle.current().pid()}_" +
-        (sfDir.hashCode & 0x7fffffff).toString)
-    scratchDirs.add(f.toPath)
-    f.getAbsolutePath
-  }
-
-  /** Save path for the embedding-catalog roundtrip gate (same PID+sf
-    * keying and shutdown-sweep registration as [[savedIndexPath]]). */
-  private def savedEmbIndexPath(sfDir: String): String = {
-    require(scratchHookInstalled)
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_emb_index_rt_${ProcessHandle.current().pid()}_" +
-        (sfDir.hashCode & 0x7fffffff).toString)
-    scratchDirs.add(f.toPath)
-    f.getAbsolutePath
-  }
-
-  /** Save path for the phash-catalog roundtrip gate (same PID+sf keying
-    * and shutdown-sweep registration as [[savedIndexPath]]). */
-  private def savedPhashIndexPath(sfDir: String): String = {
-    require(scratchHookInstalled)
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_phash_index_rt_${ProcessHandle.current().pid()}_" +
+      s"graft_${kind}_index_rt_${ProcessHandle.current().pid()}_" +
         (sfDir.hashCode & 0x7fffffff).toString)
     scratchDirs.add(f.toPath)
     f.getAbsolutePath
@@ -241,7 +209,7 @@ object SparkEntry {
     // through the memo): the embdedup_index_roundtrip line then measures
     // LOAD + incremental serve with the one-time save cost attributed here
     "emb_index_save" -> ((s: SparkSession, dir: String) => {
-      val path = savedEmbIndexPath(dir)
+      val path = savedPath("emb", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Dedup.embIndexFor(
             Tables.embeddings(s, dir).filter(col("vec_id") % 5 =!= 0),
@@ -255,7 +223,7 @@ object SparkEntry {
     // line then measures LOAD+SERVE, the serving-job shape, with the
     // one-time save cost attributed here
     "ann_index_save" -> ((s: SparkSession, dir: String) => {
-      val path = savedIndexPath(dir)
+      val path = savedPath("ivfpq", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Similarity.ivfPqIndexFor(Tables.embeddings(s, dir),
             nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1).save(path)
@@ -268,7 +236,7 @@ object SparkEntry {
     // line then measures LOAD + incremental serve, the cross-session
     // ingest-job shape, with the one-time save cost attributed here
     "dedup_index_save" -> ((s: SparkSession, dir: String) => {
-      val path = savedDedupIndexPath(dir)
+      val path = savedPath("dedup", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Dedup.dedupIndexFor(
             Tables.documents(s, dir).filter(col("doc_id") % 5 =!= 0),
@@ -307,7 +275,7 @@ object SparkEntry {
     // ingest job, which must never re-pay the corpus decode — with the
     // one-time save cost attributed here
     "phash_index_save" -> ((s: SparkSession, dir: String) => {
-      val path = savedPhashIndexPath(dir)
+      val path = savedPath("phash", dir)
       if (!new java.io.File(path, "hashes").isDirectory) {
         Multimodal.phashIndexFor(
             Multimodal.syntheticMediaFor(
@@ -852,7 +820,7 @@ object SparkEntry {
     // — the embdedup_incremental restriction oracle verbatim.
     "embdedup_index_roundtrip" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val path = savedEmbIndexPath(dir)
+      val path = savedPath("emb", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Dedup.embIndexFor(emb.filter(col("vec_id") % 5 =!= 0),
             col("vec_id"), col("embedding"), nPlanes = 4).save(path)
@@ -1288,7 +1256,7 @@ object SparkEntry {
     // minhash_incremental restriction oracle applies verbatim.
     "dedup_index_roundtrip" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val path = savedDedupIndexPath(dir)
+      val path = savedPath("dedup", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Dedup.dedupIndexFor(docs.filter(col("doc_id") % 5 =!= 0),
             col("doc_id"), col("text"), numHashes = 32, nBands = 16,
@@ -1960,7 +1928,7 @@ object SparkEntry {
     "phash_index_roundtrip" -> ((s, dir) => {
       val media = Multimodal.syntheticMediaFor(
         Tables.documents(s, dir).select(col("doc_id")))
-      val path = savedPhashIndexPath(dir)
+      val path = savedPath("phash", dir)
       if (!new java.io.File(path, "hashes").isDirectory) {
         Multimodal.phashIndexFor(media.filter(col("media_id") % 5 =!= 0)).save(path)
       }
@@ -2361,7 +2329,7 @@ object SparkEntry {
     "ann_index_roundtrip" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val queries = emb.filter(col("vec_id") % 50 === 0)
-      val path = savedIndexPath(dir)
+      val path = savedPath("ivfpq", dir)
       if (!new java.io.File(path, "meta").isDirectory) {
         Similarity.ivfPqIndexFor(emb,
           nCentroids = 16, coarseIters = 1, m = 16, ksub = 32, pqIters = 1).save(path)

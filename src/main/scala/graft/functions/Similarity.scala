@@ -1743,7 +1743,7 @@ object Similarity {
     // INPUTS (probe rows + the vector-free lists, both byte-tiny) and
     // coalesces it to a handful of tasks, while its OUTPUT is the
     // candidate blow-up — the scoring stage then runs nearly serial
-    // (measured 3.9× at ×30, graft.tools.AqeProbe). Broadcasting makes
+    // (measured 3.9× at ×30, BENCH_AQE_r11.json). Broadcasting makes
     // the expansion map-side over the cached lists' own partitioning:
     // no exchange exists for AQE to mis-size.
     // CODES-FIRST EXPANSION (guide §8 "move heavy rows once", §2.4): the

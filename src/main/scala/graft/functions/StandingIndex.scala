@@ -84,9 +84,10 @@ trait StandingIndex[T <: StandingIndex[T]] { self: T =>
 
   /** Release this generation's member caches and its chain (idempotent;
     * a delta generation's members are uncached unions, so its storage is
-    * the chain). */
+    * the chain). Checkpoint-cut members free their blocks too
+    * ([[GraftCaches.release]]). */
   def release(blocking: Boolean = false): Unit = {
-    memberFrames.foreach(_.unpersist(blocking))
+    memberFrames.foreach(GraftCaches.release(_, blocking))
     chain.release(blocking)
   }
 
@@ -114,7 +115,8 @@ trait StandingIndex[T <: StandingIndex[T]] { self: T =>
     * input's. `durableRoot` (the serving streams) cuts each member
     * through [[GraftCaches.durableCut]] at `durableRoot/<member>`, so the
     * generation stays recoverable after the superseded chain releases;
-    * otherwise the cut is a tracked localCheckpoint. */
+    * otherwise the cut is a tracked localCheckpoint, whose blocks
+    * [[release]] and [[StandingIndex.roll]] free. */
   def compact(partitions: Option[Int] = None,
       durableRoot: Option[String] = None): T =
     GraftCaches.inArtifactScope {
@@ -255,6 +257,6 @@ object StandingIndex {
       val held = next.memberFrames
       superseded.flatMap(s => s.memberFrames ++ s.chain.frames)
         .filterNot(f => held.exists(_ eq f))
-        .foreach(_.unpersist(false))
+        .foreach(GraftCaches.release(_))
     }
 }

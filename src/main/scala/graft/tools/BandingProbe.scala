@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Dedup
@@ -25,11 +24,8 @@ import graft.functions.Dedup
   */
 object BandingProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     graft.plans.GraftFunctions.register(spark)
     val dirs =
       if (args.nonEmpty) args.toSeq

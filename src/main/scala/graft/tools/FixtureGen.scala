@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
-
 /** Golden-fixture generator for the deterministic queries whose outputs
   * have no closed-form SQL oracle (kernel chains, LSH pair sets, HLL
   * estimates). Runs each named query at the given scale factor and writes
@@ -46,13 +44,7 @@ object FixtureGen {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1) else "fixtures"
     val names = if (args.length > 2) args.drop(2).toSeq else fixtureQueries
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       val tmp = Files.createTempDirectory("fixture_gen_").toString

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler — the guide §1 "measure first" loop for a
   * single declared query: runs `SparkEntry.queries(name)` through the noop
@@ -23,13 +22,7 @@ object ProfileQuery {
     // ~90 s benchSetup pass) — per-query cache hygiene below matches Bench
     val names = args(1).split(",").toSeq
     val repeat = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.builder().getOrCreate()
 
     val runStart = new java.util.concurrent.atomic.AtomicLong(System.nanoTime())
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

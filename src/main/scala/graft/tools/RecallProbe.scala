@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -26,11 +25,8 @@ import graft.functions.Similarity
   */
 object RecallProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/target/testdata-sf1",

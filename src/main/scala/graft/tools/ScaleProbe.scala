@@ -1,5 +1,4 @@
 package graft.tools
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fixed-query-set ANN scaling, FIXED vs AUTO geometry: the gate's query
@@ -23,11 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession.builder()
       .withExtensions(new graft.plans.GraftExtensions).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/target/testdata-sf1",

@@ -989,6 +989,73 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("retention stream: a later compaction cut frees the blocks of the superseded checkpoint cut") {
+    // RetentionServing compacts without a durable root, so each cut is a
+    // tracked localCheckpoint; Dataset.unpersist leaves its blocks alone,
+    // so the roll to the NEXT cut must free them itself — otherwise a
+    // long tombstone stream piles up one corpus-sized cut per fire until
+    // releaseArtifacts
+    import java.nio.file.Files
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.functions.{Dedup, Similarity}
+    import graft.streaming.RetentionServing
+    val dir = "/root/testdata/sf0.001"
+    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+    val emb = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+    // 32×16 is the derived banding at every size here, so the banding
+    // policy never fires and each batch runs the compaction policy
+    val dedup0 = Dedup.buildDedupIndex(docs, col("doc_id"), col("text"),
+      numHashes = 32, nBands = 16, shingleK = 3).compact(Some(4))
+    val ann0 = Similarity.buildIvfPqIndex(emb,
+      nCentroids = 4, coarseIters = 1, m = 4, ksub = 8, pqIters = 1)
+    def width(ix: Dedup.DedupIndex) = ix.memberFrames.map(_.rdd.getNumPartitions).max
+    def ckptRdds(ix: Dedup.DedupIndex) = ix.memberFrames.flatMap(
+      _.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id })
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val n0 = docs.count()
+    assert(width(dedup0) == 4 && dedup0.rowCount == n0)
+    val tsDir = Files.createTempDirectory("retention_cut_release").toString
+    val dedupRef = new java.util.concurrent.atomic.AtomicReference(dedup0)
+    val annOpRef = new java.util.concurrent.atomic.AtomicReference((ann0, 2))
+    // the catalog's emptiness arm weighs its band rows, 16 a doc; at
+    // 1600 band rows a partition batch 1 leaves ~n0/2 docs (< 4·100, cut
+    // to 2 partitions) and batch 2 fewer than 2·100 (cut to 1)
+    val t1 = docs.filter(col("doc_id") % 2 === 0).select(col("doc_id"))
+    val t2 = docs.filter(col("doc_id") % 2 === 1 && col("doc_id") % 3 === 0)
+      .select(col("doc_id"))
+    t1.coalesce(1).write.mode("append").parquet(tsDir)
+    val q = RetentionServing.startRetentionStream(spark, tsDir, dedupRef,
+      annOpRef, threshold = 0.5, m = 4, ksub = 8,
+      compactMinRowsPerPartition = 1600L)
+    try {
+      q.processAllAvailable()
+      val cut1 = dedupRef.get()
+      assert(cut1.chain.isEmpty && width(cut1) == 2,
+        s"batch 1 must cut the catalog to 2 partitions, got ${width(cut1)}")
+      val cut1Rdds = ckptRdds(cut1)
+      assert(cut1Rdds.nonEmpty && cut1Rdds.forall(persisted.contains),
+        "the first cut's members must be live checkpoint RDDs")
+      t2.coalesce(1).write.mode("append").parquet(tsDir)
+      q.processAllAvailable()
+      assert(q.exception.isEmpty, s"retention stream died: ${q.exception}")
+      val cut2 = dedupRef.get()
+      assert(width(cut2) == 1,
+        s"batch 2 must cut the catalog to 1 partition, got ${width(cut2)}")
+      val leaked = cut1Rdds.filter(persisted.contains)
+      assert(leaked.isEmpty,
+        s"superseded cut's checkpoint RDDs ${leaked.mkString(",")} are still persisted")
+      // the serving cut does not read the freed blocks
+      val removed = (t1.collect() ++ t2.collect()).map(_.getLong(0)).toSet
+      assert(cut2.staged.select(col("doc_id")).collect().map(_.getLong(0)).toSet ==
+        docs.collect().map(_.getLong(0)).toSet -- removed)
+    } finally {
+      q.stop()
+      GraftCaches.unpersistAll()
+      GraftCaches.releaseArtifacts()
+    }
+  }
+
   test("all three standing structures roll in the composed streams: embedding catalog appends, re-buckets on the plane policy, shrinks on tombstones") {
     import java.nio.file.Files
     import graft.functions.{Dedup, Similarity}
