@@ -190,7 +190,8 @@ object GraftCaches {
     * (and across restarts), and — unlike a lineage-bearing re-persist —
     * references NOTHING upstream, so the cut is also the moment
     * superseded epoch artifacts become safely prunable
-    * ([[graft.streaming.IngestServing]] prunes them in the same roll).
+    * ([[graft.functions.StandingIndex.stepAt]] prunes them in the same
+    * step).
     * `overwrite` keeps the write idempotent under foreachBatch retries
     * (callers key `path` by batch id). */
   def durableCut(df: DataFrame, path: String): DataFrame = {

@@ -8,7 +8,7 @@ import graft.functions.{Dedup, Multimodal, Similarity, Sketches, TextAnalysis}
 import graft.GraftCaches.Persistable
 import graft.kernels.{ImageOps, RegionGrowing}
 import graft.sources.{Tables, Tabular}
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, IngestServing}
 
 /** Driver contract — named queries + DuckDB oracle SQL (SURVEY.md §5/§7).
   *
@@ -2196,14 +2196,9 @@ object SparkEntry {
       // incremental-minhash pipeline — profiled as 4× and 7× repeats of
       // the same batch-shingle stages (~1 s each at sf0.1). The
       // checkpoint is batch-sized (dropped ids only); rows unchanged.
-      val dropped = pairs
-        .select(explode(array(
-          struct(col("id1").as("a"), col("id2").as("b")),
-          struct(col("id2").as("a"), col("id1").as("b")))).as("p"))
-        .select(col("p.a").as("cand"), col("p.b").as("other"))
-        .filter(col("cand") % 5 === 0 &&
-          (col("other") % 5 =!= 0 || col("other") < col("cand")))
-        .select(col("cand").as("vec_id")).distinct()
+      val dropped = IngestServing.keepFirstDropped(pairs,
+          docs.filter(col("doc_id") % 5 === 0))
+        .select(col("doc_id").as("vec_id"))
         .localCheckpointTracked()
       val survivors = emb.filter(col("vec_id") % 5 === 0)
         .join(dropped, Seq("vec_id"), "left_anti")
@@ -2777,14 +2772,9 @@ object SparkEntry {
       val pairs = Dedup.incrementalMinHashPairsQuarantined(dIndex,
         docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"),
         threshold = 0.5, maxBucket = 2)
-      val dropped = pairs
-        .select(explode(array(
-          struct(col("id1").as("a"), col("id2").as("b")),
-          struct(col("id2").as("a"), col("id1").as("b")))).as("p"))
-        .select(col("p.a").as("cand"), col("p.b").as("other"))
-        .filter(col("cand") % 5 === 0 &&
-          (col("other") % 5 =!= 0 || col("other") < col("cand")))
-        .select(col("cand").as("vec_id")).distinct()
+      val dropped = IngestServing.keepFirstDropped(pairs,
+          docs.filter(col("doc_id") % 5 === 0))
+        .select(col("doc_id").as("vec_id"))
       // LINEAGE CUT at the dedup→ANN boundary: the survivor frame embeds
       // the whole quarantined-dedup logical plan, and every downstream
       // index-build action would re-run Catalyst analysis/optimization
@@ -2856,14 +2846,9 @@ object SparkEntry {
       val pairs = Dedup.incrementalMinHashPairs(dIndex,
         docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"),
         threshold = 0.5)
-      val dropped = pairs
-        .select(explode(array(
-          struct(col("id1").as("a"), col("id2").as("b")),
-          struct(col("id2").as("a"), col("id1").as("b")))).as("p"))
-        .select(col("p.a").as("cand"), col("p.b").as("other"))
-        .filter(col("cand") % 5 === 0 &&
-          (col("other") % 5 =!= 0 || col("other") < col("cand")))
-        .select(col("cand").as("vec_id")).distinct()
+      val dropped = IngestServing.keepFirstDropped(pairs,
+          docs.filter(col("doc_id") % 5 === 0))
+        .select(col("doc_id").as("vec_id"))
       // same lineage cut as the policy gate — the handoff artifact
       val survivors = emb.filter(col("vec_id") % 5 === 0)
         .join(dropped, Seq("vec_id"), "left_anti")
@@ -2901,14 +2886,9 @@ object SparkEntry {
       val pairs = Dedup.incrementalMinHashPairs(dIndex,
         docs.filter(col("doc_id") % 5 === 0), col("doc_id"), col("text"),
         threshold = 0.5)
-      val dropped = pairs
-        .select(explode(array(
-          struct(col("id1").as("a"), col("id2").as("b")),
-          struct(col("id2").as("a"), col("id1").as("b")))).as("p"))
-        .select(col("p.a").as("cand"), col("p.b").as("other"))
-        .filter(col("cand") % 5 === 0 &&
-          (col("other") % 5 =!= 0 || col("other") < col("cand")))
-        .select(col("cand").as("vec_id")).distinct()
+      val dropped = IngestServing.keepFirstDropped(pairs,
+          docs.filter(col("doc_id") % 5 === 0))
+        .select(col("doc_id").as("vec_id"))
       // lineage cut at the dedup→ANN handoff — the policy/nofire twins'
       // pattern (batch-sized checkpoint; rows unchanged): without it every
       // append/serve action re-analyzes the whole incremental-dedup plan
@@ -5446,8 +5426,82 @@ object SparkEntry {
     *    regenerate via FixtureGen and re-commit).
     */
   def oracleSql: Map[String, String] = {
+    def fixtureSql(name: String, orderBy: String): String =
+      s"SELECT * FROM read_parquet('$fixturesDir/$name.parquet') ORDER BY $orderBy"
     def fixture(name: String, orderBy: String): (String, String) =
-      name -> s"SELECT * FROM read_parquet('$fixturesDir/$name.parquet') ORDER BY $orderBy"
+      name -> fixtureSql(name, orderBy)
+    // a committed pair fixture under one id restriction: pairs touching
+    // the batch (id % 5 = 0); those with no removed standing endpoint
+    // (standing = id % 5 <> 0, removed = id % 7 = 0); or both standing
+    def pairs(name: String, score: String, where: String): String =
+      s"""SELECT id1, id2, $score
+        |FROM read_parquet('$fixturesDir/$name.parquet')
+        |WHERE $where
+        |ORDER BY id1, id2""".stripMargin
+    val touching = "id1 % 5 = 0 OR id2 % 5 = 0"
+    val unremoved = "(id1 % 5 = 0 OR id2 % 5 = 0)\n" +
+      "  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)\n" +
+      "  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)"
+    val standing = "id1 % 5 <> 0 AND id2 % 5 <> 0"
+    // each oracle below serves several gates, bound once
+    val minhashTouching = pairs("minhash_lsh_pairs", "jaccard", touching)
+    val minhashRemoved = pairs("minhash_lsh_pairs", "jaccard", unremoved)
+    val minhashStanding = pairs("minhash_lsh_pairs", "jaccard", standing)
+    val embTouching = pairs("embedding_neardups", "cosine", touching)
+    val embRemoved = pairs("embedding_neardups", "cosine", unremoved)
+    val embStanding = pairs("embedding_neardups", "cosine", standing)
+    val phashTouching = pairs("mm_phash_neardups", "hamming", touching)
+    // connected components of the committed minhash pair graph
+    val clustersOracle =
+      s"""WITH RECURSIVE e AS (
+        |  SELECT id1, id2 FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')),
+        |nodes AS (SELECT id1 AS id FROM e UNION SELECT id2 FROM e),
+        |reach AS (
+        |  SELECT id, id AS r FROM nodes
+        |  UNION
+        |  SELECT reach.id, CASE WHEN e.id1 = reach.r THEN e.id2 ELSE e.id1 END AS r
+        |  FROM reach JOIN e ON e.id1 = reach.r OR e.id2 = reach.r)
+        |SELECT id AS doc_id, MIN(r) AS cluster_id, (MIN(r) = id) AS is_canonical
+        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin
+    // exact cosine top-5 per query, recomputed in DuckDB
+    val cosineTopKOracle =
+      """WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
+        |c AS (SELECT vec_id AS c_id, embedding AS cv FROM embeddings),
+        |scored AS (
+        |  SELECT q_id, c_id,
+        |    CASE WHEN list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
+        |           OR list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
+        |      THEN 0.0
+        |      ELSE list_sum(list_transform(list_zip(qv, cv),
+        |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
+        |           / (SQRT(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+        |              * SQRT(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
+        |      END AS cos
+        |  FROM c CROSS JOIN q WHERE q_id <> c_id)
+        |SELECT q_id, CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank,
+        |       c_id, ROUND(cos, 6) AS cos
+        |FROM scored
+        |QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) <= 5
+        |ORDER BY q_id, rank""".stripMargin
+    // 4-connected region growing from the centre seed, recomputed
+    val regionGrowOracle =
+      """WITH RECURSIVE img AS (
+        |  SELECT CAST(range AS BIGINT) // 256 AS image_id,
+        |         (CAST(range AS BIGINT) % 256) // 16 AS y,
+        |         CAST(range AS BIGINT) % 16 AS x,
+        |         (((CAST(range AS BIGINT) % 256) // 16) * 4 + (CAST(range AS BIGINT) % 16) * 2) % 256 AS v
+        |  FROM range(512)),
+        |seedv AS (SELECT image_id, v AS seed_v FROM img WHERE y = 8 AND x = 8),
+        |adm AS (
+        |  SELECT i.image_id, i.y, i.x FROM img i JOIN seedv s ON i.image_id = s.image_id
+        |  WHERE abs(i.v / 255.0 - s.seed_v / 255.0) <= 0.08),
+        |grow AS (
+        |  SELECT image_id, CAST(8 AS BIGINT) AS y, CAST(8 AS BIGINT) AS x FROM seedv
+        |  UNION
+        |  SELECT a.image_id, a.y, a.x
+        |  FROM adm a JOIN grow g ON a.image_id = g.image_id
+        |   AND abs(a.y - g.y) + abs(a.x - g.x) = 1)
+        |SELECT image_id, y, x FROM grow ORDER BY image_id, y, x""".stripMargin
     Map(
     fixture("m3_pipeline_stats", "file_name"),
     fixture("d11_butterworth", "image_id"),
@@ -5459,24 +5513,15 @@ object SparkEntry {
     // integer hash thresholds, exact Hamming verify)
     fixture("mm_phash_neardups", "id1, id2"),
     // image-tier quarantine is exact at every bound — same fixture
-    "mm_phash_quarantine" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/mm_phash_neardups.parquet') ORDER BY id1, id2",
+    "mm_phash_quarantine" -> fixtureSql("mm_phash_neardups", "id1, id2"),
     // standing-catalog incremental ≡ full run restricted to
     // batch-touching pairs (per-media hash rows — the
     // minhash_incremental restriction logic on the image tier)
-    "phash_incremental" ->
-      s"""SELECT id1, id2, hamming
-        |FROM read_parquet('$fixturesDir/mm_phash_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "phash_incremental" -> phashTouching,
     // loaded-catalog serving ≡ in-memory serving (exact long hash rows,
     // partition-order-independent joins) — the incremental restriction
     // oracle verbatim
-    "phash_index_roundtrip" ->
-      s"""SELECT id1, id2, hamming
-        |FROM read_parquet('$fixturesDir/mm_phash_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "phash_index_roundtrip" -> phashTouching,
     // frame tier: full run is its own fixture; the incremental gate is
     // the closed-form restriction — frame_id = media_id·64 + frame_idx,
     // so "touches a batch video" is (id DIV 64) % 5 = 0
@@ -5494,29 +5539,15 @@ object SparkEntry {
         |ORDER BY id1, id2""".stripMargin,
     // remove ≡ fresh build over corpus∖removed (per-media hash rows) —
     // batch-touching pairs with NO removed standing endpoint
-    "phash_index_remove" ->
-      s"""SELECT id1, id2, hamming
-        |FROM read_parquet('$fixturesDir/mm_phash_neardups.parquet')
-        |WHERE (id1 % 5 = 0 OR id2 % 5 = 0)
-        |  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)
-        |  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)
-        |ORDER BY id1, id2""".stripMargin,
+    "phash_index_remove" -> pairs("mm_phash_neardups", "hamming", unremoved),
     fixture("m5_dense_kernels", "image_id"),
     fixture("minhash_lsh_pairs", "id1, id2"),
     // incremental ≡ full-run restricted to batch-touching pairs — the
     // oracle IS the committed full-run fixture under that restriction
-    "minhash_incremental" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "minhash_incremental" -> minhashTouching,
     // loaded catalog ≡ built catalog — the roundtrip reuses the
     // incremental restriction oracle verbatim
-    "dedup_index_roundtrip" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_index_roundtrip" -> minhashTouching,
     // health rows from the committed fixture; derived rows at their
     // closed-form sf0.01 values (autoBanding(400, 0.5) = (32, 16); the
     // 175-pair budget excludes exactly the one 3-bucket → bound 2 —
@@ -5531,116 +5562,54 @@ object SparkEntry {
     // policy-rebuilt catalog ≡ fresh-built at the derived 16×2 banding
     // (same staged frame, bit-identical signature/banding expressions) —
     // same restriction oracle verbatim
-    "dedup_rebuild_policy" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_rebuild_policy" -> minhashTouching,
     // quarantined incremental ≡ incremental (lossless fallback; total
     // LSH recall at this corpus) — same restriction oracle
-    "minhash_incremental_quarantined" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "minhash_incremental_quarantined" -> minhashTouching,
     // retention delete: per-doc member rows make remove ≡ fresh build on
     // corpus∖removed, so the served pair set is the committed full-run
     // fixture restricted to batch-touching pairs with NO removed
     // standing endpoint (standing = id % 5 ≠ 0; removed = % 7 = 0)
-    "dedup_index_remove" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE (id1 % 5 = 0 OR id2 % 5 = 0)
-        |  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)
-        |  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_index_remove" -> minhashRemoved,
     // compaction repartitions content-identical frames and pair sets are
     // partition-independent — remove→compact reuses the remove oracle
-    "dedup_index_compact" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE (id1 % 5 = 0 OR id2 % 5 = 0)
-        |  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)
-        |  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_index_compact" -> minhashRemoved,
     // policy-fired compaction: base+appends ≡ one build over % 5 ≠ 0
     // (per-doc member rows) and pair sets are partition-independent, so
     // the policy gate reuses the incremental restriction oracle
-    "dedup_compact_policy" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_compact_policy" -> minhashTouching,
     fixture("simhash_pairs", "id1, id2"),
     // hot-band quarantine is EXACT at every bound (the collapse fallback
     // re-finds every withheld band-sharing pair at the same Hamming), so
     // both quarantine gates reuse the committed full-run fixture verbatim
-    "simhash_quarantine" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/simhash_pairs.parquet') ORDER BY id1, id2",
-    "simhash_quarantine_budget" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/simhash_pairs.parquet') ORDER BY id1, id2",
+    "simhash_quarantine" -> fixtureSql("simhash_pairs", "id1, id2"),
+    "simhash_quarantine_budget" -> fixtureSql("simhash_pairs", "id1, id2"),
     fixture("embedding_neardups", "id1, id2"),
     // per-vector bucket rows: incremental ≡ full run restricted to
     // batch-touching pairs (the minhash_incremental logic, semantic tier)
-    "embdedup_incremental" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_incremental" -> embTouching,
     // remove ≡ fresh build on corpus∖removed ⇒ drop pairs with a removed
     // standing endpoint (standing = id % 5 ≠ 0; removed = % 7 = 0)
-    "embdedup_index_remove" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE (id1 % 5 = 0 OR id2 % 5 = 0)
-        |  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)
-        |  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_index_remove" -> embRemoved,
     // compaction repartitions a content-identical frame — reuse verbatim
-    "embdedup_index_compact" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE (id1 % 5 = 0 OR id2 % 5 = 0)
-        |  AND NOT (id1 % 5 <> 0 AND id1 % 7 = 0)
-        |  AND NOT (id2 % 5 <> 0 AND id2 % 7 = 0)
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_index_compact" -> embRemoved,
     // loaded catalog ≡ built catalog (storage-exact doubles/longs) — the
     // roundtrip reuses the incremental restriction oracle verbatim
-    "embdedup_index_roundtrip" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_index_roundtrip" -> embTouching,
     // policy-rebuilt catalog ≡ fresh-built at the derived 4 planes
     // (autoPlanes(400) = 4 — the fixture's own bucketing) — same
     // restriction oracle verbatim
-    "embdedup_rebuild_policy" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_rebuild_policy" -> embTouching,
     // policy-fired compaction: base+appends ≡ one build (per-vector
     // rows) and pair sets are partition-independent — same oracle
-    "embdedup_compact_policy" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 = 0 OR id2 % 5 = 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_compact_policy" -> embTouching,
     // quarantine re-routes hot buckets through the LOSSLESS cell join,
     // so the pair set ≡ the unquarantined catalog run — the committed
     // full-run fixture under the both-endpoints-standing restriction
-    "embdedup_quarantine" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 <> 0 AND id2 % 5 <> 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_quarantine" -> embStanding,
     // the budget-derived bound re-routes MORE buckets, never different
     // pairs (lossless) — same restriction oracle
-    "embdedup_quarantine_budget" ->
-      s"""SELECT id1, id2, cosine
-        |FROM read_parquet('$fixturesDir/embedding_neardups.parquet')
-        |WHERE id1 % 5 <> 0 AND id2 % 5 <> 0
-        |ORDER BY id1, id2""".stripMargin,
+    "embdedup_quarantine_budget" -> embStanding,
     // the one ANN oracle DuckDB computes ITSELF (list_cosine_similarity
     // over the same parquet — no fixture): measured sf0.01 margins are
     // 1.3e-4 to the threshold and 2e-8 to the nearest 6-dp rounding
@@ -5698,18 +5667,15 @@ object SparkEntry {
     // is the build's own post-training pipeline against the same frozen
     // quantizers), so the update path's oracle IS the committed
     // full-build fixture
-    "ann_index_update" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/ann_ivfpq_topk.parquet') ORDER BY q_id, rank",
+    "ann_index_update" -> fixtureSql("ann_ivfpq_topk", "q_id, rank"),
     // compaction repartitions content-identical frames and serving is
     // partition-independent, so append→compact serves the committed
     // append fixture exactly
-    "ann_index_compact" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/ann_index_append.parquet') ORDER BY q_id, rank",
+    "ann_index_compact" -> fixtureSql("ann_index_append", "q_id, rank"),
     // policy-fired compaction: four sub-appends are content-identical to
     // the single append (per-vector assignment/coding) and serving is
     // partition-independent, so the policy gate reuses the append fixture
-    "ann_compact_policy" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/ann_index_append.parquet') ORDER BY q_id, rank",
+    "ann_compact_policy" -> fixtureSql("ann_index_append", "q_id, rank"),
     fixture("retention_pipeline", "q_id, rank"),
     // four-family retention: the dedup/emb/phash legs are CLOSED-FORM
     // restrictions of their committed full-run fixtures (remove ≡ fresh
@@ -5764,29 +5730,19 @@ object SparkEntry {
     fixture("ann_warm_rebuild", "q_id, rank"),
     // rebuilt-serving ≡ fresh-auto-built serving — the rebuild policy's
     // oracle IS the committed auto-geometry fixture
-    "ann_rebuild_policy" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/ann_auto_geometry.parquet') ORDER BY q_id, rank",
+    "ann_rebuild_policy" -> fixtureSql("ann_auto_geometry", "q_id, rank"),
     // quarantine re-routes hot-bucket pairs to a LOSSLESS verifier, so the
     // pair set ≡ the unquarantined run on the index's 80% corpus — the
     // committed full-run fixture under the both-endpoints-standing
     // restriction
-    "dedup_quarantine" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 <> 0 AND id2 % 5 <> 0
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_quarantine" -> minhashStanding,
     // the budget form relocates pair-finding work (LSH join vs lossless
     // prefix fallback) but never changes the found pair set — same
     // restriction oracle
-    "dedup_quarantine_budget" ->
-      s"""SELECT id1, id2, jaccard
-        |FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')
-        |WHERE id1 % 5 <> 0 AND id2 % 5 <> 0
-        |ORDER BY id1, id2""".stripMargin,
+    "dedup_quarantine_budget" -> minhashStanding,
     // the auto-derived banding resolves to the committed 16×2 at gate
     // scale, so the committed full-run fixture IS the equivalence oracle
-    "dedup_auto_banding" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet') ORDER BY id1, id2",
+    "dedup_auto_banding" -> fixtureSql("minhash_lsh_pairs", "id1, id2"),
 
     "ann_filtered_exact" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
@@ -5809,8 +5765,7 @@ object SparkEntry {
         |ORDER BY q_id, rank""".stripMargin,
     // save→load must not change the served ranking: the roundtrip gate's
     // oracle IS the built-index fixture
-    "ann_index_roundtrip" ->
-      s"SELECT * FROM read_parquet('$fixturesDir/ann_ivfpq_topk.parquet') ORDER BY q_id, rank",
+    "ann_index_roundtrip" -> fixtureSql("ann_ivfpq_topk", "q_id, rank"),
 
     // filtered recall: the committed filtered-indexed ranking scored
     // against the filtered-exact ranking recomputed from first principles
@@ -5931,17 +5886,7 @@ object SparkEntry {
         |    WHERE metric IN ('imbalance_permille', 'adc_err_micro_avg', 'adc_err_micro_max'))
         |ORDER BY method, metric""".stripMargin,
 
-    "neardup_clusters" ->
-      s"""WITH RECURSIVE e AS (
-        |  SELECT id1, id2 FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')),
-        |nodes AS (SELECT id1 AS id FROM e UNION SELECT id2 FROM e),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.id, CASE WHEN e.id1 = reach.r THEN e.id2 ELSE e.id1 END AS r
-        |  FROM reach JOIN e ON e.id1 = reach.r OR e.id2 = reach.r)
-        |SELECT id AS doc_id, MIN(r) AS cluster_id, (MIN(r) = id) AS is_canonical
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
+    "neardup_clusters" -> clustersOracle,
 
     "source_dup_matrix" ->
       s"""WITH p AS (
@@ -5956,17 +5901,7 @@ object SparkEntry {
         |FROM j GROUP BY source_a, source_b
         |ORDER BY source_a, source_b""".stripMargin,
 
-    "neardup_clusters_star" ->
-      s"""WITH RECURSIVE e AS (
-        |  SELECT id1, id2 FROM read_parquet('$fixturesDir/minhash_lsh_pairs.parquet')),
-        |nodes AS (SELECT id1 AS id FROM e UNION SELECT id2 FROM e),
-        |reach AS (
-        |  SELECT id, id AS r FROM nodes
-        |  UNION
-        |  SELECT reach.id, CASE WHEN e.id1 = reach.r THEN e.id2 ELSE e.id1 END AS r
-        |  FROM reach JOIN e ON e.id1 = reach.r OR e.id2 = reach.r)
-        |SELECT id AS doc_id, MIN(r) AS cluster_id, (MIN(r) = id) AS is_canonical
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
+    "neardup_clusters_star" -> clustersOracle,
 
     "b1b2_sink_roundtrip" ->
       """WITH ids AS (SELECT CAST(range AS BIGINT) AS i FROM range(50) WHERE range <> 37),
@@ -6510,25 +6445,7 @@ object SparkEntry {
         |       ELSE 'pt' END AS lang_pred
         |FROM s ORDER BY doc_id""".stripMargin,
 
-    "ann_cosine_topk" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
-        |c AS (SELECT vec_id AS c_id, embedding AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT q_id, c_id,
-        |    CASE WHEN list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
-        |           OR list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
-        |      THEN 0.0
-        |      ELSE list_sum(list_transform(list_zip(qv, cv),
-        |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |           / (SQRT(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |              * SQRT(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-        |      END AS cos
-        |  FROM c CROSS JOIN q WHERE q_id <> c_id)
-        |SELECT q_id, CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank,
-        |       c_id, ROUND(cos, 6) AS cos
-        |FROM scored
-        |QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) <= 5
-        |ORDER BY q_id, rank""".stripMargin,
+    "ann_cosine_topk" -> cosineTopKOracle,
 
     "ann_recall_report" ->
       s"""WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
@@ -6661,25 +6578,7 @@ object SparkEntry {
 
     // identical independent oracle: the plan-node ranking must reproduce
     // the window-rank semantics exactly (incl. cos-desc / id-asc ties)
-    "ann_cosine_topk_native" ->
-      """WITH q AS (SELECT vec_id AS q_id, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
-        |c AS (SELECT vec_id AS c_id, embedding AS cv FROM embeddings),
-        |scored AS (
-        |  SELECT q_id, c_id,
-        |    CASE WHEN list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
-        |           OR list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) = 0
-        |      THEN 0.0
-        |      ELSE list_sum(list_transform(list_zip(qv, cv),
-        |             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |           / (SQRT(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |              * SQRT(list_sum(list_transform(cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))
-        |      END AS cos
-        |  FROM c CROSS JOIN q WHERE q_id <> c_id)
-        |SELECT q_id, CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS BIGINT) AS rank,
-        |       c_id, ROUND(cos, 6) AS cos
-        |FROM scored
-        |QUALIFY ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) <= 5
-        |ORDER BY q_id, rank""".stripMargin,
+    "ann_cosine_topk_native" -> cosineTopKOracle,
 
     "s1_running_anomalies" ->
       """WITH w AS (
@@ -6974,43 +6873,9 @@ object SparkEntry {
         |FROM (SELECT CAST(range AS BIGINT) AS i FROM range(200))
         |ORDER BY file_name""".stripMargin,
 
-    "g1_region_grow" ->
-      """WITH RECURSIVE img AS (
-        |  SELECT CAST(range AS BIGINT) // 256 AS image_id,
-        |         (CAST(range AS BIGINT) % 256) // 16 AS y,
-        |         CAST(range AS BIGINT) % 16 AS x,
-        |         (((CAST(range AS BIGINT) % 256) // 16) * 4 + (CAST(range AS BIGINT) % 16) * 2) % 256 AS v
-        |  FROM range(512)),
-        |seedv AS (SELECT image_id, v AS seed_v FROM img WHERE y = 8 AND x = 8),
-        |adm AS (
-        |  SELECT i.image_id, i.y, i.x FROM img i JOIN seedv s ON i.image_id = s.image_id
-        |  WHERE abs(i.v / 255.0 - s.seed_v / 255.0) <= 0.08),
-        |grow AS (
-        |  SELECT image_id, CAST(8 AS BIGINT) AS y, CAST(8 AS BIGINT) AS x FROM seedv
-        |  UNION
-        |  SELECT a.image_id, a.y, a.x
-        |  FROM adm a JOIN grow g ON a.image_id = g.image_id
-        |   AND abs(a.y - g.y) + abs(a.x - g.x) = 1)
-        |SELECT image_id, y, x FROM grow ORDER BY image_id, y, x""".stripMargin,
+    "g1_region_grow" -> regionGrowOracle,
 
-    "g1_region_grow_exact" ->
-      """WITH RECURSIVE img AS (
-        |  SELECT CAST(range AS BIGINT) // 256 AS image_id,
-        |         (CAST(range AS BIGINT) % 256) // 16 AS y,
-        |         CAST(range AS BIGINT) % 16 AS x,
-        |         (((CAST(range AS BIGINT) % 256) // 16) * 4 + (CAST(range AS BIGINT) % 16) * 2) % 256 AS v
-        |  FROM range(512)),
-        |seedv AS (SELECT image_id, v AS seed_v FROM img WHERE y = 8 AND x = 8),
-        |adm AS (
-        |  SELECT i.image_id, i.y, i.x FROM img i JOIN seedv s ON i.image_id = s.image_id
-        |  WHERE abs(i.v / 255.0 - s.seed_v / 255.0) <= 0.08),
-        |grow AS (
-        |  SELECT image_id, CAST(8 AS BIGINT) AS y, CAST(8 AS BIGINT) AS x FROM seedv
-        |  UNION
-        |  SELECT a.image_id, a.y, a.x
-        |  FROM adm a JOIN grow g ON a.image_id = g.image_id
-        |   AND abs(a.y - g.y) + abs(a.x - g.x) = 1)
-        |SELECT image_id, y, x FROM grow ORDER BY image_id, y, x""".stripMargin,
+    "g1_region_grow_exact" -> regionGrowOracle,
 
     "g2_frontier_adaptive" ->
       """SELECT * FROM (

@@ -1491,7 +1491,7 @@ object Dedup {
     * Θ(N²/2^p) — plain quadratic per decade; measured exp 0.98 at ×100
     * with p=4, the r11 suite's worst). One thin count, then the standard
     * pipeline at [[autoPlanes]]'s occupancy-held geometry: expected
-    * bucket rows stay ≤ targetBucket, so verify work is Θ(N·target) —
+    * bucket rows stay ≤ 32, so verify work is Θ(32·N) —
     * linear per decade, the same derive-don't-pin rule as
     * [[autoBanding]] and [[Similarity.autoGeometry]].
     *
@@ -1509,9 +1509,9 @@ object Dedup {
     * quarantine tier ([[embeddingNearDupsQuarantined]]), which bounds the
     * quadratic cell instead of thinning candidates. */
   def embeddingNearDupsAuto(emb: DataFrame, id: Column, vec: Column,
-      threshold: Double = 0.95, targetBucket: Long = 32L): DataFrame = {
+      threshold: Double = 0.95): DataFrame = {
     val n = emb.filter(vec.isNotNull).count()
-    embeddingNearDups(emb, id, vec, autoPlanes(n, targetBucket), threshold)
+    embeddingNearDups(emb, id, vec, autoPlanes(n), threshold)
   }
 
   /** STANDING EMBEDDING CATALOG — the semantic-dedup mirror of
@@ -1695,12 +1695,15 @@ object Dedup {
     * corpus grows drifts toward ever-hotter buckets (expected bucket
     * size n/2^p, candidate mass Σ n_b²/2 growing quadratically in the
     * drift). Derivation: the smallest p with `targetBucket`·2^p ≥ n —
-    * expected bucket occupancy stays ≤ targetBucket. Pure integer
+    * expected bucket occupancy stays ≤ targetBucket. The target is a
+    * constant 32 rows: a constant keeps in-bucket verify linear per
+    * decade, and 32 resolves the gate-scale corpora (400–500 vectors) to
+    * the committed 4-plane fixture geometry. Pure integer
     * arithmetic (no float log whose 2^k boundary cases round wrong).
     * Floor 2 keeps tiny corpora on non-degenerate bucketing; cap 32
     * bounds the bucket long far below its sign bit. */
-  def autoPlanes(corpusCount: Long, targetBucket: Long = 32L): Int = {
-    require(targetBucket >= 1L, "need a positive target bucket size")
+  def autoPlanes(corpusCount: Long): Int = {
+    val targetBucket = 32L
     var p = 2
     while (p < 32 && (targetBucket << p) < corpusCount) p += 1
     p
@@ -1718,11 +1721,10 @@ object Dedup {
     * serving at the derived planes exactly (the `embdedup_rebuild_policy`
     * gate's closed-form oracle). Pass-through returns the index object
     * UNCHANGED; a rebuilt catalog is standalone. */
-  def rebuildEmbIndexIfStale(index: EmbIndex,
-      targetBucket: Long = 32L): (EmbIndex, Boolean) = {
+  def rebuildEmbIndexIfStale(index: EmbIndex): (EmbIndex, Boolean) = {
     // rolled-forward counter: the no-fire path costs zero standing jobs
     val n = index.rowCount
-    val p = autoPlanes(n, targetBucket)
+    val p = autoPlanes(n)
     if (p == index.nPlanes) (index, false)
     else graft.GraftCaches.inArtifactScope {
       graft.plans.GraftFunctions.register(index.vecs.sparkSession)

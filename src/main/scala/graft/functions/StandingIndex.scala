@@ -32,8 +32,8 @@ import graft.GraftCaches.GenChain
   *  3. AN APPEND NEVER RELEASES — a delta successor reads every frame of
   *     the superseded generation; its chain releases as one unit at the
   *     next standalone cut.
-  * [[StandingIndex.roll]] is the one place a serving stream changes
-  * generation, and it applies these rules.
+  * [[StandingIndex.roll]] applies these rules; [[StandingIndex.stepAt]]
+  * is the one place a serving stream changes generation.
   *
   * `rows` is the row-keyed first member's count, rolled forward by
   * appends so per-batch policy checks read a field instead of re-scanning
@@ -132,8 +132,9 @@ trait StandingIndex[T <: StandingIndex[T]] { self: T =>
   /** COMPACTION POLICY — detector→actuator over [[compact]]. Two arms:
     *
     *  - WIDTH: the widest member exceeds `maxPartitions` (default
-    *    `widthFactor`× the session shuffle parallelism) — k appended
-    *    batches cost k× the tasks per probe regardless of data size.
+    *    [[StandingIndex.WidthFactor]]× the session shuffle parallelism) —
+    *    k appended batches cost k× the tasks per probe regardless of data
+    *    size.
     *    Target min(natural, bound): landing inside the bound makes the
     *    trigger a fixed point. Planner-side read, job-free while the
     *    member caches are filled (under AQE an emptied cache is re-filled
@@ -147,10 +148,11 @@ trait StandingIndex[T <: StandingIndex[T]] { self: T =>
     * repeated evaluation is idempotent; a no-fire returns this handle
     * unchanged. */
   def compactIfFragmented(maxPartitions: Option[Int] = None,
-      widthFactor: Double = 4.0, minRowsPerPartition: Long = 0L,
+      minRowsPerPartition: Long = 0L,
       durableRoot: Option[String] = None): (T, Boolean) = {
     val natural = session.sessionState.conf.numShufflePartitions
-    val bound = maxPartitions.getOrElse(math.ceil(widthFactor * natural).toInt)
+    val bound = maxPartitions.getOrElse(
+      math.ceil(StandingIndex.WidthFactor * natural).toInt)
     require(bound >= 1, s"compaction width bound must be ≥ 1, got $bound")
     val width = memberFrames.map(_.rdd.getNumPartitions).max
     val cap = math.min(natural, bound)
@@ -238,16 +240,18 @@ object StandingIndex {
       }
   }
 
-  /** Change the generation a serving reference points at — the one roll
-    * of the serving streams, applying the lifecycle contract above:
+  /** The compaction policy's default width bound, as a multiple of the
+    * session's shuffle parallelism. */
+  private[functions] val WidthFactor: Double = 4.0
+
+  /** Change the generation a serving reference points at, applying the
+    * lifecycle contract above:
     *
     *  - a CHAINED successor (an append) is only handed to `set`: it reads
     *    every superseded frame, so nothing releases and no job runs;
     *  - a STANDALONE successor is filled, handed to `set`, and then every
     *    member and chain frame of the `superseded` generations that the
-    *    successor does not itself hold releases.
-    *
-    * Epoch pruning of durable roots stays with the caller. */
+    *    successor does not itself hold releases. */
   def roll[T <: StandingIndex[T]](next: T, superseded: Seq[T])(
       set: T => Unit): Unit =
     if (next.chain.nonEmpty) set(next)
@@ -259,4 +263,76 @@ object StandingIndex {
         .filterNot(f => held.exists(_ eq f))
         .foreach(GraftCaches.release(_))
     }
+
+  /** How a serving stream's [[stepAt]] compacts: the compaction policy's
+    * bounds ([[StandingIndex.compactIfFragmented]]) and, for a stream
+    * that cuts through durable parquet roots, `durable = (dir, batchId)`
+    * — family `f` cuts under `dir/f/b<batchId>`. Without it a cut is a
+    * tracked localCheckpoint. */
+  final case class Compaction(maxPartitions: Option[Int] = None,
+      minRowsPerPartition: Long = 0L, durable: Option[(String, Long)] = None)
+
+  /** [[stepAt]] for a family that serves no operating point: `policy`
+    * re-derives the generation (re-band, re-bucket) and says whether it
+    * fired; a family without one passes [[unchanged]]. */
+  def step[T <: StandingIndex[T]](family: String, superseded: T,
+      successor: T, compaction: Compaction)(policy: T => (T, Boolean))(
+      set: T => Unit): Unit =
+    stepAt[T, Unit](family, superseded, successor, compaction) { ix =>
+      val (next, fired) = policy(ix)
+      (next, (), fired)
+    } { case (ix, _) => set(ix) }
+
+  /** The policy of a family that has none (phash). */
+  def unchanged[T](ix: T): (T, Boolean) = (ix, false)
+
+  /** The per-batch MAINTENANCE STEP of every serving stream, for one
+    * family — the one place a stream decides and rolls a generation:
+    *
+    *  1. run the family's `policy` on the grown or shrunk `successor`; it
+    *     returns the generation to serve, the operating point to serve it
+    *     at (the IVF-PQ index's nProbe) and whether it fired;
+    *  2. only when it did not fire, run the compaction policy;
+    *  3. [[roll]] the result in through `set`, superseding `superseded`
+    *     and `successor`;
+    *  4. after a DURABLE compaction cut, prune the family's older cut
+    *     roots and the older `b<id>` epochs of `epochDirs` (lineage roots
+    *     the family's deltas read): the cut is parquet-rooted, so nothing
+    *     live reaches them any more. A policy cut keeps lineage through
+    *     the pre-cut chain (recompute may re-read them), so it leaves
+    *     pruning to the next compaction cut. */
+  def stepAt[T <: StandingIndex[T], P](family: String, superseded: T,
+      successor: T, compaction: Compaction, epochDirs: Seq[String] = Nil)(
+      policy: T => (T, P, Boolean))(set: ((T, P)) => Unit): Unit = {
+    val (derived, point, fired) = policy(successor)
+    val root = compaction.durable.map { case (dir, b) => s"$dir/$family/b$b" }
+    val (next, compacted) =
+      if (fired) (derived, false)
+      else successor.compactIfFragmented(compaction.maxPartitions,
+        compaction.minRowsPerPartition, root)
+    roll(next, Seq(superseded, successor))(ix => set((ix, point)))
+    if (compacted) compaction.durable.foreach { case (dir, b) =>
+      (s"$dir/$family" +: epochDirs)
+        .foreach(pruneEpochs(successor.memberFrames.head.sparkSession, _, b))
+    }
+  }
+
+  /** Delete epoch-keyed sub-directories `b<id>` of `dir` with id strictly
+    * below `cutBatchId` — the storage-reclaim half of a durable
+    * compaction cut (without it, survivor epochs accumulated one
+    * batch-sized parquet per micro-batch for the life of the stream).
+    * Restarted checkpoint-less streams renumber batches from 0 — their
+    * stale higher-numbered dirs are left alone (overwrite-idempotent)
+    * and fall to the first cut that passes them. */
+  private def pruneEpochs(spark: SparkSession, dir: String,
+      cutBatchId: Long): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.listStatus(p).foreach { st =>
+      val name = st.getPath.getName
+      if (name.startsWith("b") && name.length > 1 &&
+          name.drop(1).forall(_.isDigit) && name.drop(1).toLong < cutBatchId)
+        fs.delete(st.getPath, true)
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
@@ -34,82 +34,39 @@ object AnnServing {
     StructField("embedding", ArrayType(FloatType))))
 
   /** Serve a file-source stream of query vectors under `queryDir` against
-    * `index`, appending `(q_id, rank, c_id, cos)` parquet to `outDir`.
-    * `maxFilesPerTrigger = 1` makes each staged file its own micro-batch
-    * (the spec uses this to prove multi-batch composition). Pass
+    * `index` at `nProbe`, appending `(q_id, rank, c_id, cos)` parquet to
+    * `outDir`, one staged file per micro-batch
+    * ([[startServingStreamOp]] over a fixed operating point). Pass
     * `querySchema` when the staged files use a different embedding layout
     * (e.g. `array<double>`) — a schema mismatch on a file source reads
     * nulls, not an error. */
   def startServingStream(spark: SparkSession, queryDir: String,
       index: Similarity.IvfPqIndex, k: Int, nProbe: Int, outDir: String,
-      maxFilesPerTrigger: Int = 1,
-      querySchema: StructType = defaultQuerySchema): StreamingQuery = {
-    val ref = new AtomicReference(index)
-    startServingStreamRef(spark, queryDir, ref, k, nProbe, outDir,
-      maxFilesPerTrigger, querySchema)
-  }
-
-  /** GENERATION-ROLLOVER form: the served index is read from `indexRef`
-    * at the START of each micro-batch, so an operator thread can roll
-    * generations WITHOUT stopping the stream — the daily-append serving
-    * pattern:
-    *
-    *   1. `g2 = `[[Similarity.ivfPqIndexAppend]]`(g1, batch)` — a delta
-    *      generation whose members are lazy unions over g1's caches
-    *      (quantizer frames shared: append never retrains);
-    *   2. `StandingIndex.roll(g2, Seq(g1))(indexRef.set)` — a delta
-    *      successor is only set (it reads g1's caches); a standalone one
-    *      (compaction, rebuild, remove) is filled, set, and the
-    *      superseded chain releases.
-    *
-    * A batch already executing against the previous generation still
-    * computes correctly (unpersist does not invalidate the plan, it
-    * only drops cached blocks). StreamingSpec pins post-roll batches ≡
-    * batch serving on the grown index, and the cut leaving the
-    * standalone successor serving unchanged.
-    */
-  def startServingStreamRef(spark: SparkSession, queryDir: String,
-      indexRef: AtomicReference[Similarity.IvfPqIndex], k: Int, nProbe: Int,
-      outDir: String, maxFilesPerTrigger: Int = 1,
       querySchema: StructType = defaultQuerySchema): StreamingQuery =
-    spark.readStream
-      .schema(querySchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(queryDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Similarity.ivfPqTopKIndexed(batch, indexRef.get(), k, nProbe)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    startServingStreamOp(spark, queryDir, new AtomicReference((index, nProbe)),
+      k, outDir, querySchema)
 
-  /** REGEOMETRY-ROLLOVER form: the served index AND its operating point
-    * (nProbe) swap together, read atomically at the start of each
-    * micro-batch. This is the serving side of the REBUILD POLICY
-    * ([[Similarity.ivfPqRebuildIfStale]]): unlike an append roll — where
-    * quantizers are frozen and the old nProbe stays right — a rebuild
-    * changes the inverted-list GEOMETRY, so the probe depth must roll
-    * with the index (serving a 16×-finer index at the old nProbe would
-    * silently probe 16× less of the corpus). An operator thread runs the
-    * policy, sets `(rebuiltIndex, newNProbe)`, and releases the
-    * superseded generation's data tier; StreamingSpec pins post-roll
-    * batches ≡ batch serving on the rebuilt index at its derived
+  /** GENERATION-ROLLOVER form: the served index AND its operating point
+    * (nProbe) are read atomically from `opRef` at the START of each
+    * micro-batch, so an operator thread rolls generations WITHOUT
+    * stopping the stream. An append roll (a delta generation over the
+    * previous one's caches, quantizers frozen) keeps the nProbe; a
+    * REBUILD ([[Similarity.ivfPqRebuildIfStale]]) changes the
+    * inverted-list GEOMETRY, so the probe depth must roll with the index
+    * (serving a 16×-finer index at the old nProbe would silently probe
+    * 16× less of the corpus). The composed streams roll `opRef` through
+    * [[graft.functions.StandingIndex.stepAt]]. A batch already executing
+    * against the previous generation still computes correctly (unpersist
+    * drops cached blocks, not the plan); StreamingSpec pins post-roll
+    * batches ≡ batch serving on the grown, cut and rebuilt index at its
     * operating point. */
   def startServingStreamOp(spark: SparkSession, queryDir: String,
       opRef: AtomicReference[(Similarity.IvfPqIndex, Int)], k: Int,
-      outDir: String, maxFilesPerTrigger: Int = 1,
+      outDir: String,
       querySchema: StructType = defaultQuerySchema): StreamingQuery =
-    spark.readStream
-      .schema(querySchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(queryDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (index, nProbe) = opRef.get()
-        Similarity.ivfPqTopKIndexed(batch, index, k, nProbe)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    ServingStream.start(spark, queryDir, querySchema) { (batch, _) =>
+      val (index, nProbe) = opRef.get()
+      Similarity.ivfPqTopKIndexed(batch, index, k, nProbe)
+        .write.mode("append").parquet(outDir)
+    }
 }

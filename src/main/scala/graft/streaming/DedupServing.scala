@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -18,14 +18,13 @@ import graft.functions.{Dedup, StandingIndex}
   *      within the batch) — [[Dedup.incrementalMinHashPairs]], batch-only
   *      staging + bucket equi-joins, never a corpus recompute;
   *   2. APPENDS itself into the index ([[Dedup.dedupIndexAppend]] — a
-  *      delta generation over the superseded one's caches), lets the
-  *      COMPACTION policy ([[StandingIndex.compactIfFragmented]]) bound
-  *      the union width, and rolls the served reference
-  *      ([[StandingIndex.roll]]) — so batch N+1 dedups against the corpus
-  *      AND batches 1..N. A compaction cut materializes through a durable
-  *      parquet root under [[IngestServing.stateRoot]] of `outDir`. No
-  *      banding policy runs here, so the banding — and with it the pair
-  *      contract below — is the standing index's own.
+  *      delta generation over the superseded one's caches) and rolls it
+  *      in through the maintenance step ([[StandingIndex.stepAt]]), so
+  *      batch N+1 dedups against the corpus AND batches 1..N. Compaction
+  *      cuts go through durable parquet roots under
+  *      [[IngestServing.stateRoot]] of `outDir`. The catalog has no
+  *      policy here, so the banding — and with it the pair contract
+  *      below — is the standing index's own.
   *
   * This is the ingest-time dedup front door of a training-data pipeline:
   * the near-dup decision is made as data ARRIVES, against everything
@@ -45,10 +44,9 @@ object DedupServing {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Start the ingest-dedup stream over parquet batches under `docDir`:
-    * appends `(id1, id2, jaccard)` pairs to `outDir` per micro-batch and
-    * grows the index in `indexRef`. `maxFilesPerTrigger = 1` makes each
-    * staged file its own micro-batch.
+  /** Start the ingest-dedup stream over parquet batches under `docDir`,
+    * one staged file per micro-batch: appends `(id1, id2, jaccard)` pairs
+    * to `outDir` per micro-batch and grows the index in `indexRef`.
     *
     * RESTART / REPLAY: pass `checkpointLocation` so a restarted stream
     * resumes from committed offsets instead of replaying every file in
@@ -64,18 +62,13 @@ object DedupServing {
     * rather than be silently skipped. */
   def startDedupStream(spark: SparkSession, docDir: String,
       indexRef: AtomicReference[Dedup.DedupIndex], threshold: Double,
-      outDir: String, maxFilesPerTrigger: Int = 1,
+      outDir: String,
       docSchema: StructType = defaultDocSchema,
       checkpointLocation: Option[String] = None,
       tolerateReplays: Boolean = false): StreamingQuery = {
     val state = IngestServing.stateRoot(spark, outDir)
-    val writer = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(docDir)
-      .writeStream
-    checkpointLocation.fold(writer)(p => writer.option("checkpointLocation", p))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ServingStream.start(spark, docDir, docSchema, checkpointLocation) {
+      (batch, batchId) =>
         val index = indexRef.get()
         val fresh =
           if (!tolerateReplays) batch
@@ -89,16 +82,12 @@ object DedupServing {
         Dedup.incrementalPairsOfStaged(index, staged, threshold)
           .write.mode("append").parquet(outDir)
         // roll the generation: later batches must dedup against this one
-        val grown = Dedup.dedupIndexAppendStaged(index, staged)
-        val (served, cut) = grown.compactIfFragmented(
-          durableRoot = Some(s"$state/_gen/dedup/b$batchId"))
-        StandingIndex.roll(served, Seq(index, grown))(indexRef.set)
-        // a cut's parquet root supersedes every older one
-        if (cut) IngestServing.pruneEpochs(spark, s"$state/_gen/dedup", batchId)
+        StandingIndex.step("dedup", index,
+          Dedup.dedupIndexAppendStaged(index, staged),
+          StandingIndex.Compaction(durable = Some((s"$state/_gen", batchId))))(
+          StandingIndex.unchanged)(indexRef.set)
         // batch staging was working-tier
         graft.GraftCaches.unpersistAll()
-        ()
-      }
-      .start()
+    }
   }
 }

@@ -233,9 +233,9 @@ class StreamingSpec extends AnyFunSuite {
     val qDir = Files.createTempDirectory("ann_roll_q").toString
     val outDir = Files.createTempDirectory("ann_roll_out").toString + "/res"
     qA.coalesce(1).write.mode("append").parquet(qDir)
-    val ref = new java.util.concurrent.atomic.AtomicReference(g1)
-    val q = graft.streaming.AnnServing.startServingStreamRef(
-      spark, qDir, ref, k = 3, nProbe = 2, outDir)
+    val ref = new java.util.concurrent.atomic.AtomicReference((g1, 2))
+    val q = graft.streaming.AnnServing.startServingStreamOp(
+      spark, qDir, ref, k = 3, outDir)
     try {
       q.processAllAvailable() // batch 1 serves generation 1
       // ROLLOVER while the stream is live: append generation 2 through the
@@ -244,7 +244,7 @@ class StreamingSpec extends AnyFunSuite {
       val g2 = Similarity.ivfPqIndexAppend(g1, emb.filter(col("vec_id") % 5 === 0))
       val truthB = rows(Similarity.ivfPqTopKIndexed(qB, g2, k = 3, nProbe = 2))
       val truthC = rows(Similarity.ivfPqTopKIndexed(qC, g2, k = 3, nProbe = 2))
-      ref.set(g2)
+      ref.set((g2, 2))
       // the superseded generation stays resident: it rides g2's chain
       assert(g1.corpus.storageLevel != StorageLevel.NONE
         && g1.assigned.storageLevel != StorageLevel.NONE
@@ -261,7 +261,7 @@ class StreamingSpec extends AnyFunSuite {
       // the pre-cut chain is unread by any live handle and releases
       val g3 = g2.compact()
       assert(g3.chain.isEmpty, "compaction must cut a standalone generation")
-      ref.set(g3)
+      ref.set((g3, 2))
       g2.release(blocking = true)
       assert(g2.chain.frames.forall(_.storageLevel == StorageLevel.NONE),
         "the released chain must hold no data-tier cache")
@@ -1572,6 +1572,20 @@ class StreamingSpec extends AnyFunSuite {
         s"drain ended with every epoch still on disk: $counts")
       assert(stateDir("_gen/ann").isDirectory,
         "the compaction cut must have materialized a durable parquet root")
+      // each family's cut pruned that family's older roots: every
+      // _gen/<family> holds only its latest cut, and the ANN cut also
+      // reclaimed every survivor epoch older than itself
+      def cutIds(d: java.io.File): Seq[Long] = Option(d.listFiles()).toSeq
+        .flatten.map(_.getName).filter(_.matches("b\\d+")).map(_.drop(1).toLong)
+      val families = stateDir("_gen").listFiles().filter(_.isDirectory).toSeq
+      families.foreach { f =>
+        val ids = cutIds(f)
+        assert(ids.nonEmpty && ids.forall(_ == ids.max),
+          s"_gen/${f.getName} keeps roots older than its latest cut: ${ids.sorted}")
+      }
+      val annCut = cutIds(stateDir("_gen/ann")).max
+      assert(cutIds(stateDir("_survivors")).forall(_ >= annCut),
+        s"survivor epochs older than the ANN cut b$annCut: ${epochs()}")
       // the serving contract survives the cut: union of per-batch pair
       // files equals the full-corpus run restricted to streamed docs
       val full = Dedup.minHashDedupPairs(docs, col("doc_id"), col("text"),
@@ -1777,5 +1791,29 @@ class StreamingSpec extends AnyFunSuite {
       GraftCaches.unpersistAll()
       GraftCaches.releaseArtifacts()
     }
+  }
+
+  test("one maintenance step: no serving stream rolls, compacts or prunes itself; one driver sets maxFilesPerTrigger") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File("src/main/scala/graft/streaming").toPath
+    assert(Files.isDirectory(root), s"source root not found: ${root.toAbsolutePath}")
+    val sources: Seq[(String, String)] = Files.list(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map((f: Path) => f.getFileName.toString -> new String(Files.readAllBytes(f), "UTF-8"))
+    assert(sources.size >= 6)
+    // StandingIndex.stepAt owns the roll, the compaction policy and the
+    // prune of durable roots for every family
+    val offenders = for {
+      (file, text) <- sources
+      name <- Seq("StandingIndex.roll", "compactIfFragmented", "pruneEpochs")
+      if text.contains(name)
+    } yield s"$file: $name"
+    assert(offenders.isEmpty,
+      s"maintenance outside StandingIndex.stepAt: ${offenders.mkString(", ")}")
+    val drivers = sources.collect { case (file, text)
+      if text.contains("maxFilesPerTrigger") => file }
+    assert(drivers == Seq("ServingStream.scala"),
+      s"maxFilesPerTrigger set outside the one driver: ${drivers.mkString(", ")}")
   }
 }
